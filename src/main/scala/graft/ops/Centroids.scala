@@ -166,8 +166,8 @@ object Centroids {
     * the pair count: a 20k-row BATCH assigned against a standing
     * corpus's 473 seeds (the sf8 incremental-admission shape) is the
     * same 9.5M-pair job as a 40k self-seeded corpus, and measured
-    * accordingly. The value is the MEASURED crossover (PruneBench,
-    * 3-run medians where contested, min-of-2 timed, 32 cores): at
+    * accordingly. The value is the MEASURED crossover (SCALE_POINT_r14
+    * §A–B, 3-run medians where contested, min-of-2 timed, 32 cores): at
     * 2.84M pairs (20k×142) the pruned form's multi-stage pipeline
     * reads +27% (1.88 vs 1.48 s — fixed stage overhead), at 8M pairs
     * (40k×200) it reads −18% (1.83 vs 2.23 s), and the gap widens
@@ -948,23 +948,24 @@ object Centroids {
        |FROM vcc v JOIN exact e USING (vec_id) JOIN hier h USING (vec_id)
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** q278_gate_decision — the durable gate store's ACCOUNTING ROW under
-    * the DuckDB hash gate (VERDICT r12 #7): the exact
-    * (n, k, sample_mod, n_sample, n_agree, go) tuple
-    * [[resolveAssignGate]] records to [[GateStore]] when it probes this
-    * corpus, derived from the same one-pass [[probePicks]] frame that
-    * q277 pins per coarse cell. `go` is the FULL [[gateGo]] rule — the
-    * exact integer threshold (agree·10 ≥ tot·9 ∧ tot > 0, the ADVICE
-    * r12 form) AND the r13 two-standard-error conclusiveness guard
+  /** q278_gate_decision — the two-level assignment gate's DECISION
+    * under the DuckDB hash gate: the exact
+    * (n, k, sample_mod, n_sample, n_agree, go) tuple behind the verdict
+    * [[resolveAssignGate]] reaches when it probes this corpus, derived
+    * from the same one-pass [[probePicks]] frame that q277 pins per
+    * coarse cell. `go` is the FULL [[gateGo]] rule — the exact integer
+    * threshold (agree·10 ≥ tot·9 ∧ tot > 0, the ADVICE r12 form) AND
+    * the r13 two-standard-error conclusiveness guard
     * ([[probeConclusive]]) — so the row is engine-independent end to
-    * end: the oracle replays the DECISION, not just its inputs. The fixture sits below [[HierAutoProbeGate]],
-    * so production would not probe it at all — like q277, this query
-    * runs the accounting unconditionally; what the gate would DECIDE on
-    * this corpus is exactly what it reports. Scale: one sample×k
-    * expansion (O(min(n/37, cap)·k·d)), folded to one row. The
-    * cross-session reuse behavior itself is spec-pinned (two sessions,
-    * probe counter) — a side-effecting store has no oracle row, but its
-    * decision arithmetic does. */
+    * end: the oracle replays the DECISION, not just its inputs. The
+    * fixture sits below [[HierAutoProbeGate]], so production would not
+    * probe it at all — like q277, this query runs the accounting
+    * unconditionally; what the gate would DECIDE on this corpus is
+    * exactly what it reports. Scale: one sample×k expansion
+    * (O(min(n/37, cap)·k·d)), folded to one row. The session memo that
+    * serves repeat resolves is spec-pinned by the probe counter
+    * (SimilaritySpec) — a memo has no oracle row, but its decision
+    * arithmetic does. */
   def q278GateDecision(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.embeddings(spark, sfDir)
     val n = e.count()
@@ -1109,37 +1110,58 @@ object Centroids {
     * keyed by the CANONICALIZED input (and seed) plans plus the gate
     * geometry — full structural plan equality, not a hash, so distinct
     * corpora can never collide into each other's decision — plus the
-    * frame's FILE INVENTORY (path:length:mtime; ADVICE r12): plans
-    * compare by relation paths, so a fixture rewritten in place
-    * mid-session with an unchanged row count would otherwise replay
-    * the stale decision. Rationale: the probe is deterministic (mod
-    * sample, exact-BIGINT distances, id tie-breaks), so re-running it
-    * per operator over the same corpus snapshot buys nothing, and its
-    * wall cost is dominated by FIXED stage-scheduling overhead (~1.5 s
-    * warm at any SF) that would otherwise be paid by every family
-    * member in a session. A production pipeline probes each corpus
-    * version once; this memo is that behavior within a session, and
-    * [[GateStore]] extends it ACROSS sessions (VERDICT r12 #7).
-    * Bounded by distinct corpora per session. */
+    * frames' [[fileInventory]] (ADVICE r12): plans compare by relation
+    * paths, so a fixture rewritten in place mid-session with an
+    * unchanged row count would otherwise replay the stale decision.
+    * Rationale: the probe is deterministic (mod sample, exact-BIGINT
+    * distances, id tie-breaks), so re-running it per operator over the
+    * same corpus snapshot buys nothing, and its wall cost is dominated
+    * by FIXED stage-scheduling overhead (~1.5 s warm at any SF) that
+    * would otherwise be paid by every family member in a session. A
+    * production pipeline probes each corpus version once; this memo is
+    * that behavior within a session. Bounded by distinct corpora per
+    * session. */
   private val hierGoMemo = new java.util.concurrent.ConcurrentHashMap[
     (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan],
       Long, Long, String), java.lang.Boolean]()
 
-  /** Test seam: drop memoized gate decisions so a spec can prove the
-    * durable-store read-through serves the second "session" without
-    * re-probing (the memo is object-lifetime = JVM-wide, so the spec
-    * must clear it to expose the store path). */
+  /** Test seam: drop memoized gate decisions (the memo is
+    * object-lifetime = JVM-wide, so a spec that counts probe runs must
+    * start from a known state). */
   private[graft] def clearGateMemoForTest(): Unit = hierGoMemo.clear()
 
   /** Probe executions this JVM — incremented by [[hierGoProbe]] so the
-    * durable-store spec can assert "decision reused WITHOUT probing"
-    * directly rather than by timing. */
+    * memo specs can assert "decision reused WITHOUT probing" directly
+    * rather than by timing. */
   private[graft] val hierProbeRuns =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** The [[GateStore]] row kind for the two-level-assignment gate. */
-  private val HierGateKind = "hier-assign-gate"
+  /** The bytes a frame reads: every input file's
+    * `path:length:mtime`, sorted and `;`-joined — "" for a frame with
+    * no file-backed relation (an in-memory frame's full structural plan
+    * already carries its data). The gate memos key on it beside the
+    * canonicalized plan, which names relations by path only, so a
+    * corpus rewritten in place re-probes instead of replaying a stale
+    * decision. Assumes millisecond mtimes: on a filesystem with coarse
+    * (1 s) granularity a same-length rewrite inside the window is
+    * invisible here. */
+  private[graft] def fileInventory(df: DataFrame): String = {
+    val files = df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        lr.relation match {
+          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            fs.location.inputFiles.toSeq
+          case _ => Seq.empty[String]
+        }
+    }.flatten
+    val conf = df.sparkSession.sessionState.newHadoopConf()
+    files.sorted.map { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      val st = p.getFileSystem(conf).getFileStatus(p)
+      s"$f:${st.getLen}:${st.getModificationTime}"
+    }.mkString(";")
+  }
 
   /** Resolve the SemDeDup-family assignment gate. A caller-forced
     * `assignGate` — any value other than the [[HierAssignGate]]
@@ -1156,20 +1178,12 @@ object Centroids {
     * flat. */
   private[graft] def resolveAssignGate(qv: DataFrame, n: Long, k: Long,
       seeds: Option[DataFrame], assignGate: Long, autoProbeGate: Long,
-      frameLabel: String = "corpus",
-      gateDir: Option[String] = sys.env.get("SPARK_GRAFT_GATE_DIR")): Long = {
+      frameLabel: String = "corpus"): Long = {
     if (assignGate != HierAssignGate) assignGate
     else if (n <= autoProbeGate) HierAssignGate
     else {
-      // durable identity: file-backed frames carry a (plan text, file
-      // inventory) fingerprint; in-memory frames get ("", "") here and
-      // rely on the memo's full structural plan equality alone — and
-      // never touch the durable store (GateStore doc: no durable
-      // identity to key on)
-      val fp = GateStore.fingerprint(qv)
-      val sfp = seeds.flatMap(GateStore.fingerprint)
-      val inv = fp.map(_._2).getOrElse("") +
-        sfp.map("|" + _._2).getOrElse("")
+      val inv = fileInventory(qv) +
+        seeds.map("|" + fileInventory(_)).getOrElse("")
       val key = (qv.queryExecution.analyzed.canonicalized,
         seeds.map(_.queryExecution.analyzed.canonicalized), n, k, inv)
       val cached = hierGoMemo.get(key)
@@ -1178,48 +1192,16 @@ object Centroids {
           s" -> ${if (cached) "two-level" else "flat"} assignment")
         cached
       } else {
-        // read-through: a decision recorded by a PREVIOUS session for
-        // this exact corpus snapshot is reused without probing
-        // (VERDICT r12 #7). Durable only when every input frame is
-        // file-backed (an in-memory seed frame has no durable
-        // identity, so the pair stays session-only).
-        val durableKey: Option[(String, String)] = fp.collect {
-          case (canon, _) if seeds.isEmpty || sfp.isDefined =>
-            (canon, sfp.map(_._1).getOrElse(""))
-        }
-        val stored = (gateDir, durableKey) match {
-          case (Some(dir), Some((canon, seedsCanon))) =>
-            GateStore.lookup(qv.sparkSession, dir, HierGateKind,
-              canon, seedsCanon, inv, n, k, thrNum = 9L, thrDen = 10L)
-          case _ => None
-        }
-        val g = stored match {
-          case Some(d) =>
-            println(s"[semassign-auto] frame=$frameLabel n=$n k=$k: " +
-              s"stored decision (agreement ${d.agree}/${d.tot}) -> " +
-              (if (d.go) "two-level" else "flat") + " assignment")
-            d.go
-          case None =>
-            val (agree, tot) = hierGoProbe(qv, n, k, seeds)
-            // the full pure decision (exact integer threshold — ADVICE
-            // r12 — plus the r13 conclusiveness guard): agree·10 ≥
-            // tot·9 AND the reading sits more than 2 SEs from the gate
-            val dec = gateGo(agree, tot)
-            println(s"[semassign-auto] frame=$frameLabel n=$n k=$k: " +
-              s"probe agreement $agree/$tot vs threshold " +
-              s"$HierAutoAgreeMin (conclusive=" +
-              s"${probeConclusive(agree, tot)}) -> " +
-              (if (dec) "two-level" else "flat") + " assignment")
-            (gateDir, durableKey) match {
-              case (Some(dir), Some((canon, seedsCanon))) =>
-                GateStore.record(qv.sparkSession, dir, GateStore.Decision(
-                  HierGateKind, canon, seedsCanon, inv,
-                  n, k, agree, tot, dec, 9L, 10L,
-                  choice = if (dec) 1L else 0L))
-              case _ => ()
-            }
-            dec
-        }
+        val (agree, tot) = hierGoProbe(qv, n, k, seeds)
+        // the full pure decision (exact integer threshold — ADVICE r12 —
+        // plus the r13 conclusiveness guard): agree·10 ≥ tot·9 AND the
+        // reading sits more than 2 SEs from the gate
+        val g = gateGo(agree, tot)
+        println(s"[semassign-auto] frame=$frameLabel n=$n k=$k: " +
+          s"probe agreement $agree/$tot vs threshold " +
+          s"$HierAutoAgreeMin (conclusive=" +
+          s"${probeConclusive(agree, tot)}) -> " +
+          (if (g) "two-level" else "flat") + " assignment")
         hierGoMemo.put(key, g)
         g
       }
@@ -2332,21 +2314,11 @@ object Centroids {
     * only (the planted-locality spec forces the two-level form;
     * [[SemScaleGate]] is the unrelated persist gate below), and
     * `autoProbeGate` overrides [[HierAutoProbeGate]] so the auto-probe
-    * spec can exercise [[resolveAssignGate]] at fixture size.
-    * `stageProbe` is the attribution seam (VERDICT r12 #2): invoked
-    * with each stage's frame as it is defined, default a no-op with
-    * zero plan impact — [[graft.IncrStageBench]] passes a timing
-    * callback to decompose the operator's wall cost per stage at the
-    * HotBench scale points. Forcing a NON-persisted stage (the compare
-    * aggregates) makes the final assembly recompute it, so the
-    * instrumented TOTAL exceeds the production run — per-stage numbers
-    * are the meaningful output, each measured from its own persisted
-    * inputs. */
+    * spec can exercise [[resolveAssignGate]] at fixture size. */
   private[graft] def incrSemDedup(e: DataFrame,
       cap: Option[Long] = None,
       assignGate: Long = HierAssignGate,
-      autoProbeGate: Long = HierAutoProbeGate,
-      stageProbe: (String, DataFrame) => Unit = (_, _) => ()): DataFrame = {
+      autoProbeGate: Long = HierAutoProbeGate): DataFrame = {
     val isBatch = pmod(col("vec_id"), lit(IncrSemMod)) === 0L
     val standing = e.filter(!isBatch)
     val nSt = standing.count()
@@ -2376,7 +2348,6 @@ object Centroids {
       autoProbeGate, frameLabel = "standing")
     val membersSt = semAssign(stQv, nSt, kcut, gate = gate,
       arrays = Some(standing)).persist()
-    stageProbe("assign_standing", membersSt)
     // batch sized by the standing corpus — it is a fixed fraction of
     // it, so the gate/geometry/spread decisions must match the corpus's
     val membersB = semAssign(qv.filter(isBatch), nSt, kcut,
@@ -2388,7 +2359,6 @@ object Centroids {
       frameN = nSt / (IncrSemMod - 1L) + 1L, frameLabel = "batch",
       arrays = Some(e.filter(isBatch)), seedArrays = Some(standing))
       .persist()
-    stageProbe("assign_batch", membersB)
     val emb = e.select(col("vec_id"), col("embedding"))
     val stSizes = membersSt.groupBy(col("cid")).agg(count(lit(1)).as("cm"))
     val bSizes = membersB.groupBy(col("cid")).agg(count(lit(1)).as("cm"))
@@ -2426,19 +2396,15 @@ object Centroids {
         if (scaleUp) f.persist() else f
       }
       val mSt = joined(membersSt)
-      stageProbe("side_standing", mSt)
       val mB = joined(membersB)
-      stageProbe("side_batch", mB)
       val droppedSt = simPairs(
         mSt.select(col("cid"), col("vec_id").as("v1"),
           col("embedding").as("e1")),
         mSt.select(col("cid"), col("vec_id").as("v2"),
           col("embedding").as("e2")))
         .select(col("v2")).distinct()
-      stageProbe("standing_pairs_drops", droppedSt)
       val keptSt = mSt.join(droppedSt.withColumnRenamed("v2", "vec_id"),
         Seq("vec_id"), "left_anti")
-      stageProbe("kept_index", keptSt)
       val corpus = keptSt.select(col("cid"), col("vec_id").as("s"),
           col("embedding").as("es"))
         .join(mB.select(col("cid"), col("vec_id").as("b"),
@@ -2446,14 +2412,12 @@ object Centroids {
         .filter(round(Similarity.cosine(col("eb"), col("es")), 4)
           >= lit(SemDedupTau))
         .groupBy(col("b")).agg(min(col("s")).as("corpus_rep"))
-      stageProbe("corpus_compare", corpus)
       val batch = simPairs(
         mB.select(col("cid"), col("vec_id").as("v1"),
           col("embedding").as("e1")),
         mB.select(col("cid"), col("vec_id").as("v2"),
           col("embedding").as("e2")))
         .groupBy(col("v2")).agg(min(col("v1")).as("batch_rep"))
-      stageProbe("batch_compare", batch)
       (mB.select(col("vec_id"), col("cid")), corpus, batch)
     } else {
       // ---- capped+salted regime: a mega-cluster exists. All three
@@ -2466,10 +2430,8 @@ object Centroids {
       // hot cluster for materialization to pay at any n.
       val mSt = membersSt.withColumn("crk", row_number().over(win))
         .join(emb, Seq("vec_id")).persist()
-      stageProbe("side_standing", mSt)
       val mB = membersB.withColumn("crk", row_number().over(win))
         .join(emb, Seq("vec_id")).persist()
-      stageProbe("side_batch", mB)
       val droppedSt = cappedClusterJoin(e.sparkSession, stSizes, capVal,
         left = mSt.filter(col("crk") <= capVal)
           .select(col("cid"), col("vec_id").as("v1"),
@@ -2481,7 +2443,6 @@ object Centroids {
         .filter(round(Similarity.cosine(col("e1"), col("e2")), 4)
           >= lit(SemDedupTau))
         .select(col("v2")).distinct()
-      stageProbe("standing_pairs_drops", droppedSt)
       // the standing index: in production a stored table (q261's
       // framing). srk re-ranks the KEPT members per cluster — the cap on
       // the corpus compare admits the srk-lowest kept representatives,
@@ -2493,7 +2454,6 @@ object Centroids {
           Seq("vec_id"), "left_anti")
         .withColumn("srk", row_number().over(win))
         .persist()
-      stageProbe("kept_index", keptSt)
       // corpus compare: the bounded side (≤cap kept reps) replicates
       // when the BATCH cluster is hot, the batch side carries the salt
       val corpus = cappedClusterJoin(e.sparkSession, bSizes, capVal,
@@ -2506,7 +2466,6 @@ object Centroids {
         .filter(round(Similarity.cosine(col("eb"), col("es")), 4)
           >= lit(SemDedupTau))
         .groupBy(col("b")).agg(min(col("s")).as("corpus_rep"))
-      stageProbe("corpus_compare", corpus)
       val batch = cappedClusterJoin(e.sparkSession, bSizes, capVal,
         left = mB.filter(col("crk") <= capVal)
           .select(col("cid"), col("vec_id").as("v1"),
@@ -2518,7 +2477,6 @@ object Centroids {
         .filter(round(Similarity.cosine(col("e1"), col("e2")), 4)
           >= lit(SemDedupTau))
         .groupBy(col("v2")).agg(min(col("v1")).as("batch_rep"))
-      stageProbe("batch_compare", batch)
       (mB.select(col("vec_id"), col("cid")), corpus, batch)
     }
     mBsel

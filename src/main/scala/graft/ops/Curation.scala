@@ -567,7 +567,11 @@ object Curation {
     *  - per-doc log-weight sums use the q148 device: each term cast to
     *    DECIMAL(18,6) before summing, so the aggregate is exact and
     *    partition-order-independent; log₂ agreement at 6-dp truncation
-    *    between Spark and DuckDB is production-proven by q148.
+    *    between Spark and DuckDB is production-proven by q148. The
+    *    normalizer tail n_grams·(log₂(tr+B) − log₂(tt+B)) takes the same
+    *    cast and is added in decimal, so `logw` is ONE decimal→double
+    *    conversion: added as a raw double, the two engines' log₂ differed
+    *    by 1 ulp in the tail at sf0.001.
     *  - top-K is orderBy+limit → TakeOrderedAndProject (k rows through
     *    the driver, the q33 pattern) — never a global sort of the
     *    corpus. */
@@ -598,9 +602,9 @@ object Curation {
           .cast("decimal(18,6)")).as("lw_dec"))
       .crossJoin(broadcast(tot)) // 1-row totals
       .select(col("doc_id"), col("n_grams"),
-        (col("lw_dec").cast("double") + col("n_grams").cast("double") *
+        (col("lw_dec") + (col("n_grams").cast("double") *
           (log2(col("tr") + DsirBuckets) - log2(col("tt") + DsirBuckets)))
-          .as("logw"))
+          .cast("decimal(18,6)")).cast("double").as("logw"))
       .orderBy(desc("logw"), col("doc_id"))
       .limit(DsirK)
   }
@@ -633,8 +637,9 @@ object Curation {
        |  WHERE b.doc_id % $BenchMod <> $BenchRem
        |  GROUP BY 1)
        |SELECT doc_id, n_grams,
-       |       CAST(lw_dec AS DOUBLE) + CAST(n_grams AS DOUBLE) *
-       |         (log2(tr + $DsirBuckets) - log2(tt + $DsirBuckets)) AS logw
+       |       CAST(lw_dec + CAST(CAST(n_grams AS DOUBLE) *
+       |         (log2(tr + $DsirBuckets) - log2(tt + $DsirBuckets))
+       |         AS DECIMAL(18,6)) AS DOUBLE) AS logw
        |FROM perdoc, tot
        |ORDER BY logw DESC, doc_id LIMIT $DsirK""".stripMargin
   }

@@ -194,13 +194,6 @@ object Graph {
   /** Default for [[TriangleBroadcastMaxEdgesKey]]: 8M oriented edges. */
   val TriangleBroadcastMaxEdgesDefault = 8000000L
 
-  /** Oriented edges per partition of the wedge-closing SHUFFLE_HASH
-    * join — [[Scale.HashBuildRowsPerTask]]; see
-    * [[Scale.hashBuildParallelism]] for why a hash-build join must scale
-    * its parallelism with the data (hit in anger here: the 24M-edge sf2
-    * point OOMed under local[32]'s pool at the fixed session count). */
-  val TriangleClosingEdgesPerPartition = Scale.HashBuildRowsPerTask
-
   /** Per-node triangle counts of the undirected simple graph `e`
     * (columns `pa` < `pb`, deduplicated). Returns (node, degree, n_tri)
     * for every edge-touched node, MATERIALIZED (see the tail note in

@@ -435,7 +435,7 @@ object Similarity {
     * the scaled-k dial resolve was the last heavy un-pruned kernel:
     * one corpus×k cosine assignment, O(n^1.5·d), 69.6 s at 320k). The
     * [[graft.ops.Centroids.PrunedAssignPairGate]] discipline: gate on
-    * the WORK unit (pairs), measured crossover (IvfPruneBench,
+    * the WORK unit (pairs), measured crossover (SCALE_POINT_r15 §A,
     * same-session min-of-2, organic corpora — the no-locality worst
     * case for the bound): flat 2.12 s vs pruned 1.86 s at 2.84M pairs
     * (sf1, k = 142), flat 16.49 vs 2.57 at 22.6M (sf4, k = 283,
@@ -821,41 +821,19 @@ object Similarity {
     * plus |queries|-bounded list joins and a 5-query brute-force ground
     * truth (O(n·d) per query, linear) — memoized per corpus snapshot
     * exactly like the assignment gate, so a session (and a pipeline
-    * run) pays it once, not once per retrieval; with `gateDir` set the
-    * picked dial point also persists ACROSS sessions via [[GateStore]]
-    * (kind `ivf-nprobe`, the resolveAssignGate read-through shape —
-    * exact plan-text + file-inventory key, spec-pinned in
-    * GateStoreSpec). */
+    * run) pays it once, not once per retrieval. */
   private[graft] def resolveNprobe(e: DataFrame, n: Long,
       autoProbeGate: Long = IvfAutoProbeGate,
-      gateDir: Option[String] = sys.env.get("SPARK_GRAFT_GATE_DIR"),
       k: Long = 8L): Long = {
     if (n <= autoProbeGate) IvfDefaultNprobe
     else {
-      val fp = GateStore.fingerprint(e)
-      val inv = fp.map(_._2).getOrElse("")
-      val key = (e.queryExecution.analyzed.canonicalized, n, k, inv)
+      val key = (e.queryExecution.analyzed.canonicalized, n, k,
+        Centroids.fileInventory(e))
       val cached = nprobeMemo.get(key)
       if (cached != null) {
         println(s"[ivf-auto] n=$n: memoized -> nprobe=$cached")
         cached
       } else {
-        // durable read-through, the resolveAssignGate shape: a dial
-        // point picked by a PREVIOUS session for this exact corpus
-        // snapshot is reused without re-running the probe sweep
-        val stored = (gateDir, fp) match {
-          case (Some(dir), Some((canon, files))) =>
-            GateStore.lookup(e.sparkSession, dir, "ivf-nprobe",
-              canon, "", files, n, k,
-              thrNum = IvfTargetRecallNum, thrDen = IvfTargetRecallDen)
-          case _ => None
-        }
-        stored.map { d =>
-          println(s"[ivf-auto] n=$n: stored decision " +
-            s"(recall ${d.agree}/${d.tot}) -> nprobe=${d.choice}")
-          nprobeMemo.put(key, d.choice)
-          d.choice
-        }.getOrElse {
         nprobeRuns.incrementAndGet()
         // per dial point: total sampled hits vs total possible (5 per
         // probe query with a full dial guaranteed to reach recall 1.0).
@@ -891,21 +869,8 @@ object Similarity {
           dial.map { case (p, h, t) => s"$p->$h/$t" }.mkString(", ") +
           s" vs target $IvfTargetRecallNum/$IvfTargetRecallDen -> " +
           s"nprobe=$pick")
-        // an empty dial is never recorded durably: the endpoint pick
-        // carries zero recall evidence, and a later session (or a
-        // fixed query slice) should re-measure rather than replay it
-        (gateDir, fp) match {
-          case (Some(dir), Some((canon, files))) if dial.nonEmpty =>
-            val (h, t) = dial.find(_._1 == pick)
-              .map(d => (d._2, d._3)).getOrElse((0L, 0L))
-            GateStore.record(e.sparkSession, dir, GateStore.Decision(
-              "ivf-nprobe", canon, "", files, n, k, h, t, go = true,
-              IvfTargetRecallNum, IvfTargetRecallDen, choice = pick))
-          case _ => ()
-        }
         nprobeMemo.put(key, pick)
         pick
-        }
       }
     }
   }
@@ -1172,7 +1137,7 @@ object Similarity {
     * to the corpus: k = ⌈√n⌉ centroids (the first k vectors — q268's
     * deterministic seed-by-id-bound rule), nprobe from the resolver
     * (the dial default below the auto-probe gate, the measured dial
-    * above it — recorded in GateStore under the REAL k). This is the
+    * above it, memoized under the REAL k). This is the
     * r13 verdict's scale-headroom item #2: q76's fixed 8-centroid
     * quantizer leaves inverted lists growing O(n/8) and its dial
     * saturating at a full scan, while at k = √n the per-query scan
@@ -1199,8 +1164,8 @@ object Similarity {
     * fixed-8 dial saturating at a FULL scan per query at equal
     * sampled recall, SCALE_POINT_r14 §C). nprobe comes from the
     * resolver (the dial default below the auto-probe gate, the
-    * measured minimal clearing point above it, GateStore-recorded
-    * under the real k), and the assignment takes the angular
+    * measured minimal clearing point above it, memoized under the
+    * real k), and the assignment takes the angular
     * Elkan-pruned path above [[IvfPrunedPairGate]] pairs. Below the
     * gate this IS the registered q76 plan (spec-pinned row equality
     * in IvfPrunedSpec). */

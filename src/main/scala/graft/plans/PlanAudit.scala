@@ -138,22 +138,6 @@ object PlanAudit {
         (if (offsetFrame) " [partition-offset frame]" else "")
   }
 
-  /** Every empty-partitionSpec Window in `df`'s optimized plan, with the
-    * order columns, the leaf tables its child reaches, and whether its
-    * immediate input is a `_pid`-grouped offset frame. */
-  def globalWindows(df: DataFrame): Seq[GlobalWindow] =
-    df.queryExecution.optimizedPlan.collect {
-      case w: Window if w.partitionSpec.isEmpty =>
-        val order = w.orderSpec.map(_.child.references.toSeq
-          .map(_.name).mkString("+"))
-        // classify from the window's IMMEDIATE child (through row-
-        // preserving wrappers only): the child must BE the `_pid`
-        // offset aggregate, not merely have one somewhere in its
-        // lineage — a collectFirst over the whole subtree whitelisted
-        // any global window built DOWNSTREAM of a globalRank output
-        GlobalWindow(order, leafTables(w.child), isPidOffsetFrame(w.child))
-    }
-
   /** One SHUFFLE_HASH join whose build parallelism is the session fixed
     * count. */
   final case class UnguardedHashBuild(tables: Set[String]) {

@@ -608,13 +608,13 @@ object Streams {
     * update-stream-to-files bridge.
     *
     * Determinism: every audit column is an integer count; rows order by
-    * (key, total) — total strictly grows per key across batches (a key
-    * with zero accepted still grows... no: total is monotone NON-strict;
-    * ties broken by arrived, which equals the per-phase row count, and
-    * the (key, total, arrived) triple is unique because each key emits
-    * at most one row per phase and phase totals differ unless both
-    * phases accepted 0 AND arrived the same count — then the rows are
-    * identical and order is immaterial). */
+    * (key, total, arrived, accepted DESC). Each key emits at most one
+    * row per phase and total is monotone NON-strict, so (key, total,
+    * arrived) alone ties when phase 1 fills the quota and phase 2
+    * accepts 0 from the same arrival count (sf0.1 has four such keys);
+    * accepted then differs (quota vs 0), and DESC puts phase 1 first.
+    * Rows equal in all four columns are identical, so their order is
+    * immaterial. */
   def q222StreamQuota(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val root = freshDir("graft-q222")
@@ -687,7 +687,8 @@ object Streams {
     spark.read.parquet(s"$root/out")
       .select(col("key"), col("arrived"), col("accepted"), col("dropped"),
         col("total"))
-      .orderBy(col("key"), col("total"), col("arrived"))
+      .orderBy(col("key"), col("total"), col("arrived"),
+        col("accepted").desc)
   }
 
   /** Two-phase cumulative-cap oracle: phase = event_id parity (exactly
@@ -719,7 +720,7 @@ object Streams {
        |       CAST(arrived - accepted AS BIGINT) AS dropped,
        |       CAST(total AS BIGINT) AS total
        |FROM (SELECT * FROM r1 UNION ALL SELECT * FROM r2)
-       |ORDER BY key, total, arrived""".stripMargin
+       |ORDER BY key, total, arrived, accepted DESC""".stripMargin
 
   // ------------------------------------------------------------ stream CDC
 

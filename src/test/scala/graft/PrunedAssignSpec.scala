@@ -79,7 +79,7 @@ class PrunedAssignSpec extends AnyFunSuite {
 
   test("pruned assignment bit-identical on a clone blob; every skip safe") {
     // fixture + 100 clones of vector 0 above the id range — the
-    // HotBench adversarial shape at spec scale
+    // hot-cluster adversarial shape (SCALE_POINT_r11 §C) at spec scale
     val e0 = Tables.embeddings(spark, SparkSuite.sf)
       .select(col("vec_id"), col("embedding"))
     val maxId = e0.agg(max(col("vec_id"))).head().getLong(0)

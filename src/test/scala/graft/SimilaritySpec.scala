@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -642,6 +644,105 @@ class SimilaritySpec extends AnyFunSuite
       "auto-selected two-level admission must equal flat on locality")
   }
 
+  test("probeConclusive and gateGo: the exact-integer 2-SE test matches " +
+    "IEEE") {
+    // (10a - 9t)^2 * t > 400 * a * (t - a)  <=>  |a/t - 0.9| > 2*SE
+    def ieee(a: Long, t: Long): Boolean = {
+      val p = a.toDouble / t
+      math.abs(p - 0.9) > 2.0 * math.sqrt(p * (1 - p) / t)
+    }
+    // exhaustive cross-check at small tot (every boundary case the
+    // squaring could distort lives here) ...
+    for (t <- 1L to 60L; a <- 0L to t)
+      assert(ops.Centroids.probeConclusive(a, t) === ieee(a, t),
+        s"a=$a t=$t: integer form must match the IEEE definition")
+    // ...and spot values at the sample cap scale
+    Seq((151L, 541L), (232L, 1000L), (900L, 1000L), (905L, 1000L),
+      (950L, 1000L), (1000L, 1000L)).foreach { case (a, t) =>
+      assert(ops.Centroids.probeConclusive(a, t) === ieee(a, t),
+        s"a=$a t=$t")
+    }
+    assert(!ops.Centroids.probeConclusive(0L, 0L),
+      "an empty sample is never conclusive")
+    // a corpus sitting exactly ON the gate is inconclusive at any tot
+    assert(!ops.Centroids.probeConclusive(9L, 10L) &&
+      !ops.Centroids.probeConclusive(900L, 1000L),
+      "p-hat = 0.90 exactly must read inconclusive")
+    // both measured regimes sit far outside 2 SEs: the r11/r12/r13
+    // committed readings (isotropic 151/541, blob-mixed 232/1000) and
+    // planted locality (tot/tot)
+    assert(ops.Centroids.probeConclusive(151L, 541L) &&
+      ops.Centroids.probeConclusive(232L, 1000L) &&
+      ops.Centroids.probeConclusive(500L, 500L),
+      "the committed regimes must read conclusive")
+    // the FULL resolver rule (gateGo = threshold AND conclusive): a
+    // corpus within 2 SEs of the gate never commits to the approximate
+    // index, even when its point estimate clears 9/10
+    assert(!ops.Centroids.gateGo(18L, 20L),
+      "18/20 = 0.90 exactly clears the threshold but is inconclusive " +
+        "at tot=20 — the conservative flat path must win")
+    assert(!ops.Centroids.gateGo(19L, 20L),
+      "19/20 = 0.95 sits inside 2 SEs (0.0975) of the gate at tot=20")
+    assert(ops.Centroids.gateGo(20L, 20L),
+      "a unanimous sample has zero SE and goes")
+    assert(ops.Centroids.gateGo(950L, 1000L),
+      "0.95 at the production cap is 5+ SEs above the gate and goes")
+    assert(!ops.Centroids.gateGo(905L, 1000L),
+      "0.905 at the cap is inside the ~(0.881, 0.919) band and stays flat")
+    assert(!ops.Centroids.gateGo(151L, 541L) &&
+      !ops.Centroids.gateGo(0L, 0L),
+      "below-threshold and empty samples stay flat")
+  }
+
+  test("gate memos: one probe per corpus snapshot; an in-place rewrite " +
+    "re-probes") {
+    // ADVICE r12: canonicalized plans name relations by path, so both
+    // memos also key on the file inventory — a corpus rewritten in
+    // place (same path, same row count) must be re-probed, not served
+    // the stale decision. The memos are NOT cleared between the
+    // resolves: the inventory alone must tell the snapshots apart.
+    val src = Paths.get(SparkSuite.sf, "embeddings.parquet")
+    val dir = Files.createTempDirectory("graft-gate-memo")
+    val path = dir.resolve("embeddings.parquet")
+    Files.copy(src, path)
+    def corpus() = spark.read.parquet(path.toString)
+      .select(col("vec_id"), col("embedding"))
+    def resolveBoth(): (Long, Long) = {
+      val e = corpus()
+      (ops.Centroids.resolveAssignGate(ops.Centroids.quantized(e), 500L,
+        23L, None, ops.Centroids.HierAssignGate, 0L),
+        ops.Similarity.resolveNprobe(e, 500L, autoProbeGate = 0L))
+    }
+    val inv = ops.Centroids.fileInventory(corpus())
+    assert(inv.contains("embeddings.parquet:"),
+      s"a file-backed frame carries its inventory (got $inv)")
+    val sp = spark
+    import sp.implicits._
+    assert(ops.Centroids.fileInventory(
+      Seq((1L, Array(0.1f))).toDF("vec_id", "embedding")) === "",
+      "an in-memory frame has no file inventory")
+    ops.Centroids.clearGateMemoForTest()
+    ops.Similarity.clearNprobeMemoForTest()
+    val hier0 = ops.Centroids.hierProbeRuns.get()
+    val np0 = ops.Similarity.nprobeRuns.get()
+    val first = resolveBoth()
+    assert(resolveBoth() === first, "a memo hit returns the same decision")
+    assert(ops.Centroids.hierProbeRuns.get() === hier0 + 1 &&
+      ops.Similarity.nprobeRuns.get() === np0 + 1,
+      "two resolves of one snapshot must probe once")
+    // same bytes, new mtime; the sleep sits above the 1 s mtime
+    // granularity of coarse filesystems (ADVICE r13)
+    Thread.sleep(1100)
+    Files.copy(src, path, StandardCopyOption.REPLACE_EXISTING)
+    assert(ops.Centroids.fileInventory(corpus()) !== inv,
+      "an in-place rewrite must change the inventory via its mtime")
+    assert(resolveBoth() === first,
+      "identical bytes re-probe to the same decision")
+    assert(ops.Centroids.hierProbeRuns.get() === hier0 + 2 &&
+      ops.Similarity.nprobeRuns.get() === np0 + 2,
+      "a rewritten snapshot must be re-probed, not replayed stale")
+  }
+
   test("capped probe sample (r13): the modulus adapts so the audit/probe " +
     "sample is min(n/37, ~cap) and decisions are unchanged at the cap") {
     // VERDICT r12 #1: the proportional 1-in-37 sample made the go-probe
@@ -755,9 +856,23 @@ class SimilaritySpec extends AnyFunSuite
       .getOrElse(8L)
     ops.Similarity.clearNprobeMemoForTest()
     val pick = ops.Similarity.resolveNprobe(e, e.count(),
-      autoProbeGate = 0L, gateDir = None)
+      autoProbeGate = 0L)
     assert(pick === expected,
       "the resolver's pick must be q280's minimal clearing dial row")
+  }
+
+  test("resolveNprobe on a corpus missing the probe-query ids: " +
+    "conservative endpoint") {
+    val sp = spark
+    import sp.implicits._
+    // ids start at 1000 — the [k, k+5) probe slice is empty
+    val rng = new scala.util.Random(7)
+    val e = (0 until 60).map(i =>
+      (1000L + i, Array.fill(64)(rng.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    ops.Similarity.clearNprobeMemoForTest()
+    assert(ops.Similarity.resolveNprobe(e, 60L, autoProbeGate = 0L) === 8L,
+      "an empty dial must fall back to the conservative endpoint")
   }
 
   test("q281 scaled-k IVF: probing every list reproduces the exact " +

@@ -225,16 +225,8 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("graft_stream_ckpt").toString
     val outDir = Files.createTempDirectory("graft_stream_out").toString
 
-    def runOnce(): Unit = {
-      val stream = sp.readStream
-        .schema(Tables.lineitem(sp, SparkSuite.sf).schema)
-        .parquet(srcDir)
-      val q = stream.writeStream
-        .format("parquet").option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    def runOnce(): Unit = streaming.Streams.ingestAvailableNow(sp, srcDir,
+      Tables.lineitem(sp, SparkSuite.sf).schema, outDir, ckpt)
     def sunk(): Long = sp.read.parquet(outDir).count()
 
     Tables.lineitem(sp, SparkSuite.sf).limit(100)

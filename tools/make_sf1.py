@@ -31,14 +31,15 @@ under new doc_ids, i.e. a planted corpus-wide near-dup layer that
 densifies q83/q70 quadratically and measures the replication artifact,
 not the engine.
 
-embeddings_only mode (r12, for the HotBench sf4 point): pass a third
+embeddings_only mode (r12, for the hot-cluster sf4 point,
+SCALE_POINT_r12 §B): pass a third
 arg `embeddings_only` to write just embeddings.parquet. The embedding
 transform family is a 64-position circular shift composed with an
 optional global negation (r13, for the sf8 point) — 128 distinct
 orthogonal transforms, each norm- and intra-replica-geometry-
 preserving while cross-replica cosines scramble — so this mode allows
-up to 128 replicas (HotBench reads only the embeddings table; the
-26-replica text cap does not apply). Negation is as artifact-free as
+up to 128 replicas (the hot-cluster chain reads only the embeddings
+table; the 26-replica text cap does not apply). Negation is as artifact-free as
 rotation: no replica pair is byte-identical, and cos(-x, y) = -cos(x,
 y) keeps cross-replica similarities as scrambled as the rotation
 already left them.
