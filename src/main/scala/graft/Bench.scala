@@ -8,8 +8,8 @@ object Bench {
     // Untimed warmup: JVM/codegen/parquet-reader init would otherwise be
     // billed to whichever query happens to run first.
     try {
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      val o = spark.read.parquet(s"$sfDir/orders.parquet")
+      val li = Tables.lineitem(spark, sfDir)
+      val o = Tables.orders(spark, sfDir)
       li.join(o, li("l_orderkey") === o("o_orderkey"))
         .groupBy("l_returnflag").count().collect()
     } catch { case scala.util.control.NonFatal(_) => () } // fatal JVM errors (OOM, linkage) must propagate

@@ -1155,12 +1155,8 @@ object Centroids {
           case _ => Seq.empty[String]
         }
     }.flatten
-    val conf = df.sparkSession.sessionState.newHadoopConf()
-    files.sorted.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      val st = p.getFileSystem(conf).getFileStatus(p)
-      s"$f:${st.getLen}:${st.getModificationTime}"
-    }.mkString(";")
+    files.sorted.map(graft.Tables.fileInventory(df.sparkSession, _))
+      .mkString(";")
   }
 
   /** Resolve the SemDeDup-family assignment gate. A caller-forced

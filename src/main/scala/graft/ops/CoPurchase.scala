@@ -125,10 +125,11 @@ object CoPurchase {
       .createTempDirectory("graft-copurchase-").toString
     val it = itemsInline(spark, sfDir)
     it.write.mode("overwrite").parquet(s"$dir/items.parquet")
-    val itemsDf = spark.read.parquet(s"$dir/items.parquet")
+    val itemsDf = Tables.parquet(spark, s"$dir/items.parquet", it.schema)
     itemsDf.createOrReplaceTempView(itemsView(sfDir))
-    pairsFrom(itemsDf).write.mode("overwrite").parquet(s"$dir/pairs.parquet")
-    spark.read.parquet(s"$dir/pairs.parquet")
+    val pairs = pairsFrom(itemsDf)
+    pairs.write.mode("overwrite").parquet(s"$dir/pairs.parquet")
+    Tables.parquet(spark, s"$dir/pairs.parquet", pairs.schema)
       .createOrReplaceTempView(pairsView(sfDir))
     dir
   }

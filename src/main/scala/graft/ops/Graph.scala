@@ -938,34 +938,36 @@ object Graph {
   }
 
   /** Generated, unrolled oracle: round i's survivors as CTE a{i}, with
-    * the same p75-degree threshold computed in a `kth` CTE. */
+    * the same p75-degree threshold computed in a `kth` CTE. Every CTE is
+    * MATERIALIZED: each round reads the previous one twice, and DuckDB
+    * inlining the chain re-derives it exponentially (past 12 GB at sf0.1). */
   val q201Sql: String = {
     val peels = (1 to KCoreRounds).map { i =>
-      s"""a$i AS (
+      s"""a$i AS MATERIALIZED (
          |  SELECT e.src AS node FROM edges e
          |  JOIN a${i - 1} s ON e.src = s.node
          |  JOIN a${i - 1} d ON e.dst = d.node
          |  GROUP BY e.src
          |  HAVING count(*) >= (SELECT k FROM kth))""".stripMargin
     }.mkString(",\n")
-    s"""WITH pairs AS (
+    s"""WITH pairs AS MATERIALIZED (
        |  SELECT DISTINCT 'c' || o.o_custkey AS cnode,
        |                  's' || l.l_suppkey AS snode
        |  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-       |edges AS (
+       |edges AS MATERIALIZED (
        |  SELECT cnode AS src, snode AS dst FROM pairs
        |  UNION ALL
        |  SELECT snode AS src, cnode AS dst FROM pairs),
-       |kth AS (
+       |kth AS MATERIALIZED (
        |  SELECT d AS k FROM (
        |    SELECT d, row_number() OVER (ORDER BY d, src) AS rn,
        |           count(*) OVER () AS n
        |    FROM (SELECT src, CAST(count(*) AS BIGINT) AS d
        |          FROM edges GROUP BY src))
        |  WHERE rn = (3 * n + 3) // 4),
-       |a0 AS (SELECT DISTINCT src AS node FROM edges),
+       |a0 AS MATERIALIZED (SELECT DISTINCT src AS node FROM edges),
        |$peels,
-       |conv AS (
+       |conv AS MATERIALIZED (
        |  SELECT (SELECT count(*) FROM a${KCoreRounds - 1})
        |       = (SELECT count(*) FROM a$KCoreRounds) AS converged)
        |SELECT e.src AS node, CAST(count(*) AS BIGINT) AS core_degree,

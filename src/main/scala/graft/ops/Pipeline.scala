@@ -89,9 +89,14 @@ object Pipeline {
     // tasks back-fill the executor slots the warehouse jobs' stragglers
     // leave idle. Different output directories, disjoint side effects;
     // the thread is JOINED (and its failure rethrown) before return, so
-    // callers still observe a fully-landed pipeline.
+    // callers still observe a fully-landed pipeline. It runs under its own
+    // job group: when the warehouse load fails, the landing is cancelled
+    // (re-cancelled until the thread ends, so a job it submits after the
+    // first cancel dies too) and the LOAD's error surfaces, promptly.
+    val rawGroup = s"graft-q04-raw-zone-${java.util.UUID.randomUUID}"
     var rawFailure: Option[Throwable] = None
     val rawLanding = new Thread(() => {
+      spark.sparkContext.setJobGroup(rawGroup, "q04 raw-zone landing")
       try WarehouseSink.rawZoneAppend(conformed, s"$root/raw",
         "pickup_datetime")
       catch { case t: Throwable => rawFailure = Some(t) }
@@ -102,9 +107,17 @@ object Pipeline {
       // the reference's existence-check guard, replayed as a real re-run:
       // everything is already loaded, so the delta must be empty — if the
       // guard is broken the warehouse doubles and the oracle hash fails
-      WarehouseSink.dedupAppend(conformed, spark.read.parquet(wh), tripKey)
+      WarehouseSink.dedupAppend(conformed,
+          Tables.parquet(spark, wh, conformed.schema), tripKey)
         .write.mode("append").parquet(wh)
-    } finally rawLanding.join()
+    } catch { case t: Throwable =>
+      while (rawLanding.isAlive) {
+        spark.sparkContext.cancelJobGroup(rawGroup)
+        rawLanding.join(50)
+      }
+      throw t
+    }
+    rawLanding.join()
     rawFailure.foreach(throw _)
     conformed
   }
@@ -130,7 +143,9 @@ object Pipeline {
       rm(root.toFile)
     }))
     runTripPipeline(spark, sfDir, root.toString)
-    spark.read.parquet(s"$root/warehouse")
+    // the declared DDL, not footer inference: the read-back's column order
+    // is the contract's, whatever order a file was written in
+    Tables.parquet(spark, s"$root/warehouse", Schemas.fhvhvTripdata)
       .orderBy(col("dispatching_base_num"))
   }
 

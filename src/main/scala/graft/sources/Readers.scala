@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.Schemas
+import graft.{Schemas, Tables}
 
 /** Input sources beyond parquet — CSV and JSON-lines readers with the same
   * ingest-boundary policy as the parquet path (SURVEY.md §1.3): read with an
@@ -40,7 +40,7 @@ object Readers {
       sourceSchema: StructType, target: StructType,
       renames: Map[String, String] = Map.empty): DataFrame = {
     val raw = format match {
-      case "parquet" => spark.read.parquet(path)
+      case "parquet" => Tables.parquet(spark, path)
       // ORC ships with Spark and keeps its own schema like parquet —
       // no declared read schema needed, conform() enforces the contract
       case "orc"     => spark.read.orc(path)

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.functions.{col, year}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
+import graft.Tables
+
 /** Sinks — the reference's output surface re-expressed (SURVEY.md §2.1).
   *
   * The reference appends to Redshift over JDBC with an S3 staging dir
@@ -47,7 +49,7 @@ object WarehouseSink {
   def stagedJdbcLoad(df: DataFrame, stagingDir: String, url: String,
       table: String, properties: Map[String, String] = Map.empty): Long = {
     df.write.mode(SaveMode.Overwrite).parquet(stagingDir)
-    val staged = df.sparkSession.read.parquet(stagingDir)
+    val staged = Tables.parquet(df.sparkSession, stagingDir, df.schema)
     jdbcAppend(staged, url, table, properties).save()
     staged.count()
   }
@@ -64,10 +66,13 @@ object WarehouseSink {
   /** Deduplicated append — closes the reference's double-load hole (its
     * idempotency branch guards the download, but the JDBC append is blind,
     * `etl.py:53-55`): left-anti join against the existing sink keys before
-    * appending. */
+    * appending. The result keeps `df`'s column order: a USING join puts
+    * the keys first, and appending that would leave the sink with files
+    * in two column orders. */
   def dedupAppend(df: DataFrame, existing: DataFrame,
       keys: Seq[String]): DataFrame =
     df.join(existing.select(keys.map(col): _*).distinct(), keys, "left_anti")
+      .select(df.columns.toSeq.map(col): _*)
 
   /** One partition's compaction verdict from [[compactionPlan]]. */
   case class CompactionEntry(partition: String, n_files: Long,
@@ -116,7 +121,7 @@ object WarehouseSink {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new org.apache.hadoop.fs.Path(root, partition + ".compact.tmp")
     val old = new org.apache.hadoop.fs.Path(root, partition + ".compact.old")
-    spark.read.parquet(dir.toString)
+    Tables.parquet(spark, dir.toString)
       .repartition(targetFiles)
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     require(fs.rename(dir, old), s"could not move $dir aside")

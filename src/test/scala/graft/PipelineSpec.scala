@@ -65,6 +65,66 @@ class PipelineSpec extends AnyFunSuite {
       conformed.filter(year(col("pickup_datetime")) === y).count())
   }
 
+  test("q04: every warehouse file and every construction keeps the DDL order") {
+    val ddl = Schemas.fhvhvTripdata.fieldNames.toSeq
+    val root = Files.createTempDirectory("graft_q04_order").toString
+    ops.Pipeline.runTripPipeline(spark, SparkSuite.sf, root)
+    // the guarded re-load appends an (empty) file too: both loads must
+    // write the conformed order, or footer inference picks either
+    val files = new java.io.File(s"$root/warehouse").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    assert(files.length >= 2)
+    files.foreach(f => assert(
+      spark.read.parquet(f.toString).columns.toSeq === ddl, f.getName))
+    (1 to 3).foreach { i =>
+      assert(ops.Pipeline.q04Pipeline(spark, SparkSuite.sf).columns.toSeq ===
+        ddl, s"construction $i")
+    }
+  }
+
+  test("q04: a failed warehouse load cancels the raw-zone landing") {
+    import org.apache.spark.scheduler.{JobFailed, SparkListener,
+      SparkListenerJobEnd, SparkListenerJobStart}
+    // ~750k source trips, so the landing outlives the failed load
+    val sfDir = Files.createTempDirectory("graft_q04_fault_sf").toString
+    Tables.orders(spark, SparkSuite.sf)
+      .crossJoin(spark.range(500).withColumnRenamed("id", "rep"))
+      .withColumn("o_orderkey", col("o_orderkey") * 1000 + col("rep"))
+      .drop("rep")
+      .write.parquet(s"$sfDir/orders.parquet")
+    val root = Files.createTempDirectory("graft_q04_fault").toString
+    // a plain FILE where the warehouse directory must go: the load fails
+    Files.createFile(java.nio.file.Paths.get(root, "warehouse"))
+    val rawJobs = scala.collection.concurrent.TrieMap.empty[Int, Boolean]
+    val ended = scala.collection.concurrent.TrieMap.empty[Int, Boolean]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p =>
+              Option(p.getProperty("spark.jobGroup.id")))
+            .exists(_.startsWith("graft-q04-raw-zone")))
+          rawJobs.put(e.jobId, true): Unit
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        ended.put(e.jobId, e.jobResult.isInstanceOf[JobFailed]): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val err = intercept[Exception](
+        ops.Pipeline.runTripPipeline(spark, sfDir, root))
+      // the load's own error, not the landing's cancellation
+      assert(!String.valueOf(err.getMessage).contains("cancelled"),
+        err.getMessage)
+      assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+        "a job is still running after the pipeline returned")
+      // no raw-zone job ran to completion: each one started was cancelled
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!rawJobs.keys.forall(ended.contains) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      assert(rawJobs.nonEmpty, "the landing never started a job")
+      rawJobs.keys.foreach(id =>
+        assert(ended.get(id) === Some(true), s"raw-zone job $id completed"))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("raw-zone writer produces a year-partitioned pruned layout") {
     val root = Files.createTempDirectory("graft_rawzone").toString
     val li = Tables.lineitem(spark, SparkSuite.sf)
@@ -107,6 +167,17 @@ class PipelineSpec extends AnyFunSuite {
     // re-appending the same batch yields nothing
     assert(WarehouseSink.dedupAppend(existing, existing,
       Tables.lineitemKey).count() === 0)
+  }
+
+  test("dedupAppend keeps its input's column order") {
+    val sp = spark
+    import sp.implicits._
+    val df = Seq((1.0, 1L, "a"), (2.0, 2L, "b")).toDF("v", "k", "w")
+    val existing = Seq((9.0, 1L, "z")).toDF("v", "k", "w")
+    val out = WarehouseSink.dedupAppend(df, existing, Seq("k"))
+    // a USING anti-join alone would put the key first: k, v, w
+    assert(out.columns.toSeq === Seq("v", "k", "w"))
+    assert(out.collect().toSeq === Seq(org.apache.spark.sql.Row(2.0, 2L, "b")))
   }
 
   test("CSV and JSON round-trip lineitem losslessly through the readers") {

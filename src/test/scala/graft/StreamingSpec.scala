@@ -219,6 +219,27 @@ class StreamingSpec extends AnyFunSuite {
     assert(snapshot() === Map(1L -> "a2", 2L -> "b", 3L -> "c"))
   }
 
+  test("q125 restages a fixture rewritten in place, never a stale copy") {
+    val sfDir = Files.createTempDirectory("graft_q125_fixture").toString
+    val src = spark.read.parquet(s"${SparkSuite.sf}/events.parquet")
+    def expected = Tables.events(spark, sfDir)
+      .select(col("user_id"), col("event_type"),
+        date_trunc("day", col("ts")).as("day"))
+      .distinct().count()
+    def write(df: org.apache.spark.sql.DataFrame): Unit =
+      df.coalesce(1).write.mode("overwrite")
+        .parquet(s"$sfDir/events.parquet")
+    write(src.filter(col("user_id") % 2 === 0))
+    assert(graft.streaming.Streams.q125StreamDedup(spark, sfDir).count() ===
+      expected)
+    Thread.sleep(1100)
+    write(src.filter(col("user_id") % 2 =!= 0))
+    val after = graft.streaming.Streams.q125StreamDedup(spark, sfDir)
+    assert(after.count() === expected)
+    assert(after.filter(col("user_id") % 2 === 0).isEmpty,
+      "q125 replayed the staged copy of the old fixture")
+  }
+
   test("AvailableNow file stream ingests each file exactly once") {
     val sp = spark
     val srcDir = Files.createTempDirectory("graft_stream_src").toString
