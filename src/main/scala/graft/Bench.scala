@@ -74,9 +74,10 @@ object Bench {
       name -> timeQuery(() => fn(spark, sfDir), name)
     }
     // Second pass with the determinism-only top orderBy stripped: the final
-    // range-exchange sort exists for the driver's hash compare, not the
-    // operator under test, and can mask operator regressions on the
-    // row-level queries (q40/q41/q42). Production plans look like this.
+    // sort (a range exchange, or one coalesced partition when its input is
+    // small) exists for the oracle's hash compare, not the operator under
+    // test, and can mask operator regressions on the row-level queries
+    // (q40/q41/q42). Production plans look like this.
     val resultsNoSort = sorted.map { case (name, fn) =>
       name -> timeQuery(() => {
         // construct ONCE: queries with eager construction work (q04's

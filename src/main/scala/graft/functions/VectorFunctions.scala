@@ -313,5 +313,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(VectorFunctions.normSqlFunction)
     StableHashExpression.sqlFunctions.foreach(ext.injectFunction)
     graft.plans.GroupedTopK.inject(ext)
+    graft.plans.SinglePartitionSort.inject(ext)
   }
 }

@@ -178,11 +178,6 @@ object Dedup {
       .groupBy(col("doc_id"))
       .agg(min(col("bucket_rep")).as("cluster_rep"))
       .withColumn("is_duplicate", col("cluster_rep") < col("doc_id"))
-      // doc-cardinality result materialized before the determinism sort:
-      // RangePartitioning samples its child, and un-cut the bucket join
-      // re-ran whole under the sampling pass (measured 11.3 s vs 3.8 s
-      // for the plan without the sort at the sf1 scale point)
-      .cutLineage()
       .orderBy(col("doc_id"))
   }
 

@@ -147,10 +147,12 @@ object Events {
         col("n_events").isNull.as("is_gap"),
         last(col("sum_value"), ignoreNulls = true).over(fill)
           .as("filled_value"))
-      // materialize before the determinism sort: RangePartitioning SAMPLES
-      // its child, re-running the join+window chain whole (timed 1.9 s vs
-      // 0.88 s nosort — the sort pass was the other half); the cut frame
-      // is |user-hours| narrow rows (the q139 triangleCounts precedent)
+      // materialize before the determinism sort: the grid join keeps
+      // Spark's size estimate at the product of its inputs, so
+      // SinglePartitionSort leaves this |user-hours|-row sort (1M rows at
+      // sf0.1) range-partitioned, and the range exchange SAMPLES its child;
+      // the cut makes the sample read the cut rows instead of re-running
+      // the join+window chain (timed 1.9 s vs 0.88 s nosort before the cut)
       .cutLineage()
       .orderBy(col("user_id"), col("hr"))
   }
@@ -551,10 +553,11 @@ object Events {
           .otherwise(col("prev_v") +
             (col("next_v") - col("prev_v")) * frac)
           .as("interp_value"))
-      // materialize before the determinism sort: RangePartitioning SAMPLES
-      // its child, re-running the two-direction window chain whole (timed
-      // 3.75 s vs 1.47 s nosort — the sort pass was the other half); the
-      // cut frame is |user-hours| narrow rows (the q139 precedent)
+      // materialize before the determinism sort: as in q63, the grid join
+      // keeps the size estimate high, so SinglePartitionSort leaves this
+      // |user-hours|-row sort range-partitioned; the cut makes the range
+      // sample read the cut rows instead of re-running the two-direction
+      // window chain (timed 3.75 s vs 1.47 s nosort before the cut)
       .cutLineage()
       .orderBy(col("user_id"), col("hr"))
   }

@@ -148,10 +148,14 @@ object Graph {
       .join(outdeg.withColumnRenamed("src", "node"), "node")
       .select(concat(lit("s"), expr("(node - 1) div 2")).as("node"),
         col("outdeg").as("degree"), col("rank"))
-      // materialize before the determinism sort: RangePartitioning
-      // samples its child, re-running both iterations whole (timed 4.0 s
-      // vs 3.2 s nosort in the r16 baseline); the cut frame is
-      // |supplier| narrow rows
+      // materialize before the determinism sort, for two jobs: the
+      // pinned edge cache is released below, so the result must not read
+      // it; and the iteration joins keep Spark's size estimate (which the
+      // cut frame inherits) at the product of their inputs, so
+      // SinglePartitionSort leaves the sort range-partitioned and its
+      // sample would otherwise re-run both iterations whole (timed 4.0 s
+      // vs 3.2 s nosort in the r16 baseline); the cut frame is |supplier|
+      // narrow rows
       .cutLineage()
     // every downstream consumer now reads the cut frame — release the
     // pinned edge cache instead of retaining it for the session

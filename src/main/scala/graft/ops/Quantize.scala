@@ -187,9 +187,12 @@ object Quantize {
       .select(col("query_id"), col("cand_id"), col("adc_d2"),
         col("exact_d2"), col("rank"),
         coalesce(col("hit"), lit(0L)).as("in_exact"))
-      // materialize before the determinism sort: RangePartitioning samples
-      // its child, re-running the encode+ADC pipeline whole (r16 A/B); the
-      // cut frame is queries x shortlist rows
+      // materialize before the determinism sort: the sort-merge join with
+      // exactTop above the last exchange keeps Spark's size estimate at the
+      // product of its inputs, so SinglePartitionSort cannot lower this
+      // queries x shortlist sort and its range exchange still samples; the
+      // cut makes that sample read the cut rows instead of re-running the
+      // encode+ADC pipeline (r16 A/B)
       .cutLineage()
       .orderBy(col("query_id"), col("rank"))
   }

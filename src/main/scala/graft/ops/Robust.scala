@@ -61,9 +61,11 @@ object Robust {
         max(col("mad")).as("mad"),
         sum(when(col("dev") > lit(3.0) * col("mad"), 1L)
           .otherwise(0L)).as("n_outliers"))
-      // materialize before the determinism sort: RangePartitioning samples
-      // its child, re-running the two-median pipeline whole (r16 A/B); the
-      // cut frame is |event-type| rows
+      // materialize before the determinism sort: the sort-merge join above
+      // the last exchange keeps Spark's size estimate at the product of its
+      // inputs, so SinglePartitionSort cannot lower this |event-type|-row
+      // sort and its range exchange still samples; the cut makes that
+      // sample read the cut rows instead of re-running the join (r16 A/B)
       .cutLineage()
       .orderBy(col("event_type"))
   }

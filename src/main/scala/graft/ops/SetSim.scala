@@ -129,9 +129,12 @@ object SetSim {
       .select(col("d1"), col("d2"), col("n_inter"), col("n_union"),
         (col("n_inter").cast("double") / col("n_union").cast("double"))
           .as("jaccard"))
-      // materialize before the determinism sort: RangePartitioning samples
-      // its child, re-running the prefix-filter candidate join whole
-      // (r16 A/B); the cut frame is the surviving-pair rows
+      // materialize before the determinism sort: the broadcast joins above
+      // the last exchange keep Spark's size estimate at the product of
+      // their inputs, so SinglePartitionSort cannot lower this sort and its
+      // range exchange still samples; the cut makes that sample read the
+      // surviving-pair rows instead of re-running the prefix-filter
+      // candidate join (r16 A/B)
       .cutLineage()
       .orderBy(col("d1"), col("d2"))
   }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.Checkpoints.CutOps
 
 /** Similarity search over the `embeddings` fixture + as-of join — north-star
   * tier X (BASELINE.json).
@@ -230,10 +229,6 @@ object Similarity {
       .dropDuplicates("query_id", "cand_id")
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 5)
-      // 25-row result materialized before the determinism sort — its
-      // range-sampling otherwise re-runs the whole candidate join
-      // (measured 10.3 s vs 2.9 s sort-free at the sf1 scale point)
-      .cutLineage()
       .orderBy(col("query_id"), col("rank"))
   }
 

@@ -105,11 +105,13 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q01 ingest pipeline is shuffle-free up to the final ordering") {
-    // the only exchange allowed is the range partitioning for the orderBy
+    // at the test scale the final orderBy sorts one coalesced partition
+    // (SinglePartitionSort), so the plan has no exchange at all
     val p = plan(ops.Ingest.q01Ingest(spark, sf))
-    val exchanges = "Exchange [a-z]+partitioning".r.findAllIn(p).toSeq
-    assert(exchanges.forall(_.contains("rangepartitioning")),
-      s"unexpected non-sort exchange in ingest plan:\n$p")
+    assert(!p.contains("Exchange"), s"unexpected exchange in ingest plan:\n$p")
+    assert("""(?m)^\+- Sort \[.*\], true, 0\n   \+- Coalesce 1$""".r
+      .findFirstIn(p).isDefined,
+      s"expected Coalesce 1 directly under the root sort:\n$p")
   }
 
   test("q70 bucket minima avoid the whole-bucket window straggler") {

@@ -1,45 +1,18 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
+import SparkSuite.jobsDuring
+
 /** The schema memo behind [[Tables.parquet]]: one footer inference per
   * file version, a fresh relation per read. */
 class TablesSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.session
-
-  /** Spark jobs started while `body` runs. The listener bus is
-    * asynchronous but ordered, so once a marker job submitted after `body`
-    * has been seen, every job `body` started has been counted. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val marker = s"tables-spec-${java.util.UUID.randomUUID}"
-    val jobs = new AtomicInteger
-    val flushed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == marker)
-          flushed.countDown()
-        else jobs.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setJobGroup(marker, "listener flush")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.clearJobGroup()
-      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus never flushed")
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
