@@ -2,8 +2,7 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.local(cpus, "graft-bench")
+    val spark = Sessions.local(Sessions.cpus, "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: JVM/codegen/parquet-reader init would otherwise be
     // billed to whichever query happens to run first.
@@ -38,27 +37,7 @@ object Bench {
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           None
-        } finally {
-          // ops localCheckpoint narrow frames; the blocks are only freed
-          // when the RDD is GC'd. Left alone, ~180 queries × 4 executions
-          // accumulate in the unified memory pool and starve the LAST
-          // queries' aggregates into spilling (r03 recorded q99 at 31.8 s
-          // vs 1.5 s in isolation). Release them between timings —
-          // BLOCKING, so the pool is actually clear before the next timed
-          // query starts (non-blocking release left enough residue to
-          // inflate mid-alphabet queries ~1.5× in-suite vs isolated in
-          // r5's full run; the wait itself is outside the timed section).
-          // clearCache first: releasing blocks alone leaves the
-          // CacheManager ENTRY alive, and plan-equality substitution
-          // would splice one query's persisted frame (q268/q270/q273
-          // persist shared components; q271/q272's persists were
-          // reverted after losing their A/B) into every later query
-          // that builds the same subtree — cross-query cache write costs
-          // in the later query's timing
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-        }
+        } finally Sessions.release(spark) // outside the timed section
       }
       if (times.nonEmpty) times.min else -1.0
     }

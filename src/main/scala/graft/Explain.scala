@@ -25,7 +25,7 @@ object Explain {
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (rest.length > 1) rest.tail.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = Sessions.local("4", "graft-explain")
+    val spark = Sessions.local(Sessions.cpus, "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

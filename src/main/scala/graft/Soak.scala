@@ -13,8 +13,7 @@ object Soak {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = args.lift(1).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.local(cpus, "graft-soak")
+    val spark = Sessions.local(Sessions.cpus, "graft-soak")
     spark.sparkContext.setLogLevel("WARN")
 
     def replicate(df: DataFrame, idCol: String): DataFrame = {

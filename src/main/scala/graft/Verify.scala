@@ -12,32 +12,20 @@ object Verify {
     require(unknown.isEmpty,
       s"unknown query name(s): ${unknown.mkString(", ")} — a typo here " +
         "would otherwise silently verify nothing")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.local(cpus, "graft-verify")
+    val spark = Sessions.local(Sessions.cpus, "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmrf)
-      f.delete(): Unit
-    }
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
       // stale output from a previous run must not survive a failure — the
       // driver's compare would silently validate it as this run's result
-      rmrf(new java.io.File(s"$outDir/$name"))
+      Scratch.delete(new java.io.File(s"$outDir/$name"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      } finally {
-        // release ops' localCheckpoint blocks — accumulated over the full
-        // ledger they crowd the memory pool (see the same note in Bench)
-        spark.catalog.clearCache() // drop CacheManager entries too, not
-        // just blocks — plan substitution must not leak across queries
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
+      } finally Sessions.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -121,8 +121,7 @@ object CoPurchase {
     * the session temp views the accessors pick up. Idempotent per
     * (session, sfDir). Returns the scratch directory. */
   def materialize(spark: SparkSession, sfDir: String): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-copurchase-").toString
+    val dir = graft.Scratch.lasting("graft-copurchase-").toString
     val it = itemsInline(spark, sfDir)
     it.write.mode("overwrite").parquet(s"$dir/items.parquet")
     val itemsDf = Tables.parquet(spark, s"$dir/items.parquet", it.schema)

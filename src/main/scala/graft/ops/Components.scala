@@ -151,8 +151,6 @@ object Components {
       converged = labelSum == prevSum
       prevSum = labelSum
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] iter=$iter labelSum=$labelSum")
     }
     finishWithIsolated(nodes, labels)
   }

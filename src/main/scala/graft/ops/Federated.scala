@@ -34,14 +34,7 @@ object Federated {
   private def stage(spark: SparkSession, sfDir: String,
       format: String): String =
     staged.getOrElseUpdate((format, sfDir), {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-fed-$format")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete(): Unit
-        }
-        rm(dir.toFile)
-      }))
+      val dir = graft.Scratch.lasting(s"graft-fed-$format")
       val slice = Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_orderpriority"),
           col("o_totalprice"))
@@ -98,14 +91,7 @@ object Federated {
   private def stageDocs(spark: SparkSession, sfDir: String,
       format: String): String =
     stagedDocs.getOrElseUpdate((format, sfDir), {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-rt-$format")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete(): Unit
-        }
-        rm(dir.toFile)
-      }))
+      val dir = graft.Scratch.lasting(s"graft-rt-$format")
       val slice = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
           col("text"))

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -130,18 +128,12 @@ object Pipeline {
     * NOTE: construction is EAGER (the loads are actions) — plan-only
     * consumers like [[graft.Explain]] see just the read-back scan. q18
     * (bucketed write) and q92 (sketch collect) share this property; every
-    * other registered query is a pure lazy plan. The scratch dir is
-    * removed on JVM exit, so repeated bench/verify invocations don't
-    * accumulate /tmp copies. */
+    * other registered query is a pure lazy plan. The scratch dir is a
+    * [[graft.Scratch.perQuery]] one: [[graft.Sessions.release]] deletes it
+    * after the query has run, so a ledger pass that builds q04 four times
+    * does not accumulate /tmp copies. */
   def q04Pipeline(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft-q04")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(): Unit
-      }
-      rm(root.toFile)
-    }))
+    val root = graft.Scratch.perQuery("graft-q04")
     runTripPipeline(spark, sfDir, root.toString)
     // the declared DDL, not footer inference: the read-back's column order
     // is the contract's, whatever order a file was written in

@@ -31,7 +31,8 @@ import org.apache.spark.sql.catalyst.plans.logical._
   * and q268's four-way-consumed assignment (1.35×). Flag → measure →
   * then decide; the full record lives in SCALE_POINT_r9 §E.
   *
-  * Usage: `sbt "runMain graft.plans.RecomputeAudit <sfDir> [minCost]"`.
+  * The report (every cost ≥ 2 finding, classified) is part of the one
+  * ledger walk: `sbt "runMain graft.plans.AuditSweep <sfDir>"`.
   */
 object RecomputeAudit {
 
@@ -150,46 +151,5 @@ object RecomputeAudit {
       .map(p => Dup(counts(p.canonicalized), cost(p), p.nodeName))
       .filter(_.cost >= minCost)
       .sortBy(d => (-d.cost * d.occurrences, d.root))
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val minCost = args.drop(1).headOption.map(_.toInt).getOrElse(2)
-    val spark = graft.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"), "graft-recompute-audit")
-    spark.sparkContext.setLogLevel("WARN")
-    var total = 0
-    var rejected = 0
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val dups = duplicates(fn(spark, sfDir), minCost)
-        dups.foreach { d =>
-          total += 1
-          val cls = classify(name, d)
-          if (cls == "rejected-by-measurement") rejected += 1
-          println(s"[recompute] $name: ${d.occurrences}x ${d.root} " +
-            s"subtree with ${d.cost} shuffle-bearing ops [$cls]")
-        }
-      } catch { case scala.util.control.NonFatal(e) =>
-        println(s"[recompute] $name: build-error ${e.getMessage}")
-      } finally {
-        // clearCache first, mirroring AuditSweep/Bench/Verify: releasing
-        // RDD blocks alone leaves the CacheManager ENTRY alive, and
-        // plan-equality substitution would splice one query's persisted
-        // frame (q268/q270/q273 persist shared components) into every
-        // later query that builds the same subtree. duplicates() skips
-        // subtrees under InMemoryRelation, so a leaked entry silently
-        // MASKS later queries' duplicate-subtree findings — the exact
-        // cross-query leak this audit exists to surface.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
-    }
-    println(s"[recompute] total findings: $total across " +
-      s"${graft.SparkEntry.queries.size} queries (minCost=$minCost): " +
-      s"$rejected rejected-by-measurement, ${total - rejected} unexamined" +
-      " (cost >=3 unexamined findings fail AuditSweepSpec's census)")
-    spark.stop()
   }
 }

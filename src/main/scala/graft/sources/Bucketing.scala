@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -92,14 +90,7 @@ object Bucketing {
         spark.catalog.tableExists("graft_b_orders") &&
         spark.catalog.tableExists("graft_b_lineitem")
       if (!cached) {
-        val root = Files.createTempDirectory("graft-q18")
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm)
-            f.delete(): Unit
-          }
-          rm(root.toFile)
-        }))
+        val root = graft.Scratch.lasting("graft-q18")
         writeTripPair(spark, sfDir, root.toString)
         writtenFor = Some(sfDir)
       }

@@ -327,33 +327,22 @@ object Streams {
     * re-writing identical source files each time bills fixture prep — not
     * the streaming operator under test — to the timing. A source rewritten
     * in place stages afresh instead of replaying a stale copy. The
-    * sink/checkpoint dirs stay fresh per invocation. */
+    * sink/checkpoint dirs stay fresh per invocation: they are
+    * [[graft.Scratch.perQuery]] dirs, deleted by [[graft.Sessions.release]]. */
   private val stagedInputs =
     scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
-  private def freshDir(prefix: String): java.nio.file.Path = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(): Unit
-      }
-      rm(dir.toFile)
-    }))
-    dir
-  }
 
   private def stageOnce(spark: SparkSession, fixture: String, sfDir: String)(
       write: String => Unit): String =
     stagedInputs.getOrElseUpdate((fixture,
         graft.Tables.fileInventory(spark, s"$sfDir/events.parquet")), {
-      val dir = freshDir(s"graft-$fixture")
+      val dir = graft.Scratch.lasting(s"graft-$fixture")
       write(dir.toString)
       dir.toString
     })
 
   def q119StreamJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = freshDir("graft-q119")
+    val root = graft.Scratch.perQuery("graft-q119")
     // the helper's contract: impressions(imp_id, imp_ts), clicks keyed by
     // click_imp_id — here the attribution key is the user
     val in = stageOnce(spark, "q119in", sfDir) { dir =>
@@ -413,7 +402,7 @@ object Streams {
     * the watermark evicts nothing and the key set equals the oracle's
     * SELECT DISTINCT. */
   def q125StreamDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = freshDir("graft-q125")
+    val root = graft.Scratch.perQuery("graft-q125")
     val in = stageOnce(spark, "q125in", sfDir) { dir =>
       graft.Tables.events(spark, sfDir)
         .select(col("ts"), col("user_id"), col("event_type"),
@@ -455,7 +444,7 @@ object Streams {
     * every window finalizes and the result equals q60's batch aggregate —
     * which is exactly the oracle used here. */
   def q136StreamWindow(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = freshDir("graft-q136")
+    val root = graft.Scratch.perQuery("graft-q136")
     val in = stageOnce(spark, "q136in", sfDir) { dir =>
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("ts"), col("event_type"), col("value"))
@@ -510,7 +499,7 @@ object Streams {
     * changing dims on restart) — a dimension past broadcast size belongs
     * in a stream-stream changelog join (q119's shape) instead. */
   def q227StreamEnrich(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = freshDir("graft-q227")
+    val root = graft.Scratch.perQuery("graft-q227")
     val in = stageOnce(spark, "q227in", sfDir) { dir =>
       graft.Tables.events(spark, sfDir)
         .select(col("event_id"), col("user_id"))
@@ -558,7 +547,7 @@ object Streams {
   def q219StreamSessions(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     implicit val sp: SparkSession = spark
-    val root = freshDir("graft-q219")
+    val root = graft.Scratch.perQuery("graft-q219")
     val in = stageOnce(spark, "q219in", sfDir) { dir =>
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("user_id"), col("ts"),
@@ -623,7 +612,7 @@ object Streams {
     * immaterial. */
   def q222StreamQuota(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = freshDir("graft-q222")
+    val root = graft.Scratch.perQuery("graft-q222")
     val in = stageOnce(spark, "q222in", sfDir) { dir =>
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("event_id"), col("user_id"), col("value"))
@@ -631,7 +620,7 @@ object Streams {
       // orders by modification time (latestFirst=false), so the replay
       // order is pinned, not left to directory-listing luck
       def stageBatch(df: DataFrame, name: String, mtime: Long): Unit = {
-        val tmp = freshDir("graft-q222-stage")
+        val tmp = graft.Scratch.perQuery("graft-q222-stage")
         df.coalesce(1).write.parquet(s"$tmp/p")
         val part = new java.io.File(s"$tmp/p").listFiles()
           .filter(f => f.getName.startsWith("part-") &&
@@ -803,7 +792,7 @@ object Streams {
   def q249StreamCdc(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import graft.functions.StableHash
-    val root = freshDir("graft-q249")
+    val root = graft.Scratch.perQuery("graft-q249")
     val in = stageOnce(spark, "q249in", sfDir) { dir =>
       val h = pmod(StableHash.intMix62(col("event_id"), 41L), lit(10L))
       val log = graft.Tables.events(spark, sfDir)
@@ -811,7 +800,7 @@ object Streams {
           unix_micros(col("ts")).as("ts_us"), col("value"),
           when(h === 0L, "D").when(h <= 2L, "I").otherwise("U").as("op"))
       def stageBatch(df: DataFrame, name: String, mtime: Long): Unit = {
-        val tmp = freshDir("graft-q249-stage")
+        val tmp = graft.Scratch.perQuery("graft-q249-stage")
         df.coalesce(1).write.parquet(s"$tmp/p")
         val part = new java.io.File(s"$tmp/p").listFiles()
           .filter(f => f.getName.startsWith("part-") &&
@@ -930,7 +919,7 @@ object Streams {
     * map-side before any shuffle. The staging rank is a test-fixture
     * device, not part of the operator. */
   def q259StreamLate(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = freshDir("graft-q259")
+    val root = graft.Scratch.perQuery("graft-q259")
     val k = LateBatches
     val in = stageOnce(spark, "q259in", sfDir) { dir =>
       val ev = graft.Tables.events(spark, sfDir)
@@ -938,7 +927,7 @@ object Streams {
       val n = ev.count()
       val ranked = lateBatchSplit(ev, n, k)
       def stageBatch(df: DataFrame, name: String, mtime: Long): Unit = {
-        val tmp = freshDir("graft-q259-stage")
+        val tmp = graft.Scratch.perQuery("graft-q259-stage")
         df.coalesce(1).write.parquet(s"$tmp/p")
         val part = new java.io.File(s"$tmp/p").listFiles()
           .filter(f => f.getName.startsWith("part-") &&

@@ -2,8 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.AuditSweep
-
 /** Ledger-wide scale-audit census — the closing pin for the r7/r8
   * scale-killer families. BenchContractSpec pins the historically weak
   * queries one by one; this spec runs BOTH static audits
@@ -26,8 +24,10 @@ import graft.plans.AuditSweep
   * q110/q148/q238's vocab joins, q151's dfreq+dl, q159, q160, q173) and
   * AQE's runtime sizing decides for them now.
   *
-  * The sweep builds plans with lineage cuts ACTIVE — it audits each
-  * query exactly as registered and executed (iterative queries execute
+  * Both ledger censuses read the one ledger walk (`SparkSuite.ledger`,
+  * [[graft.plans.AuditSweep.walk]]), which also backs OperatorSpec's run
+  * check: each query is built once, with lineage cuts ACTIVE — it is
+  * audited exactly as registered and executed (iterative queries execute
   * their bounded sf0.001 loops during construction; that is the price
   * of seeing the real plan).
   */
@@ -177,7 +177,7 @@ class AuditSweepSpec extends AnyFunSuite {
     // The r10 two-path cappedClusterJoin (and r11's probe-selected plain
     // regime) intentionally read the same side frames from multiple
     // branches. This pin runs the RecomputeAudit over the family at the
-    // audit's production threshold (minCost = 2, the main's default) and
+    // audit's production threshold (minCost = 2, the ledger walk's) and
     // asserts ZERO duplicated shuffle-bearing subtrees: every diamond
     // must sit under an InMemoryRelation (persisted-or-reused), not
     // re-derive pair joins per consumer. Asserted for the registered
@@ -187,11 +187,7 @@ class AuditSweepSpec extends AnyFunSuite {
     def dupsOf(mk: => org.apache.spark.sql.DataFrame): Seq[String] =
       try graft.plans.RecomputeAudit.duplicates(mk, minCost = 2)
         .map(d => s"${d.occurrences}x ${d.root} (cost ${d.cost})")
-      finally {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-      }
+      finally Sessions.release(spark)
     Seq("q268_semdedup", "q272_incr_semdedup", "q273_cluster_prune",
       "q274_semdedup_capped").foreach { name =>
       val dups = dupsOf(graft.SparkEntry.queries(name)(spark, SparkSuite.sf))
@@ -285,16 +281,12 @@ class AuditSweepSpec extends AnyFunSuite {
     // A/B'd to date measured wash-or-regression, so that class stays
     // report-only.
     import graft.plans.RecomputeAudit
-    val findings = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .flatMap { case (name, fn) =>
-        try RecomputeAudit.duplicates(fn(spark, SparkSuite.sf), minCost = 3)
-          .map(d => (name, d.root, d.occurrences, d.cost))
-        finally {
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-        }
-      }
+    val findings = SparkSuite.ledger.flatMap { w =>
+      // a query whose plan could not be built is unaudited, not clean
+      w.findings.find(_.kind == "build-error").foreach(e =>
+        fail(s"recompute census: ${w.query} did not build: ${e.detail}"))
+      w.dups.filter(_.cost >= 3).map(d => (w.query, d.root, d.occurrences, d.cost))
+    }
     val waived = RecomputeAudit.measuredRejections.filter(_.cost >= 3)
       .map(w => (w.query, w.root, w.occurrences, w.cost))
     val unexamined = findings.diff(waived)
@@ -310,7 +302,7 @@ class AuditSweepSpec extends AnyFunSuite {
 
   test("ledger sweep: audit findings across all registered queries " +
     "match the bounded-frame census exactly") {
-    val findings = AuditSweep.sweep(spark, SparkSuite.sf)
+    val findings = SparkSuite.ledger.flatMap(_.findings)
     val errors = findings.filter(_.kind == "build-error")
     assert(errors.isEmpty, s"queries failed to build: $errors")
     val counts = findings.groupBy(f => (f.query, f.kind))

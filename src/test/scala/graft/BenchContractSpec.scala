@@ -266,17 +266,11 @@ class BenchContractSpec extends AnyFunSuite {
     def nested(r: InMemoryRelation): Seq[InMemoryRelation] =
       r +: scans(r.cacheBuilder.cachedPlan).flatMap(nested)
     def distinctCaches(name: String): Int = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Sessions.release(spark)
       try df(name).queryExecution.optimizedPlan.collect {
         case i: InMemoryRelation => nested(i)
       }.flatten.map(_.canonicalized).distinct.size
-      finally {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-      }
+      finally Sessions.release(spark)
     }
     val expected = Seq(
       ("q268_semdedup", 2, "assignment members + member-embedding join " +

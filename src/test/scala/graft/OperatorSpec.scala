@@ -19,14 +19,11 @@ class OperatorSpec extends AnyFunSuite {
     // timestamp_ntz), this assertion lists the full blast radius in one
     // message instead of letting broken queries masquerade as "omitted"
     // rows in the correctness artifact.
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try {
-          if (fn(spark, sf).count() > 0) None else Some(s"$name: 0 rows")
-        } catch {
-          case e: Throwable =>
-            Some(s"$name: ${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).linesIterator.take(1).mkString}")
-        }
+    val failures = SparkSuite.ledger.flatMap { w =>
+      w.rows match {
+        case Right(n) => if (n > 0) None else Some(s"${w.query}: 0 rows")
+        case Left(err) => Some(s"${w.query}: $err")
+      }
     }
     assert(failures.isEmpty,
       s"${failures.size} of ${SparkEntry.queries.size} queries broken:\n  " +

@@ -346,9 +346,7 @@ class SimilaritySpec extends AnyFunSuite
     assert(acct.getLong(5) > 0L, "the forced cap must skip real pairs")
     assert(acct.getLong(4) <= 5L * 240L,
       "generated pairs are bounded by cap·n — the O(n^1.5) device")
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-    spark.catalog.clearCache()
+    Sessions.release(spark)
   }
 
   test("q271 hierarchical assignment: partition + sample conservation; " +
@@ -454,9 +452,7 @@ class SimilaritySpec extends AnyFunSuite
       .collect().map(_.getLong(2)).sum
     assert(dropsAll === out.head.getLong(1),
       "the exact column must match the uncapped operator's total drops")
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+    Sessions.release(spark)
   }
 
   test("q277 probe agreement equals q271's audit columns cell by cell " +

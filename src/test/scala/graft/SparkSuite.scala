@@ -13,6 +13,12 @@ object SparkSuite {
 
   val sf: String = "/root/testdata/sf0.001"
 
+  /** The one ledger walk ([[graft.plans.AuditSweep.walk]]) over `sf`,
+    * taken by whichever of its three readers runs first: OperatorSpec's
+    * run check and AuditSweepSpec's two censuses. */
+  lazy val ledger: Seq[graft.plans.AuditSweep.Walked] =
+    graft.plans.AuditSweep.walk(session, sf)
+
   /** Spark jobs started while `body` runs. The listener bus is
     * asynchronous but ordered, so once a marker job submitted after `body`
     * has been seen, every job `body` started has been counted. */

@@ -9,7 +9,7 @@ than in-suite (cold JIT, no shared warmup) and therefore argue past the
 driver's in-suite numbers. This harness replays the driver's EXACT
 protocol instead: one `graft.Bench` process per run (same query order,
 same single JVM across the whole ledger, same confs — sf0.1,
-SPARK_GRAFT_CPUS=32, min-of-2 noop-sink executions per query, the
+min-of-2 noop-sink executions per query, the
 between-query unpersist hygiene), N independent runs, and aggregates
 per-query median / min / max / relative spread. A driver reading outside
 [min, max] of this distribution is a genuine anomaly; inside it is
@@ -17,7 +17,8 @@ in-suite variance, adjudicated without another isolates campaign.
 
 Usage: python3 tools/suite_variance.py [runs] [outfile]
        (defaults: 3, SUITE_VARIANCE.json; set SPARK_GRAFT_SF_DIR to
-       override the sf0.1 fixture dir)
+       override the sf0.1 fixture dir; the runs use SPARK_GRAFT_CPUS,
+       else every CPU this process may run on, and record the count)
 
 Output: one JSON object with per-query {median,min,max,spread} for both
 the timed and nosort passes, plus per-run totals and the run protocol.
@@ -32,13 +33,14 @@ RUNS = int(sys.argv[1]) if len(sys.argv) > 1 else 3
 OUT = sys.argv[2] if len(sys.argv) > 2 else "SUITE_VARIANCE.json"
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 
 
 def one_run(i: int) -> dict:
     detail = f"/tmp/suite_variance_run{i}.json"
     env = dict(os.environ,
                SPARK_GRAFT_SF_DIR=SF_DIR,
-               SPARK_GRAFT_CPUS="32",
+               SPARK_GRAFT_CPUS=CPUS,
                SPARK_GRAFT_DETAIL_OUT=detail)
     log = f"/tmp/suite_variance_run{i}.log"
     with open(log, "w") as lf:
@@ -75,7 +77,7 @@ def main() -> None:
         "protocol": {
             "runs": RUNS,
             "sf_dir": SF_DIR,
-            "cpus": 32,
+            "cpus": int(CPUS),
             "form": "graft.Bench full ledger, one fresh JVM per run, "
                     "driver order/confs, min-of-2 noop-sink per query",
         },
