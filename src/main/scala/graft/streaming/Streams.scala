@@ -2,10 +2,11 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 
 /** Structured Streaming surface — SURVEY.md §2.8.
   *
@@ -20,24 +21,109 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * O(files), not O(rows); windowed aggregation state is bounded by the
   * watermark horizon × group cardinality; the sessionizer keeps one small
   * state record per active key and emits+evicts on event-time timeout.
+  *
+  * Every stream here runs through one start/await core, [[runAvailableNow]];
+  * the registered queries (q119, q125, q136, q219, q222, q227, q249, q259)
+  * reach it through [[drain]], which owns their sink, checkpoint, scoped
+  * state confs and read-back. Inputs whose batch boundaries are part of the
+  * semantics stage through [[stageFiles]].
   */
 object Streams {
+
+  /** The one start/await core: run `stream` with its checkpoint at
+    * `checkpoint` as an AvailableNow drain (everything present at start, in
+    * as many micro-batches as the source's limits make, then stop), with
+    * the sink `sink` configures. `confs` hold on the session only while
+    * the query starts and runs; each key is restored in `finally`, unset
+    * if it was unset, so a stream that fails to start or to run leaves
+    * the session as it found it. */
+  private def runAvailableNow(stream: DataFrame, checkpoint: String,
+      outputMode: String, confs: Map[String, String])(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
+    val spark = stream.sparkSession
+    val set = spark.conf.getAll
+    val prev = confs.keys.toList.map(k => k -> set.get(k))
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      sink(stream.writeStream.outputMode(outputMode)
+          .option("checkpointLocation", checkpoint)
+          .trigger(Trigger.AvailableNow()))
+        .start().awaitTermination()
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  /** Drain a registered streaming query into a fresh
+    * [[graft.Scratch.perQuery]] dir (`out` and `cp` under
+    * `graft-<name>…`) and read the output back with the stream's schema.
+    * `append` writes the parquet file sink; `update` appends each
+    * micro-batch's rows through foreachBatch, because the file sink takes
+    * append only.
+    *
+    * State confs, set here only: a stateful operator keeps one state store
+    * per shuffle partition, and each store commits a checkpoint file every
+    * micro-batch. So the stream runs at 8 shuffle partitions, sized to its
+    * state rather than to the session's CPU-matched batch default, which
+    * bounds that fixed per-batch cost at any core count. Each drain starts
+    * a fresh checkpoint, so the count is free to differ from other runs,
+    * and results are partitioning-blind (watermarks are global, state is
+    * keyed; a stateless stream has no shuffle to size). A plan holding a
+    * `TransformWithState` node also gets the RocksDB state store that
+    * operator requires, with changelog checkpointing: each micro-batch
+    * commits per-partition deltas instead of uploading a full snapshot. */
+  private[graft] def drain(stream: Dataset[_], name: String,
+      outputMode: String = "append"): DataFrame = {
+    val root = graft.Scratch.perQuery(s"graft-$name")
+    val out = s"$root/out"
+    val rocksDb =
+      if (stream.queryExecution.analyzed.exists(_.isInstanceOf[TransformWithState]))
+        Map("spark.sql.streaming.stateStore.providerClass" ->
+            ("org.apache.spark.sql.execution.streaming.state." +
+              "RocksDBStateStoreProvider"),
+          ("spark.sql.streaming.stateStore.rocksdb." +
+            "changelogCheckpointing.enabled") -> "true")
+      else Map.empty[String, String]
+    runAvailableNow(stream.toDF(), s"$root/cp", outputMode,
+        Map("spark.sql.shuffle.partitions" -> "8") ++ rocksDb) { w =>
+      if (outputMode == "append") w.format("parquet").option("path", out)
+      else w.foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode("append").parquet(out)
+      }
+    }
+    graft.Tables.parquet(stream.sparkSession, out, stream.schema)
+  }
+
+  /** Stage `batches` under `dir` as one parquet file each, `b<i>.parquet`,
+    * with mtimes 60 s apart, oldest first. FileStreamSource orders files by
+    * modification time (latestFirst=false), so a drain with
+    * `maxFilesPerTrigger=1` replays them as exactly one micro-batch each,
+    * in order: the batch boundaries are pinned, not left to
+    * directory-listing luck. */
+  private[graft] def stageFiles(dir: String, batches: Seq[DataFrame]): Unit = {
+    val tmp = graft.Scratch.perQuery("graft-stage")
+    val base = System.currentTimeMillis() - 600000L
+    batches.zipWithIndex.foreach { case (df, i) =>
+      df.coalesce(1).write.parquet(s"$tmp/b$i")
+      val part = new java.io.File(s"$tmp/b$i").listFiles()
+        .filter(f => f.getName.startsWith("part-") &&
+          f.getName.endsWith(".parquet")).head
+      val dst = java.nio.file.Paths.get(dir, s"b$i.parquet")
+      java.nio.file.Files.move(part.toPath, dst)
+      dst.toFile.setLastModified(base + i * 60000L): scala.Unit
+    }
+  }
 
   /** Incremental exactly-once ingestion: process whatever files have arrived
     * under `srcDir` since the last checkpoint, append to `destDir`, stop.
     * Run per schedule tick — the reference's monthly DAG run
     * (`save_nyc_data_to_s3.py:51-56`) becomes one AvailableNow drain. */
   def ingestAvailableNow(spark: SparkSession, srcDir: String, schema: StructType,
-      destDir: String, checkpoint: String): StreamingQuery = {
-    val q = spark.readStream.schema(schema).parquet(srcDir)
-      .writeStream.format("parquet")
-      .option("path", destDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      destDir: String, checkpoint: String): Unit =
+    runAvailableNow(spark.readStream.schema(schema).parquet(srcDir),
+        checkpoint, "append", Map.empty)(
+      _.format("parquet").option("path", destDir))
 
   /** Watermarked tumbling-window counts/sums per event type — the streaming
     * twin of [[graft.ops.Events.q60WindowTumbling]] (same expressions, plus
@@ -112,11 +198,9 @@ object Streams {
     * file-format simplicity (a table format with row-level merge amortizes
     * it — the operator shape is unchanged). */
   def upsertStream(changes: DataFrame, key: String, payload: String,
-      tsCol: String, snapshotDir: String, checkpoint: String): StreamingQuery = {
-    val q = changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      tsCol: String, snapshotDir: String, checkpoint: String): Unit =
+    runAvailableNow(changes, checkpoint, "append", Map.empty) {
+      _.foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
         import org.apache.spark.sql.expressions.Window
         // latest-wins needs a TOTAL order: ties on tsCol break on the
@@ -158,10 +242,7 @@ object Streams {
         require(fs.rename(next, dst), "snapshot swap rename failed")
         ()
       }
-      .start()
-    q.awaitTermination()
-    q
-  }
+    }
 
   /** Stream-static dimension enrichment: every micro-batch joins against
     * the static frame — the streaming read side of the warehouse dim tables
@@ -310,16 +391,6 @@ object Streams {
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
   }
-  /** q119_stream_join — run [[streamIntervalJoin]] end-to-end as a real
-    * streaming query and hash-check the result against the batch range
-    * join. The events fixture splits into two file-source streams (views
-    * as "impressions" keyed by user, purchases as "clicks"); AvailableNow
-    * drains each side in a single batch, so the watermark drops nothing
-    * and the inner join's output equals the batch join the oracle
-    * computes — the state-eviction machinery still runs (both sides are
-    * watermarked and the predicate carries the time bound), it just never
-    * fires inside one batch. Same eager write-then-read structure as the
-    * q04 pipeline. */
   /** Temp dirs of already-staged stream INPUTS, keyed by fixture and the
     * source's file version ([[graft.Tables.fileInventory]] of the events
     * fixture every staged input derives from): the registered streaming
@@ -341,8 +412,17 @@ object Streams {
       dir.toString
     })
 
+  /** q119_stream_join — run [[streamIntervalJoin]] end-to-end as a real
+    * streaming query and hash-check the result against the batch range
+    * join. The events fixture splits into two file-source streams (views
+    * as "impressions" keyed by user, purchases as "clicks"); AvailableNow
+    * drains each side in a single batch, so the watermark drops nothing
+    * and the inner join's output equals the batch join the oracle
+    * computes — the state-eviction machinery still runs (both sides are
+    * watermarked and the predicate carries the time bound), it just never
+    * fires inside one batch. Same eager write-then-read structure as the
+    * q04 pipeline. */
   def q119StreamJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = graft.Scratch.perQuery("graft-q119")
     // the helper's contract: impressions(imp_id, imp_ts), clicks keyed by
     // click_imp_id — here the attribution key is the user
     val in = stageOnce(spark, "q119in", sfDir) { dir =>
@@ -358,29 +438,13 @@ object Streams {
     }
     val vSchema = graft.Tables.parquet(spark, s"$in/views").schema
     val bSchema = graft.Tables.parquet(spark, s"$in/buys").schema
-    val joined = streamIntervalJoin(
+    drain(streamIntervalJoin(
       spark.readStream.schema(vSchema).parquet(s"$in/views"),
       spark.readStream.schema(bSchema).parquet(s"$in/buys"),
       maxDelaySeconds = 3600L, watermark = "60 minutes")
       .select(col("imp_id").as("user_id"), col("view_id"), col("buy_id"),
         (unix_micros(col("click_ts")) - unix_micros(col("imp_ts")))
-          .as("gap_us"))
-    // A stateful streaming op instantiates per-partition state stores
-    // (several per join side), each with checkpoint file traffic every
-    // batch — size the partition count to the STATE, not to the batch
-    // shuffle default (32 here). Fresh checkpoint per invocation, so the
-    // count is free to differ between runs.
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      joined.writeStream.format("parquet")
-        .option("path", s"$root/out")
-        .option("checkpointLocation", s"$root/cp")
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    graft.Tables.parquet(spark, s"$root/out", joined.schema)
+          .as("gap_us")), "q119")
       .orderBy(col("view_id"), col("buy_id"))
   }
 
@@ -402,7 +466,6 @@ object Streams {
     * the watermark evicts nothing and the key set equals the oracle's
     * SELECT DISTINCT. */
   def q125StreamDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = graft.Scratch.perQuery("graft-q125")
     val in = stageOnce(spark, "q125in", sfDir) { dir =>
       graft.Tables.events(spark, sfDir)
         .select(col("ts"), col("user_id"), col("event_type"),
@@ -410,24 +473,10 @@ object Streams {
         .coalesce(1).write.parquet(s"$dir/in")
     }
     val schema = graft.Tables.parquet(spark, s"$in/in").schema
-    val deduped = dedupStream(
+    drain(dedupStream(
         spark.readStream.schema(schema).parquet(s"$in/in"),
         Seq("user_id", "event_type", "day"), "ts")
-      .select(col("user_id"), col("event_type"), col("day"))
-    // state-sized partition count, scoped to the stream (q119's note):
-    // dedup keeps one store PER PARTITION, and each commits a delta file
-    // every batch — 8 bounds that fixed cost at any core count
-    val prevPart = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      deduped.writeStream.format("parquet")
-        .option("path", s"$root/out")
-        .option("checkpointLocation", s"$root/cp")
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevPart)
-    graft.Tables.parquet(spark, s"$root/out", deduped.schema)
+      .select(col("user_id"), col("event_type"), col("day")), "q125")
       .orderBy(col("user_id"), col("event_type"), col("day"))
   }
 
@@ -444,7 +493,6 @@ object Streams {
     * every window finalizes and the result equals q60's batch aggregate —
     * which is exactly the oracle used here. */
   def q136StreamWindow(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = graft.Scratch.perQuery("graft-q136")
     val in = stageOnce(spark, "q136in", sfDir) { dir =>
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("ts"), col("event_type"), col("value"))
@@ -462,21 +510,8 @@ object Streams {
       ev.unionByName(flush).coalesce(1).write.parquet(s"$dir/in")
     }
     val schema = graft.Tables.parquet(spark, s"$in/in").schema
-    val counts =
-      windowedCounts(spark.readStream.schema(schema).parquet(s"$in/in"))
-    // state-sized partition count, scoped to the stream — q259's note
-    val prevPart = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      counts.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", s"$root/out")
-        .option("checkpointLocation", s"$root/cp")
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevPart)
-    graft.Tables.parquet(spark, s"$root/out", counts.schema)
+    drain(windowedCounts(spark.readStream.schema(schema).parquet(s"$in/in")),
+        "q136")
       .filter(col("event_type") =!= "__flush")
       .orderBy(col("window_start"), col("event_type"))
   }
@@ -499,7 +534,6 @@ object Streams {
     * changing dims on restart) — a dimension past broadcast size belongs
     * in a stream-stream changelog join (q119's shape) instead. */
   def q227StreamEnrich(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = graft.Scratch.perQuery("graft-q227")
     val in = stageOnce(spark, "q227in", sfDir) { dir =>
       graft.Tables.events(spark, sfDir)
         .select(col("event_id"), col("user_id"))
@@ -509,15 +543,9 @@ object Streams {
     val dim = graft.Tables.customer(spark, sfDir)
       .select(col("c_custkey").as("user_id"), col("c_nationkey"),
         col("c_mktsegment"))
-    val enriched = streamStaticEnrich(
-      spark.readStream.schema(schema).parquet(s"$in/in"), dim, "user_id")
-    enriched.writeStream.format("parquet")
-      .option("path", s"$root/out")
-      .option("checkpointLocation", s"$root/cp")
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
-    graft.Tables.parquet(spark, s"$root/out", enriched.schema)
+    drain(streamStaticEnrich(
+        spark.readStream.schema(schema).parquet(s"$in/in"), dim, "user_id"),
+        "q227")
       .select(col("event_id"), col("user_id"), col("c_nationkey"),
         col("c_mktsegment"))
       .orderBy(col("event_id"))
@@ -547,7 +575,6 @@ object Streams {
   def q219StreamSessions(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     implicit val sp: SparkSession = spark
-    val root = graft.Scratch.perQuery("graft-q219")
     val in = stageOnce(spark, "q219in", sfDir) { dir =>
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("user_id"), col("ts"),
@@ -562,21 +589,7 @@ object Streams {
     val src = spark.readStream.schema(schema).parquet(s"$in/in")
       .withWatermark("ts", "0 seconds")
       .as[Ev]
-    // one small state machine per user: size partitions to the state
-    // (same rationale as q119's note)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val sessions = sessionize(src, gapMinutes = 30)
-    try {
-      sessions.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", s"$root/out")
-        .option("checkpointLocation", s"$root/cp")
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    graft.Tables.parquet(spark, s"$root/out", sessions.schema)
+    drain(sessionize(src, gapMinutes = 30), "q219")
       .filter(col("user_id") =!= -1L)
       .select(col("user_id"), col("session_start"), col("session_end"),
         col("n_events"), col("sum_value").cast("long").as("sum_cents"))
@@ -612,75 +625,19 @@ object Streams {
     * immaterial. */
   def q222StreamQuota(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = graft.Scratch.perQuery("graft-q222")
     val in = stageOnce(spark, "q222in", sfDir) { dir =>
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("event_id"), col("user_id"), col("value"))
-      // one physical file per phase, mtimes 60 s apart: FileStreamSource
-      // orders by modification time (latestFirst=false), so the replay
-      // order is pinned, not left to directory-listing luck
-      def stageBatch(df: DataFrame, name: String, mtime: Long): Unit = {
-        val tmp = graft.Scratch.perQuery("graft-q222-stage")
-        df.coalesce(1).write.parquet(s"$tmp/p")
-        val part = new java.io.File(s"$tmp/p").listFiles()
-          .filter(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(dir, name)
-        java.nio.file.Files.move(part.toPath, dst)
-        dst.toFile.setLastModified(mtime): scala.Unit
-      }
-      val base = System.currentTimeMillis() - 600000L
-      stageBatch(ev.filter(col("event_id") % 2 === 0)
-        .select(col("user_id"), col("value")), "b0.parquet", base)
-      stageBatch(ev.filter(col("event_id") % 2 =!= 0)
-        .select(col("user_id"), col("value")), "b1.parquet", base + 60000L)
+      stageFiles(dir, Seq(ev.filter(col("event_id") % 2 === 0),
+          ev.filter(col("event_id") % 2 =!= 0))
+        .map(_.select(col("user_id"), col("value"))))
     }
     val schema = graft.Tables.parquet(spark, in).schema
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(in)
       .select(col("user_id").as("_1"), col("value").as("_2"))
       .as[(Long, Double)]
-    // transformWithState requires the RocksDB state store; quota state is
-    // one long per user — size partitions to it (q119's rationale). Both
-    // switches scoped and restored.
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    val prevPart = spark.conf.get("spark.sql.shuffle.partitions")
-    // changelog checkpointing: commit per-batch DELTAS instead of a full
-    // RocksDB snapshot upload per partition per micro-batch — the
-    // remaining fixed cost of the transformWithState pair (guide §1/§2.4;
-    // r15's deferred A/B, kept on the r16 measurement)
-    val clKey = "spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled"
-    val prevCl = spark.conf.getOption(clKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set(clKey, "true")
-    try {
-      quotaEnforce(src, StreamQuota)
-        .writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: Dataset[QuotaUpdate], _: Long) =>
-          batch.write.mode("append").parquet(s"$root/out")
-        }
-        .option("checkpointLocation", s"$root/cp")
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevPart)
-      prevProv match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None    => spark.conf.unset(provKey)
-      }
-      prevCl match {
-        case Some(v) => spark.conf.set(clKey, v)
-        case None    => spark.conf.unset(clKey)
-      }
-    }
-    graft.Tables.parquet(spark, s"$root/out",
-        org.apache.spark.sql.Encoders.product[QuotaUpdate].schema)
+    drain(quotaEnforce(src, StreamQuota), "q222", "update")
       .select(col("key"), col("arrived"), col("accepted"), col("dropped"),
         col("total"))
       .orderBy(col("key"), col("total"), col("arrived"),
@@ -792,27 +749,14 @@ object Streams {
   def q249StreamCdc(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import graft.functions.StableHash
-    val root = graft.Scratch.perQuery("graft-q249")
     val in = stageOnce(spark, "q249in", sfDir) { dir =>
       val h = pmod(StableHash.intMix62(col("event_id"), 41L), lit(10L))
       val log = graft.Tables.events(spark, sfDir)
         .select(col("event_id"), col("user_id"),
           unix_micros(col("ts")).as("ts_us"), col("value"),
           when(h === 0L, "D").when(h <= 2L, "I").otherwise("U").as("op"))
-      def stageBatch(df: DataFrame, name: String, mtime: Long): Unit = {
-        val tmp = graft.Scratch.perQuery("graft-q249-stage")
-        df.coalesce(1).write.parquet(s"$tmp/p")
-        val part = new java.io.File(s"$tmp/p").listFiles()
-          .filter(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(dir, name)
-        java.nio.file.Files.move(part.toPath, dst)
-        dst.toFile.setLastModified(mtime): scala.Unit
-      }
-      val base = System.currentTimeMillis() - 600000L
-      stageBatch(log.filter(col("event_id") % 2 === 0), "b0.parquet", base)
-      stageBatch(log.filter(col("event_id") % 2 =!= 0), "b1.parquet",
-        base + 60000L)
+      stageFiles(dir, Seq(log.filter(col("event_id") % 2 === 0),
+        log.filter(col("event_id") % 2 =!= 0)))
     }
     val schema = graft.Tables.parquet(spark, in).schema
     val src = spark.readStream.schema(schema)
@@ -820,45 +764,11 @@ object Streams {
       .select(col("user_id").as("_1"), col("ts_us").as("_2"),
         col("event_id").as("_3"), col("op").as("_4"), col("value").as("_5"))
       .as[(Long, Long, Long, String, Double)]
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    val prevPart = spark.conf.get("spark.sql.shuffle.partitions")
-    // changelog checkpointing — see the q222 note
-    val clKey = "spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled"
-    val prevCl = spark.conf.getOption(clKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set(clKey, "true")
-    try {
-      src.groupByKey(_._1)
+    import org.apache.spark.sql.expressions.Window
+    drain(src.groupByKey(_._1)
         .transformWithState(new CdcProcessor(),
           org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update())
-        .writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: Dataset[CdcUpdate], _: Long) =>
-          batch.write.mode("append").parquet(s"$root/out")
-        }
-        .option("checkpointLocation", s"$root/cp")
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevPart)
-      prevProv match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None    => spark.conf.unset(provKey)
-      }
-      prevCl match {
-        case Some(v) => spark.conf.set(clKey, v)
-        case None    => spark.conf.unset(clKey)
-      }
-    }
-    import org.apache.spark.sql.expressions.Window
-    graft.Tables.parquet(spark, s"$root/out",
-        org.apache.spark.sql.Encoders.product[CdcUpdate].schema)
+          OutputMode.Update()), "q249", "update")
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("key")).orderBy(col("n_ops").desc)))
       .filter(col("rn") === 1)
@@ -919,62 +829,27 @@ object Streams {
     * map-side before any shuffle. The staging rank is a test-fixture
     * device, not part of the operator. */
   def q259StreamLate(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = graft.Scratch.perQuery("graft-q259")
     val k = LateBatches
     val in = stageOnce(spark, "q259in", sfDir) { dir =>
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("ts"), col("event_type"), col("value"), col("event_id"))
       val n = ev.count()
       val ranked = lateBatchSplit(ev, n, k)
-      def stageBatch(df: DataFrame, name: String, mtime: Long): Unit = {
-        val tmp = graft.Scratch.perQuery("graft-q259-stage")
-        df.coalesce(1).write.parquet(s"$tmp/p")
-        val part = new java.io.File(s"$tmp/p").listFiles()
-          .filter(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(dir, name)
-        java.nio.file.Files.move(part.toPath, dst)
-        dst.toFile.setLastModified(mtime): scala.Unit
-      }
-      val base = System.currentTimeMillis() - 600000L
-      for (b <- 0 until k) {
+      stageFiles(dir, (0 until k).map { b =>
         val part = ranked.filter(col("batch") === b)
           .select(col("ts"), col("event_type"), col("value"))
-        val withFlush =
-          if (b == k - 1)
-            part.unionByName(ev.agg(max(col("ts")).as("m"))
-              .select(expr("m + INTERVAL '10' HOUR").as("ts"),
-                lit("__flush").as("event_type"), lit(0.0).as("value")))
-          else part
-        stageBatch(withFlush, s"b$b.parquet", base + b * 60000L)
-      }
+        if (b == k - 1)
+          part.unionByName(ev.agg(max(col("ts")).as("m"))
+            .select(expr("m + INTERVAL '10' HOUR").as("ts"),
+              lit("__flush").as("event_type"), lit(0.0).as("value")))
+        else part
+      })
     }
     val schema = graft.Tables.parquet(spark, in).schema
-    // State-sized partitioning (q119's rationale): the windowed aggregate
-    // keeps hours-in-horizon × |event_type| rows of state, but every
-    // micro-batch commits one state-store delta file PER PARTITION — at
-    // the session default (= cores) that is cores × LateBatches checkpoint
-    // commits for a handful of state rows. 8 partitions bounds the fixed
-    // per-batch store/commit overhead at any core count; the conf is
-    // scoped to the stream and restored (results are partitioning-blind:
-    // the watermark is global and the aggregate is keyed). Set AFTER
-    // staging so the one-time fixture build keeps the session's sizing.
-    val prevPart = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val counts = windowedCounts(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(in),
-      "1 hour", s"$LateDelayMin minutes")
-    try {
-      counts.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", s"$root/out")
-        .option("checkpointLocation", s"$root/cp")
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevPart)
-    graft.Tables.parquet(spark, s"$root/out", counts.schema)
+    drain(windowedCounts(
+        spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(in),
+        "1 hour", s"$LateDelayMin minutes"), "q259")
       .filter(col("event_type") =!= "__flush")
       .orderBy(col("window_start"), col("event_type"))
   }

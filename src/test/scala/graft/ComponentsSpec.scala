@@ -47,7 +47,7 @@ class ComponentsSpec extends AnyFunSuite {
     // from localCheckpoint to reliable checkpoints (the executor-loss-safe
     // cluster mode). Prove the switch actually engages (rdd-* dirs appear
     // under the configured path) and the result is the identical fixpoint.
-    val dir = java.nio.file.Files.createTempDirectory("graft-relcp").toString
+    val dir = Scratch.lasting("graft-relcp").toString
     spark.conf.set(graft.ops.Checkpoints.DirKey, dir)
     try {
       val out = components(0L until 16L, (0L until 15L).map(i => (i, i + 1)),

@@ -139,7 +139,7 @@ class CurationSpec extends AnyFunSuite
     val planted = Seq((100001L, targetText)).toDF("doc_id", "text")
     // the operator contract takes a table directory — drive the planted
     // frame through the same code path via a parquet tempdir
-    val dir = java.nio.file.Files.createTempDirectory("graft-dsir").toString
+    val dir = Scratch.lasting("graft-dsir").toString
     docs.unionAll(planted).write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     val scored = Curation.q270Dsir(spark, dir).collect()

@@ -129,7 +129,7 @@ class DedupSpec extends AnyFunSuite {
     import sp.implicits._
     val a = "alpha beta gamma delta epsilon zeta eta theta"
     val tail = (1 to 40).map(i => s"w$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("q248tiny").toString
+    val dir = Scratch.lasting("q248tiny").toString
     Seq((0L, a), (1L, a + " " + tail)).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val planted = ops.Dedup.q248Containment(spark, dir).collect()

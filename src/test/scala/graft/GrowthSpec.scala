@@ -41,7 +41,7 @@ class GrowthSpec extends AnyFunSuite {
     // "a aa b") AND the tie-break in one corpus.
     val docs = Seq((0L, "aaab aaab"), (1L, "aaab")).toDF("doc_id", "text")
       .withColumn("n_chars", org.apache.spark.sql.functions.length($"text"))
-    val dir = java.nio.file.Files.createTempDirectory("bpe").toString
+    val dir = Scratch.lasting("bpe").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = Text.q225BpeTrain(spark, dir).collect()
     val got = out.map(r => (r.getAs[Int]("round"), r.getAs[String]("tok_a"),

@@ -40,7 +40,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("q04 assembled pipeline: conform contract, idempotent re-run, pruning") {
-    val root = Files.createTempDirectory("graft_q04_spec").toString
+    val root = Scratch.lasting("graft_q04_spec").toString
     val conformed = ops.Pipeline.runTripPipeline(spark, SparkSuite.sf, root)
     // conform enforced the 13-column DDL (noise column dropped, types cast;
     // nullability is tighter where columns are literal-derived — fine)
@@ -67,7 +67,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("q04: every warehouse file and every construction keeps the DDL order") {
     val ddl = Schemas.fhvhvTripdata.fieldNames.toSeq
-    val root = Files.createTempDirectory("graft_q04_order").toString
+    val root = Scratch.lasting("graft_q04_order").toString
     ops.Pipeline.runTripPipeline(spark, SparkSuite.sf, root)
     // the guarded re-load appends an (empty) file too: both loads must
     // write the conformed order, or footer inference picks either
@@ -86,13 +86,13 @@ class PipelineSpec extends AnyFunSuite {
     import org.apache.spark.scheduler.{JobFailed, SparkListener,
       SparkListenerJobEnd, SparkListenerJobStart}
     // ~750k source trips, so the landing outlives the failed load
-    val sfDir = Files.createTempDirectory("graft_q04_fault_sf").toString
+    val sfDir = Scratch.lasting("graft_q04_fault_sf").toString
     Tables.orders(spark, SparkSuite.sf)
       .crossJoin(spark.range(500).withColumnRenamed("id", "rep"))
       .withColumn("o_orderkey", col("o_orderkey") * 1000 + col("rep"))
       .drop("rep")
       .write.parquet(s"$sfDir/orders.parquet")
-    val root = Files.createTempDirectory("graft_q04_fault").toString
+    val root = Scratch.lasting("graft_q04_fault").toString
     // a plain FILE where the warehouse directory must go: the load fails
     Files.createFile(java.nio.file.Paths.get(root, "warehouse"))
     val rawJobs = scala.collection.concurrent.TrieMap.empty[Int, Boolean]
@@ -126,7 +126,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("raw-zone writer produces a year-partitioned pruned layout") {
-    val root = Files.createTempDirectory("graft_rawzone").toString
+    val root = Scratch.lasting("graft_rawzone").toString
     val li = Tables.lineitem(spark, SparkSuite.sf)
     WarehouseSink.rawZoneAppend(li, root, "l_shipdate")
     // layout on disk is year=YYYY directories (the reference's raw/{year}/)
@@ -144,7 +144,7 @@ class PipelineSpec extends AnyFunSuite {
     // the 100 TB path: a dim filter known only at runtime prunes the
     // partitioned fact scan via a DPP subquery — without it every year
     // directory is read
-    val root = Files.createTempDirectory("graft_dpp").toString
+    val root = Scratch.lasting("graft_dpp").toString
     WarehouseSink.rawZoneAppend(Tables.lineitem(spark, SparkSuite.sf),
       root, "l_shipdate")
     val fact = spark.read.parquet(root)
@@ -182,8 +182,8 @@ class PipelineSpec extends AnyFunSuite {
 
   test("CSV and JSON round-trip lineitem losslessly through the readers") {
     val li = Tables.lineitem(spark, SparkSuite.sf)
-    val csvDir = Files.createTempDirectory("graft_csv").toString + "/data"
-    val jsonDir = Files.createTempDirectory("graft_json").toString + "/data"
+    val csvDir = Scratch.lasting("graft_csv").toString + "/data"
+    val jsonDir = Scratch.lasting("graft_json").toString + "/data"
     li.write.option("header", "true").csv(csvDir)
     li.write.json(jsonDir)
     val backCsv = graft.sources.Readers.csv(spark, csvDir, li.schema)
@@ -196,7 +196,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("Readers.ingest conforms any format to the fixed target schema") {
     val li = Tables.lineitem(spark, SparkSuite.sf)
-    val dir = Files.createTempDirectory("graft_ingest").toString + "/data"
+    val dir = Scratch.lasting("graft_ingest").toString + "/data"
     li.write.option("header", "true").csv(dir)
     val target = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("order_id",
@@ -220,11 +220,11 @@ class PipelineSpec extends AnyFunSuite {
       s"readStream schema must match the on-disk layout, got ${schema("ts").dataType.typeName}")
     // and it must actually work as a streaming source schema (the file
     // source requires a directory, so stage the fixture file into one)
-    val srcDir = Files.createTempDirectory("graft_ev_stream_src")
+    val srcDir = Scratch.lasting("graft_ev_stream_src")
     Files.copy(java.nio.file.Paths.get(s"${SparkSuite.sf}/events.parquet"),
       srcDir.resolve("events.parquet"))
-    val outDir = Files.createTempDirectory("graft_ev_stream_out").toString
-    val ckpt = Files.createTempDirectory("graft_ev_stream_ckpt").toString
+    val outDir = Scratch.lasting("graft_ev_stream_out").toString
+    val ckpt = Scratch.lasting("graft_ev_stream_ckpt").toString
     val q = sp.readStream.schema(schema)
       .parquet(srcDir.toString)
       .writeStream.format("parquet").option("path", outDir)
@@ -382,7 +382,7 @@ class PipelineSpec extends AnyFunSuite {
   }
   test("raw zone joins prune partitions dynamically from the dim filter") {
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("graft-dpp").toString
+    val root = Scratch.lasting("graft-dpp").toString
     sources.WarehouseSink.rawZoneAppend(
       Tables.lineitem(spark, SparkSuite.sf), root, "l_shipdate")
     // a dimension that names years only indirectly (filter on a non-key

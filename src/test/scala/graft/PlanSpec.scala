@@ -127,7 +127,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("bucketed pair join is exchange-free; plain-read join is not") {
-    val root = java.nio.file.Files.createTempDirectory("graft-bucket-plan")
+    val root = Scratch.lasting("graft-bucket-plan")
     // disable broadcast so the small sf fixture can't sidestep the shuffle
     // question with a BHJ — at 100 TB neither side broadcasts
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

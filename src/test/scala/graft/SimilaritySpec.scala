@@ -698,7 +698,7 @@ class SimilaritySpec extends AnyFunSuite
     // the stale decision. The memos are NOT cleared between the
     // resolves: the inventory alone must tell the snapshots apart.
     val src = Paths.get(SparkSuite.sf, "embeddings.parquet")
-    val dir = Files.createTempDirectory("graft-gate-memo")
+    val dir = Scratch.lasting("graft-gate-memo")
     val path = dir.resolve("embeddings.parquet")
     Files.copy(src, path)
     def corpus() = spark.read.parquet(path.toString)

@@ -195,7 +195,7 @@ class SketchGraphSpec extends AnyFunSuite {
     import sp.implicits._
     val tiny = Seq((0L, "s", "a b a b"), (1L, "s", "a c"))
       .toDF("doc_id", "source", "text")
-    val dir = java.nio.file.Files.createTempDirectory("q237tiny").toString
+    val dir = Scratch.lasting("q237tiny").toString
     tiny.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = ops.Text.q237BigramLm(spark, dir).collect().head
     def r6(x: Double) = math.rint(x * 1e6) / 1e6 // the DECIMAL(18,6) round

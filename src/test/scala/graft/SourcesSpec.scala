@@ -167,8 +167,7 @@ class SourcesSpec extends AnyFunSuite {
       ops.Pipeline.syntheticTripsRaw(spark, SparkSuite.sf),
       Schemas.fhvhvTripdata, Schemas.fhvhvRenames)
       .orderBy(col("dispatching_base_num")).limit(150)
-    val staging = java.nio.file.Files
-      .createTempDirectory("graft-staging").toString + "/batch1"
+    val staging = Scratch.lasting("graft-staging").toString + "/batch1"
     val n = WarehouseSink.stagedJdbcLoad(trips, staging, url,
       "trips_staged", props)
     assert(n === 150L)
@@ -187,7 +186,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("raw-zone compaction shrinks file counts without changing data") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("compact").toString
+    val root = Scratch.lasting("compact").toString
     // six small appends → six files per year partition
     (1 to 6).foreach { i =>
       WarehouseSink.rawZoneAppend(
@@ -241,7 +240,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("ORC round-trips lineitem losslessly through the ingest boundary") {
     val sp = SparkSuite.session
-    val dir = java.nio.file.Files.createTempDirectory("graft-orc")
+    val dir = Scratch.lasting("graft-orc")
       .toString + "/li"
     val li = Tables.lineitem(sp, SparkSuite.sf).limit(200)
     li.write.orc(dir)

@@ -1,11 +1,9 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Structured Streaming smoke tests — SURVEY.md §2.8: watermarked event-time
@@ -54,11 +52,10 @@ class StreamingSpec extends AnyFunSuite {
     // transformWithState requires the RocksDB state store; scope the
     // provider switch to this query and restore the session default after
     val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = sp.conf.getOption(key)
+    val prev = sp.conf.getAll.get(key)
     sp.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("tws_quota").toString
+    val ckpt = Scratch.lasting("tws_quota").toString
     val input = MemoryStream[(Long, Double)]
     val out = graft.streaming.Streams.quotaEnforce(input.toDS(), quota = 3L)
     val q = out.writeStream.outputMode("update")
@@ -196,7 +193,7 @@ class StreamingSpec extends AnyFunSuite {
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx = sp.sqlContext
-    val dir = Files.createTempDirectory("graft-upsert-").toString
+    val dir = Scratch.lasting("graft-upsert-").toString
     val changes = MemoryStream[(Long, String, Timestamp)]
     def run(): Unit = streaming.Streams.upsertStream(
       changes.toDF().toDF("k", "v", "ts"), "k", "v", "ts",
@@ -220,7 +217,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("q125 restages a fixture rewritten in place, never a stale copy") {
-    val sfDir = Files.createTempDirectory("graft_q125_fixture").toString
+    val sfDir = Scratch.lasting("graft_q125_fixture").toString
     val src = spark.read.parquet(s"${SparkSuite.sf}/events.parquet")
     def expected = Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_type"),
@@ -242,9 +239,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("AvailableNow file stream ingests each file exactly once") {
     val sp = spark
-    val srcDir = Files.createTempDirectory("graft_stream_src").toString
-    val ckpt = Files.createTempDirectory("graft_stream_ckpt").toString
-    val outDir = Files.createTempDirectory("graft_stream_out").toString
+    val srcDir = Scratch.lasting("graft_stream_src").toString
+    val ckpt = Scratch.lasting("graft_stream_ckpt").toString
+    val outDir = Scratch.lasting("graft_stream_out").toString
 
     def runOnce(): Unit = streaming.Streams.ingestAvailableNow(sp, srcDir,
       Tables.lineitem(sp, SparkSuite.sf).schema, outDir, ckpt)
@@ -334,37 +331,48 @@ class StreamingSpec extends AnyFunSuite {
     val sp = spark
     import sp.implicits._
     def t(s: Long) = new Timestamp(s * 1000L)
-    val dir = Files.createTempDirectory("graft-wmlag").toString
-    val base = System.currentTimeMillis() - 600000L
-    def stage(i: Int, rows: Seq[(Timestamp, String)]): Unit = {
-      val tmp = Files.createTempDirectory("graft-wmlag-stage").toString
-      rows.toDF("ts", "k").coalesce(1).write.parquet(s"$tmp/p")
-      val part = new java.io.File(s"$tmp/p").listFiles()
-        .filter(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet")).head
-      val dst = java.nio.file.Paths.get(dir, s"b$i.parquet")
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(base + i * 60000L): scala.Unit
-    }
-    stage(0, Seq((t(10000), "b0")))
-    stage(1, Seq((t(20000), "b1")))
-    stage(2, Seq((t(100), "lag2-late"), (t(19000), "lag1-late")))
-    stage(3, Seq((t(30000), "flush")))
+    val dir = Scratch.lasting("graft-wmlag").toString
+    streaming.Streams.stageFiles(dir, Seq(
+      Seq((t(10000), "b0")),
+      Seq((t(20000), "b1")),
+      Seq((t(100), "lag2-late"), (t(19000), "lag1-late")),
+      Seq((t(30000), "flush"))).map(_.toDF("ts", "k")))
     val schema = spark.read.parquet(dir).schema
-    val root = Files.createTempDirectory("graft-wmlag-out").toString
-    spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-      .withWatermark("ts", "0 seconds")
-      .groupBy(window(col("ts"), "10 seconds"), col("k"))
-      .agg(count(lit(1)).as("n"))
-      .writeStream.format("parquet").outputMode("append")
-      .option("path", s"$root/out")
-      .option("checkpointLocation", s"$root/cp")
-      .trigger(Trigger.AvailableNow()).start().awaitTermination()
-    val emitted = spark.read.parquet(s"$root/out")
-      .select(col("k")).collect().map(_.getString(0)).toSet
+    val out = streaming.Streams.drain(
+      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+        .parquet(dir)
+        .withWatermark("ts", "0 seconds")
+        .groupBy(window(col("ts"), "10 seconds"), col("k"))
+        .agg(count(lit(1)).as("n")), "wmlag")
+    val emitted = out.select(col("k")).collect().map(_.getString(0)).toSet
     assert(emitted === Set("b0", "b1", "lag1-late"),
       s"watermark lag semantics moved: emitted $emitted")
+  }
+
+  test("a drain that fails at run time restores the session's state confs") {
+    val sp = spark
+    import sp.implicits._
+    val parts = "spark.sql.shuffle.partitions"
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val before = sp.conf.get(parts)
+    assert(before != "8", "the drain's setting must differ to be seen")
+    assert(!sp.conf.getAll.contains(provider))
+    val dir = Scratch.lasting("graft-drain-fail").toString + "/in"
+    Seq((1L, 1.0), (2L, 2.0)).toDF("k", "v").write.parquet(dir)
+    val boom = udf { (k: Long) =>
+      if (k > 0) throw new IllegalStateException("boom") else k }
+    val src = sp.readStream.schema("k BIGINT, v DOUBLE").parquet(dir)
+      .select(boom(col("k")).as("_1"), col("v").as("_2"))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      streaming.Streams.drain(src, "fail-stateless"))
+    assert(sp.conf.get(parts) === before)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      streaming.Streams.drain(
+        streaming.Streams.quotaEnforce(src.as[(Long, Double)], 1L),
+        "fail-tws", "update"))
+    assert(sp.conf.get(parts) === before)
+    assert(!sp.conf.getAll.contains(provider),
+      "a failed transformWithState drain left the RocksDB provider set")
   }
 
   test("q259 drops real late rows, emits no duplicate windows (sf0.001)") {

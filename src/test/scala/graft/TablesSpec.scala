@@ -21,7 +21,7 @@ class TablesSpec extends AnyFunSuite {
     * an in-place rewrite under the same file name, as a fixture refresh
     * does it. */
   private def writeFile(df: DataFrame, dst: String): Unit = {
-    val tmp = Files.createTempDirectory("graft_tables_stage").toString + "/p"
+    val tmp = Scratch.lasting("graft_tables_stage").toString + "/p"
     df.coalesce(1).write.parquet(tmp)
     val part = new java.io.File(tmp).listFiles()
       .filter(f => f.getName.startsWith("part-") &&
@@ -46,7 +46,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("an in-place rewrite with a different column set re-infers") {
-    val file = Files.createTempDirectory("graft_tables_rewrite").toString +
+    val file = Scratch.lasting("graft_tables_rewrite").toString +
       "/t.parquet"
     val base = spark.range(5).select(col("id").as("a"), (col("id") * 2).as("b"))
     writeFile(base, file)
@@ -66,7 +66,7 @@ class TablesSpec extends AnyFunSuite {
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.schema.MessageTypeParser
     // an events fixture of the older generation: ts as TIMESTAMP(NANOS)
-    val sfDir = Files.createTempDirectory("graft_tables_nanos").toString
+    val sfDir = Scratch.lasting("graft_tables_nanos").toString
     val schema = MessageTypeParser.parseMessageType(
       """message events {
         |  required int64 event_id;
