@@ -15,22 +15,23 @@ import graft.Tables
   *    (pa, pb, n_shared) with pa < pb — i.e. the self-equi-join on the
   *    basket key, pair-expansion bounded by (basket size)² per order.
   *
-  * Standalone, each query builds the subtree inline (a production run
-  * executes one query; nothing is shared). A SUITE run (Bench) pays the
-  * dominant self-join once per query unless told otherwise — ~6× the
-  * same subtree per pass. [[materialize]] writes both frames to scratch
-  * parquet ONCE and registers session temp views; every accessor below
-  * picks the view up when present and falls back to the inline build
-  * when absent, so Verify/oracle semantics never change.
+  * Both frames are written to scratch parquet once per version of
+  * `lineitem` ([[graft.Scratch.staged]]), and every accessor reads the
+  * staged copy, in Verify, Bench and the specs alike: one path, so the
+  * path a suite run times is the one the oracle checks. The first accessor
+  * call pays the build (Bench and perfbench call [[materialize]] untimed
+  * beforehand); every later consumer pays a narrow columnar scan instead of
+  * the dominant self-join — ~6× the same subtree per bench pass otherwise.
   *
   * Parquet (not cache/localCheckpoint) on purpose: Bench's hygiene loop
   * unpersists every persistent RDD between timed queries — blocks of a
   * checkpointed shared frame would be dropped and, with lineage
-  * truncated, unrecoverable. A parquet-backed view survives the purge,
-  * re-reads as a narrow columnar scan, and leaves the unified memory
-  * pool to the query under test. It is also exactly the shape a
-  * 100 TB pipeline would use: a materialized intermediate dataset
-  * consumed by many downstream jobs.
+  * truncated, unrecoverable. A parquet copy survives the purge, re-reads
+  * as a narrow columnar scan, and leaves the unified memory pool to the
+  * query under test; consumers that read it from several lineages need no
+  * cut of their own. It is also exactly the shape a 100 TB pipeline would
+  * use: a materialized intermediate dataset consumed by many downstream
+  * jobs.
   *
   * Equivalences relied on by the consumers (each spec-asserted):
   *  - distinct pairs over NON-distinct items == `pairs` projected to
@@ -43,17 +44,15 @@ import graft.Tables
   */
 object CoPurchase {
 
-  private def suffix(sfDir: String): String =
-    java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(sfDir))
-
-  /** Temp-view name for the shared items frame at `sfDir`. */
-  def itemsView(sfDir: String): String =
-    s"graft_copurchase_items_${suffix(sfDir)}"
-
-  /** Temp-view name for the shared counted-pairs frame at `sfDir`. */
-  def pairsView(sfDir: String): String =
-    s"graft_copurchase_pairs_${suffix(sfDir)}"
+  /** The staged dir holding `items.parquet` and `pairs.parquet`. */
+  private def staged(spark: SparkSession, sfDir: String): String =
+    graft.Scratch.staged(spark, "graft-copurchase-",
+        Seq(s"$sfDir/lineitem.parquet")) { dir =>
+      val items = itemsInline(spark, sfDir)
+      items.write.parquet(s"$dir/items.parquet")
+      pairsFrom(Tables.parquet(spark, s"$dir/items.parquet", items.schema))
+        .write.parquet(s"$dir/pairs.parquet")
+    }
 
   private def itemsInline(spark: SparkSession, sfDir: String): DataFrame =
     Tables.lineitem(spark, sfDir)
@@ -67,75 +66,23 @@ object CoPurchase {
       .groupBy(col("pa"), col("pb"))
       .agg(count(lit(1)).as("n_shared"))
 
-  /** Distinct (l_orderkey, l_partkey) basket items — the shared view
-    * when registered, the inline build otherwise. LAZY either way;
-    * multi-consumer callers cut lineage themselves (and when the view is
-    * up, that cut copies a materialized parquet read, not a recompute). */
+  /** Distinct (l_orderkey, l_partkey) basket items, read from the staged
+    * copy. */
   def items(spark: SparkSession, sfDir: String): DataFrame =
-    if (spark.catalog.tableExists(itemsView(sfDir)))
-      spark.table(itemsView(sfDir))
-    else itemsInline(spark, sfDir)
-
-  /** [[items]], materialized: the registered view is already
-    * parquet-backed; the inline build pays one localCheckpoint — the
-    * pre-sharing behavior of the fan-out consumers (q120/q232/q254 read
-    * the item set from 3–4 lineages each). */
-  def itemsCut(spark: SparkSession, sfDir: String): DataFrame =
-    if (spark.catalog.tableExists(itemsView(sfDir)))
-      spark.table(itemsView(sfDir))
-    else itemsInline(spark, sfDir).localCheckpoint()
+    Tables.parquet(spark, s"${staged(spark, sfDir)}/items.parquet")
 
   /** Counted co-purchase pairs (pa, pb, n_shared), pa < pb, one row per
-    * unordered pair — shared view when registered, inline otherwise. */
+    * unordered pair, read from the staged copy. */
   def pairs(spark: SparkSession, sfDir: String): DataFrame =
-    if (spark.catalog.tableExists(pairsView(sfDir)))
-      spark.table(pairsView(sfDir))
-    else pairsFrom(items(spark, sfDir))
-
-  /** [[pairs]], but built over the CALLER's (already materialized) items
-    * frame when the shared view is absent — fan-out consumers that hold
-    * a checkpointed item set avoid a second lineitem scan. */
-  def pairsOver(spark: SparkSession, sfDir: String,
-      items: DataFrame): DataFrame =
-    if (spark.catalog.tableExists(pairsView(sfDir)))
-      spark.table(pairsView(sfDir))
-    else pairsFrom(items)
+    Tables.parquet(spark, s"${staged(spark, sfDir)}/pairs.parquet")
 
   /** The unweighted co-purchase edge list (pa, pb), pa < pb, distinct by
     * construction (they are the group keys of [[pairs]]). */
   def edges(spark: SparkSession, sfDir: String): DataFrame =
     pairs(spark, sfDir).select(col("pa"), col("pb"))
 
-  /** [[edges]], materialized: the registered view is already
-    * parquet-backed (a narrow columnar re-read per consumer — cutting it
-    * again would copy the whole frame into block storage for nothing);
-    * the inline build pays one localCheckpoint, since consumers like
-    * [[Graph.triangleCounts]] read the edge frame from three independent
-    * lineages. */
-  def edgesCut(spark: SparkSession, sfDir: String): DataFrame =
-    if (spark.catalog.tableExists(pairsView(sfDir)))
-      edges(spark, sfDir)
-    else Checkpoints.cut(edges(spark, sfDir))
-
-  /** Build both frames once, write them to scratch parquet, and register
-    * the session temp views the accessors pick up. Idempotent per
-    * (session, sfDir). Returns the scratch directory. */
-  def materialize(spark: SparkSession, sfDir: String): String = {
-    val dir = graft.Scratch.lasting("graft-copurchase-").toString
-    val it = itemsInline(spark, sfDir)
-    it.write.mode("overwrite").parquet(s"$dir/items.parquet")
-    val itemsDf = Tables.parquet(spark, s"$dir/items.parquet", it.schema)
-    itemsDf.createOrReplaceTempView(itemsView(sfDir))
-    val pairs = pairsFrom(itemsDf)
-    pairs.write.mode("overwrite").parquet(s"$dir/pairs.parquet")
-    Tables.parquet(spark, s"$dir/pairs.parquet", pairs.schema)
-      .createOrReplaceTempView(pairsView(sfDir))
-    dir
-  }
-
-  /** Drop the shared views — accessors fall back to inline builds. */
-  def release(spark: SparkSession, sfDir: String): Unit = {
-    spark.catalog.dropTempView(itemsView(sfDir))
-    spark.catalog.dropTempView(pairsView(sfDir)): scala.Unit
-  }
+  /** Stage both frames now, so the first consumer does not pay the build.
+    * Returns the staged dir. */
+  def materialize(spark: SparkSession, sfDir: String): String =
+    staged(spark, sfDir)
 }

@@ -96,13 +96,12 @@ object Collocations {
     * scalar (basket count) is a metadata-cheap count reused as a literal.
     */
   def q120BasketPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    // the distinct item set feeds several lineages (the pair build, the
-    // frequency frame, the basket count) — [[CoPurchase.itemsCut]] hands
-    // back either the suite-shared materialization or a one-query
-    // localCheckpoint, never a per-consumer lineitem re-scan
-    val items = CoPurchase.itemsCut(spark, sfDir)
+    // the distinct item set feeds several lineages (the frequency frame,
+    // the basket count) — each re-reads the staged parquet copy, never
+    // lineitem
+    val items = CoPurchase.items(spark, sfDir)
     val nBaskets = items.select(col("l_orderkey")).distinct().count()
-    val pairs = CoPurchase.pairsOver(spark, sfDir, items)
+    val pairs = CoPurchase.pairs(spark, sfDir)
       .select(col("pa").as("p1"), col("pb").as("p2"),
         col("n_shared").as("n_pair"))
       .filter(col("n_pair") >= 3)
@@ -161,7 +160,7 @@ object Collocations {
     * integer products, one IEEE division. */
   def q232BasketTriples(spark: SparkSession, sfDir: String): DataFrame = {
     val s = TripleSupport
-    val items = CoPurchase.itemsCut(spark, sfDir)
+    val items = CoPurchase.items(spark, sfDir)
     val nBaskets = items.select(col("l_orderkey")).distinct().count()
     val freq = items.groupBy(col("l_partkey"))
       .agg(count(lit(1)).as("n_item"))
@@ -174,7 +173,7 @@ object Collocations {
     // pair's support is bounded by either item's support, so Apriori
     // pruning cannot change any count that survives the threshold —
     // the spec asserts this equivalence against the pruned re-count.
-    val l2 = CoPurchase.pairsOver(spark, sfDir, items)
+    val l2 = CoPurchase.pairs(spark, sfDir)
       .filter(col("n_shared") >= s)
       .select(col("pa").as("p1"), col("pb").as("p2"),
         col("n_shared").as("n_pair"))
@@ -281,9 +280,9 @@ object Collocations {
     * The only corpus-sized work is q120's (basket-size²-bounded) pair
     * count, reused here unchanged; the 1-row basket total broadcasts. */
   def q254AssocRules(spark: SparkSession, sfDir: String): DataFrame = {
-    val items = CoPurchase.itemsCut(spark, sfDir)
+    val items = CoPurchase.items(spark, sfDir)
     val nBaskets = items.select(col("l_orderkey")).distinct().count()
-    val pairs = CoPurchase.pairsOver(spark, sfDir, items)
+    val pairs = CoPurchase.pairs(spark, sfDir)
       .select(col("pa").as("p1"), col("pb").as("p2"),
         col("n_shared").as("n_pair"))
       .filter(col("n_pair") >= RuleSupport)

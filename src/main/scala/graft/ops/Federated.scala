@@ -25,16 +25,13 @@ object Federated {
     StructField("o_orderpriority", StringType),
     StructField("o_totalprice", DoubleType)))
 
-  /** One staged copy of the 3-column orders slice per (format, sfDir),
-    * written once per JVM — fixture prep, not the operator under test
-    * (the q119 staging discipline). */
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
+  /** The staged copy of the 3-column orders slice in `format`, written
+    * once per version of `orders` ([[graft.Scratch.staged]]) — fixture
+    * prep, not the operator under test (the q119 staging discipline). */
   private def stage(spark: SparkSession, sfDir: String,
       format: String): String =
-    staged.getOrElseUpdate((format, sfDir), {
-      val dir = graft.Scratch.lasting(s"graft-fed-$format")
+    graft.Scratch.staged(spark, s"graft-fed-$format",
+        Seq(s"$sfDir/orders.parquet")) { dir =>
       val slice = Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_orderpriority"),
           col("o_totalprice"))
@@ -44,8 +41,7 @@ object Federated {
         case "csv"  => w.option("header", "true").csv(s"$dir/data")
         case "json" => w.json(s"$dir/data")
       }
-      s"$dir/data"
-    })
+    } + "/data"
 
   /** q127_federated — the same aggregate over four physical formats of one
     * logical table, tagged per leg; every (fmt, priority) row must carry
@@ -83,15 +79,12 @@ object Federated {
     StructField("n_chars", LongType),
     StructField("text", StringType)))
 
-  /** Staged free-text copies for the q08/q09 round-trips (same
-    * once-per-JVM discipline as [[stage]]). */
-  private val stagedDocs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
+  /** The staged free-text copy of `documents` in `format`, for the
+    * q08/q09 round-trips (written once per version, as [[stage]]). */
   private def stageDocs(spark: SparkSession, sfDir: String,
       format: String): String =
-    stagedDocs.getOrElseUpdate((format, sfDir), {
-      val dir = graft.Scratch.lasting(s"graft-rt-$format")
+    graft.Scratch.staged(spark, s"graft-rt-$format",
+        Seq(s"$sfDir/documents.parquet")) { dir =>
       val slice = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
           col("text"))
@@ -100,8 +93,7 @@ object Federated {
         case "csv"  => w.option("header", "true").csv(s"$dir/data")
         case "json" => w.json(s"$dir/data")
       }
-      s"$dir/data"
-    })
+    } + "/data"
 
   /** Round-trip core for q08/q09: sink the documents table to a line
     * format, read it back through the [[Readers]] ingest boundary, and

@@ -180,7 +180,7 @@ object Graph {
     * integers end-to-end — the oracle replays them exactly.
     */
   def q139Triangles(spark: SparkSession, sfDir: String): DataFrame =
-    triangleCounts(CoPurchase.edgesCut(spark, sfDir))
+    triangleCounts(CoPurchase.edges(spark, sfDir))
       .withColumnRenamed("node", "part")
       .orderBy(col("part"))
 
@@ -217,13 +217,12 @@ object Graph {
     * the closing join behind a checkpoint scan). */
   def triangleCountsPlan(e: DataFrame): DataFrame = {
     // PRECONDITION: `e` arrives MATERIALIZED or cheap to re-scan (the
-    // bench's parquet-backed CoPurchase view, [[CoPurchase.edgesCut]]'s
-    // checkpoint for inline builds, Soak's explicit cut). This operator
-    // consumes it from three independent lineages (the degree aggregate,
-    // the orientation join's probe side, and the final degree-spine
-    // join), so an expensive uncut subtree would run 3×; but cutting
-    // HERE re-copied an already-parquet-backed frame into block storage
-    // on every bench execution (r16: the cut moved to the callers).
+    // staged parquet copy behind [[CoPurchase.edges]], Soak's explicit
+    // cut). This operator consumes it from three independent lineages
+    // (the degree aggregate, the orientation join's probe side, and the
+    // final degree-spine join), so an expensive uncut subtree would run
+    // 3×; but cutting HERE would re-copy a parquet-backed frame into
+    // block storage on every execution (r16 measured it as waste).
     val ec = e
     // deg is consumed from three lineages (both orientation sides + the
     // final spine join) and re-aggregates the doubled edge frame per
@@ -385,7 +384,7 @@ object Graph {
     * ([[Checkpoints]]). min_node per layer makes the output
     * order-independent beyond counts. */
   def q252BfsLayers(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = CoPurchase.edges(spark, sfDir).cutLineage()
+    val e = CoPurchase.edges(spark, sfDir)
     // both directions once, so each round is one equi-join.
     // NOTE (r15 optimization pass): the q114 partition-pin +
     // SHUFFLE_HASH treatment was A/B'd here and REJECTED — measured
@@ -494,7 +493,7 @@ object Graph {
     * a shuffled join. Plan-pinned in BenchContractSpec: zero broadcast
     * hints in the optimized plan. */
   def q247Modularity(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = CoPurchase.edges(spark, sfDir).cutLineage()
+    val e = CoPurchase.edges(spark, sfDir)
     val brand = Tables.part(spark, sfDir)
       .select(col("p_partkey"), col("p_brand"))
     val eb = e
@@ -603,7 +602,7 @@ object Graph {
     * O(m^1.5)-bounded adjacency-intersection closing) is a
     * degree-cardinality ROLLUP aggregate with map-side combine. */
   def q242ClusteringSpectrum(spark: SparkSession, sfDir: String): DataFrame = {
-    triangleCounts(CoPurchase.edgesCut(spark, sfDir))
+    triangleCounts(CoPurchase.edges(spark, sfDir))
       .filter(col("degree") >= 2)
       .select(col("degree"), col("n_tri"),
         expr("degree * (degree - 1) div 2").as("wedges"))
@@ -1150,7 +1149,7 @@ object Graph {
     * skew (a community's label is every member's message) is a hash-
     * aggregate hot key, which AQE splits. */
   def q256LabelProp(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = CoPurchase.edges(spark, sfDir).cutLineage()
+    val e = CoPurchase.edges(spark, sfDir)
     // Pin the big side's partitioning ONCE — the q114 discipline: hash-
     // partition the adjacency by `src` and PERSIST it (a localCheckpoint
     // surfaces UnknownPartitioning, so every round would re-exchange BOTH

@@ -35,6 +35,14 @@ import org.apache.spark.sql.internal.SQLConf
   *
   * Sorts under write commands are rewritten like any other: the rule walks
   * the whole plan, not only its root.
+  *
+  * A benchmark that runs each query sorted and then unsorted reads the
+  * unsorted pass slightly slower with this rule, and that move stays: the
+  * removed sample job had executed the child one extra time just before,
+  * warming its code. Measured on perfbench `warehouse_sql` (4 cores, 10
+  * fresh-JVM pairs): the unsorted pass plans the same jobs, and its excess
+  * is +0.13 s in the first round and +0.01 s in the second, once the code
+  * is warm, while the sorted pass saves 0.6 s and 0.5 s.
   */
 object SinglePartitionSort extends Rule[LogicalPlan] {
 

@@ -391,26 +391,18 @@ object Streams {
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Update())
   }
-  /** Temp dirs of already-staged stream INPUTS, keyed by fixture and the
-    * source's file version ([[graft.Tables.fileInventory]] of the events
-    * fixture every staged input derives from): the registered streaming
-    * queries run several times per bench JVM (2 passes × 2 runs), and
-    * re-writing identical source files each time bills fixture prep — not
-    * the streaming operator under test — to the timing. A source rewritten
-    * in place stages afresh instead of replaying a stale copy. The
-    * sink/checkpoint dirs stay fresh per invocation: they are
-    * [[graft.Scratch.perQuery]] dirs, deleted by [[graft.Sessions.release]]. */
-  private val stagedInputs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
+  /** The staged INPUT copy of a registered stream, written once per
+    * version of the events fixture every staged input derives from
+    * ([[graft.Scratch.staged]]): the registered streaming queries run
+    * several times per bench JVM (2 passes × 2 runs), and re-writing
+    * identical source files each time bills fixture prep — not the
+    * streaming operator under test — to the timing. The sink/checkpoint
+    * dirs stay fresh per invocation: they are [[graft.Scratch.perQuery]]
+    * dirs, deleted by [[graft.Sessions.release]]. */
   private def stageOnce(spark: SparkSession, fixture: String, sfDir: String)(
       write: String => Unit): String =
-    stagedInputs.getOrElseUpdate((fixture,
-        graft.Tables.fileInventory(spark, s"$sfDir/events.parquet")), {
-      val dir = graft.Scratch.lasting(s"graft-$fixture")
-      write(dir.toString)
-      dir.toString
-    })
+    graft.Scratch.staged(spark, s"graft-$fixture",
+      Seq(s"$sfDir/events.parquet"))(write)
 
   /** q119_stream_join — run [[streamIntervalJoin]] end-to-end as a real
     * streaming query and hash-check the result against the batch range

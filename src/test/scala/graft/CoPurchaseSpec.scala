@@ -5,10 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{CoPurchase, Collocations, Graph}
 
-/** The suite-shared co-purchase frames (round-7): the shared-view path
-  * must be a pure materialization — every consumer's rows identical with
-  * the views registered and absent — and the algebraic equivalences the
-  * sharing relies on are asserted against independent builds. */
+/** The suite-shared co-purchase frames: consumers read the staged copy,
+  * never lineitem, and the algebraic equivalences the sharing relies on
+  * are asserted against independent builds. */
 class CoPurchaseSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.session
   private val sf = SparkSuite.sf
@@ -31,7 +30,7 @@ class CoPurchaseSpec extends AnyFunSuite {
     // bounded by either item's support, so the support-filtered pair list
     // is identical whether counted over full or pruned baskets.
     val s = Collocations.TripleSupport
-    val items = CoPurchase.itemsCut(spark, sf)
+    val items = CoPurchase.items(spark, sf)
     val freq = items.groupBy(col("l_partkey"))
       .agg(count(lit(1)).as("n_item"))
     val pruned = items.join(
@@ -49,25 +48,14 @@ class CoPurchaseSpec extends AnyFunSuite {
       overPruned.exceptAll(shortcut).isEmpty)
   }
 
-  test("materialized views are picked up and change no consumer's rows") {
-    val inline139 = Graph.q139Triangles(spark, sf).collect().toSeq
-    val inline120 = Collocations.q120BasketPairs(spark, sf).collect().toSeq
-    val inline257 = Graph.q257Sssp(spark, sf).collect().toSeq
-    CoPurchase.materialize(spark, sf)
-    try {
-      assert(spark.catalog.tableExists(CoPurchase.pairsView(sf)))
-      // the shared path must actually be engaged: no lineitem scan in
-      // the consumer's plan once the views are up
-      val plan = Graph.q139Triangles(spark, sf).queryExecution
+  test("q139 reads the staged copy, not lineitem, on a fresh session") {
+    // the full plan, its eagerly cut subtrees included (withNoCut)
+    val plan = graft.ops.Checkpoints.withNoCut {
+      Graph.q139Triangles(spark.newSession(), sf).queryExecution
         .explainString(org.apache.spark.sql.execution.ExplainMode
           .fromString("formatted"))
-      assert(!plan.contains("lineitem"),
-        "q139 still scans lineitem with the shared views registered")
-      assert(Graph.q139Triangles(spark, sf).collect().toSeq === inline139)
-      assert(Collocations.q120BasketPairs(spark, sf).collect().toSeq
-        === inline120)
-      assert(Graph.q257Sssp(spark, sf).collect().toSeq === inline257)
-    } finally CoPurchase.release(spark, sf)
-    assert(!spark.catalog.tableExists(CoPurchase.pairsView(sf)))
+    }
+    assert(plan.contains("pairs.parquet"), plan)
+    assert(!plan.contains("lineitem"), "q139 scans lineitem")
   }
 }

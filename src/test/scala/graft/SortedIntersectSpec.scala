@@ -81,7 +81,7 @@ class SortedIntersectSpec extends AnyFunSuite {
     // kernel (broadcast path, production default) or the wedge self-join
     // (kernel-free) — the two strategies cross-validate, so a silent
     // subset from an unsorted input would diverge here.
-    val e = ops.CoPurchase.edgesCut(spark, SparkSuite.sf)
+    val e = ops.CoPurchase.edges(spark, SparkSuite.sf)
     val viaKernel = ops.Graph.triangleCounts(e).collect().toSet
     val key = ops.Graph.TriangleBroadcastMaxEdgesKey
     spark.conf.set(key, "0") // force the wedge path
