@@ -1,11 +1,38 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** Lineage cutting for iterative operators (connected components,
   * PageRank, k-core, LSH clustering): each round must materialize its
   * frame or the plan doubles per round and the planner chokes by round
   * ~10.
+  *
+  * The graph loops run on one skeleton built from [[cut]]:
+  *  - [[rounds]]: a fixed round count, each round's frame cut (q255,
+  *    q256, q257);
+  *  - [[untilStable]]: rounds polled until a driver-side `Long` read of
+  *    the cut frame repeats (connected components);
+  *  - [[pinned]]: the one pinned-adjacency lifecycle (q114, q256, q257).
+  *    A cut frame surfaces UnknownPartitioning (AQE discards a
+  *    localCheckpoint's partitioning) but a cached plan keeps its output
+  *    partitioning, so an adjacency hash-partitioned on `src` and
+  *    PERSISTED lets every round's contribution join reuse that one
+  *    exchange: only the node-sized frame moves per round (q114, r5:
+  *    7.3 s unpinned, ~2.5 s pinned). The partition count scales with
+  *    the BUILD side, the node-cardinality frame each round hash-builds
+  *    into the pin (bounded by `nodeBound`, parquet-metadata counts),
+  *    with [[Scale.NarrowBuildRowsPerTask]]: a fixed count turns node
+  *    growth into per-task build growth (the triangle closing join's sf2
+  *    OOM class), and sizing by the edge count measured 2.4× slower at
+  *    the 10× point from wave quantization alone. The pin is released
+  *    when the loop returns or throws, so whatever the loop returns must
+  *    not read it: a loop ends in a cut (the last round's cut in
+  *    [[rounds]], or its own), and no job is added to reach that. The pin
+  *    pays one repartition + persist + count up front, so it wins only
+  *    where the rounds re-read one pinned copy several times: r15 A/B'd
+  *    it and rejected it on q252 (the frontier build side is tiny and
+  *    AQE broadcasts it) and on q255 (two rounds, two join keys).
   *
   * Two strategies behind one switch:
   *  - default: `localCheckpoint` — executor-memory blocks, no
@@ -70,6 +97,52 @@ object Checkpoints {
         df.checkpoint()
       case None => df.localCheckpoint()
     }
+  }
+
+  /** `n` rounds from `seed`: round `i` (1-based) is `step(previous, i)`,
+    * cut. The seed is used as given; cut it first when it is costly. */
+  def rounds(seed: DataFrame, n: Int)(
+      step: (DataFrame, Int) => DataFrame): DataFrame =
+    (1 to n).foldLeft(seed)((frame, i) => cut(step(frame, i)))
+
+  /** Cut rounds from `seed` until `probe` — a driver-side read of the cut
+    * frame, the loop-control exception to the no-collect rule — returns
+    * the same value twice in a row, at most `maxRounds` rounds. Returns
+    * the last frame and whether the probe repeated. The seed is not
+    * probed, so the earliest stop is after round 2. */
+  def untilStable(seed: DataFrame, maxRounds: Int)(
+      step: DataFrame => DataFrame)(
+      probe: DataFrame => Long): (DataFrame, Boolean) = {
+    @annotation.tailrec
+    def go(frame: DataFrame, last: Option[Long],
+        round: Int): (DataFrame, Boolean) =
+      if (round == maxRounds) (frame, false)
+      else {
+        val next = cut(step(frame))
+        val read = probe(next)
+        if (last.contains(read)) (next, true)
+        else go(next, Some(read), round + 1)
+      }
+    go(seed, None, 0)
+  }
+
+  /** Run `loop` over `adj` (column `src`) hash-partitioned on `src` into
+    * [[Scale.hashBuildParallelism]]`(nodeBound, NarrowBuildRowsPerTask)`
+    * parts, passed through `shape` and pinned: persisted, materialized
+    * once, and released when `loop` returns or throws (see the Scaladoc
+    * above). `shape` derives the pinned frame from the partitioned one
+    * without leaving its partitioning — q114 attaches out-degrees through
+    * a join whose two sides reuse the one exchange. */
+  def pinned[T](adj: DataFrame, nodeBound: Long,
+      shape: DataFrame => DataFrame = identity[DataFrame])(
+      loop: DataFrame => T): T = {
+    val parts = Scale.hashBuildParallelism(adj.sparkSession, nodeBound,
+      Scale.NarrowBuildRowsPerTask)
+    val pin = shape(adj.repartition(parts, col("src"))).persist()
+    try {
+      pin.count()
+      loop(pin)
+    } finally pin.unpersist(blocking = false)
   }
 
   /** `.cutLineage()` postfix form so call sites read like the

@@ -81,6 +81,11 @@ object CoPurchase {
   def edges(spark: SparkSession, sfDir: String): DataFrame =
     pairs(spark, sfDir).select(col("pa"), col("pb"))
 
+  /** The co-purchase adjacency (src, dst): [[edges]] in both directions,
+    * read from the staged copy and uncut (q252, q256). */
+  def adjacency(spark: SparkSession, sfDir: String): DataFrame =
+    Graph.undirected(edges(spark, sfDir))
+
   /** Stage both frames now, so the first consumer does not pay the build.
     * Returns the staged dir. */
   def materialize(spark: SparkSession, sfDir: String): String =

@@ -38,9 +38,10 @@ import graft.ops.Checkpoints.CutOps
   *  - The min-label pull is a groupBy aggregate, so map-side partial
   *    combine collapses high-degree hub nodes before the shuffle — no
   *    whole-bucket-on-one-task straggler.
-  *  - Convergence is detected with a changed-label count per round (a
-  *    cheap action over the narrow checkpointed frames), bounded by
-  *    `maxIter` as a runaway guard.
+  *  - Convergence is detected with a label-sum probe per round (a cheap
+  *    action over the narrow checkpointed frame,
+  *    [[Checkpoints.untilStable]]), bounded by `maxIter` as a runaway
+  *    guard.
   */
 object Components {
 
@@ -105,18 +106,16 @@ object Components {
     // documents are singletons — they join back as their own component
     // after the loop, and every round's joins shrink from |V| to
     // |V_active| (often 10-100× smaller).
-    var labels = sym.select(col("src").as("id")).distinct()
+    val seed = sym.select(col("src").as("id")).distinct()
       .withColumn("component", col("id"))
       .cutLineage()
-    var converged = false
-    var iter = 0
     // Convergence probe: labels decrease monotonically per node, so the
     // label-sum strictly decreases until the fixpoint — comparing two longs
     // replaces a per-round join-and-count with a shuffle-free aggregate
-    // over the checkpointed frame. (Exact: long sum of node ids, no
-    // overflow below ~3·10⁹ nodes.)
-    var prevSum = Long.MaxValue
-    while (!converged && iter < maxIter) {
+    // over the cut frame. (Exact: long sum of node ids, no overflow below
+    // ~3·10⁹ nodes.) The sum over an empty active set is NULL, read as 0:
+    // that is already the fixpoint.
+    val (labels, _) = Checkpoints.untilStable(seed, maxIter) { labels =>
       // Pull phase: min label over the neighborhood (plus self, via the
       // left join below — isolated nodes keep their own label).
       val nbrMin = sym
@@ -137,20 +136,13 @@ object Components {
       // stacked jumps). The tail rounds a single halving leaves behind
       // (changed counts in the single digits) are near-free — the frames
       // are checkpointed and tiny.
-      val halved = pulled
+      pulled
         .join(pulled.select(col("id").as("p_id"), col("component").as("p_comp")),
           col("component") === col("p_id"), "left")
         .select(col("id"),
           coalesce(col("p_comp"), col("component")).as("component"))
-        .cutLineage()
-      // sum over an empty active set is NULL (no edges at all) — that is
-      // already the fixpoint
-      val sumRow = halved.agg(sum(col("component"))).head()
-      val labelSum = if (sumRow.isNullAt(0)) Long.MaxValue else sumRow.getLong(0)
-      labels = halved
-      converged = labelSum == prevSum
-      prevSum = labelSum
-      iter += 1
+    } { halved =>
+      halved.agg(coalesce(sum(col("component")), lit(0L))).head().getLong(0)
     }
     finishWithIsolated(nodes, labels)
   }

@@ -96,7 +96,7 @@ class BenchContractSpec extends AnyFunSuite {
   }
 
   test("q139 pin: both sides of the triangle-closing size gate") {
-    // Below the gate (default conf) the closing must be the broadcast
+    // Below the gate (the default) the closing must be the broadcast
     // adjacency intersection — array_intersect over broadcast-joined
     // out-arrays, no shuffled join in the closing. Above the gate
     // (forced with gate=0) it must be the wedge self-join closed by a
@@ -104,38 +104,35 @@ class BenchContractSpec extends AnyFunSuite {
     // Inspected on the PRE-CUT plan (triangleCountsPlan): the public
     // method materializes the node-cardinality result, which hides the
     // closing join behind a checkpoint scan.
-    def closingPlan() = graft.ops.Graph
-      .triangleCountsPlan(graft.ops.CoPurchase.edges(spark, SparkSuite.sf))
+    def closingPlan(maxBroadcastEdges: Long) = graft.ops.Graph
+      .triangleCountsPlan(graft.ops.CoPurchase.edges(spark, SparkSuite.sf),
+        maxBroadcastEdges)
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
-    val below = closingPlan()
+    val below = closingPlan(graft.ops.Graph.TriangleBroadcastMaxEdges)
     assert(below.contains("sorted_long_intersect"),
       "gate's broadcast side lost the adjacency merge-intersect closing " +
         "(r16: the two-pointer kernel over sort_array'd out-arrays " +
         "replaced array_intersect's per-row hash set)")
     assert(below.contains("BroadcastHashJoin"),
       "gate's broadcast side: adjacency joins are no longer broadcast")
-    spark.conf.set(graft.ops.Graph.TriangleBroadcastMaxEdgesKey, "0")
-    try {
-      val above = closingPlan()
-      assert(above.contains("ShuffledHashJoin"),
-        "gate's shuffle side: the wedge closing probe must be a " +
-          "shuffled hash join (sort-merge re-sorts the O(m^1.5) stream)")
-      assert(!above.contains("sorted_long_intersect") &&
-        !above.contains("array_intersect"),
-        "gate=0 still builds broadcast adjacency arrays — the fallback " +
-          "is not actually engaged")
-      // The closing join's parallelism must be the EXPLICIT repartition
-      // pair scaled by Scale.hashBuildParallelism, not an
-      // ENSURE_REQUIREMENTS exchange at the fixed session count: the
-      // build side grows with the graph, and the session-count shape
-      // OOMed at the 24M-edge sf2 point ("not enough memory to build
-      // hash map" ×136 in the r9 campaign log).
-      assert("REPARTITION_BY_NUM".r.findAllIn(above).size >= 2,
-        "wedge closing lost its explicit scaled co-partitioning — the " +
-          "hash build is back to the fixed session parallelism that " +
-          "OOMs once edges/partitions outgrows task memory")
-    } finally
-      spark.conf.unset(graft.ops.Graph.TriangleBroadcastMaxEdgesKey)
+    val above = closingPlan(0L)
+    assert(above.contains("ShuffledHashJoin"),
+      "gate's shuffle side: the wedge closing probe must be a " +
+        "shuffled hash join (sort-merge re-sorts the O(m^1.5) stream)")
+    assert(!above.contains("sorted_long_intersect") &&
+      !above.contains("array_intersect"),
+      "gate=0 still builds broadcast adjacency arrays — the fallback " +
+        "is not actually engaged")
+    // The closing join's parallelism must be the EXPLICIT repartition
+    // pair scaled by Scale.hashBuildParallelism, not an
+    // ENSURE_REQUIREMENTS exchange at the fixed session count: the
+    // build side grows with the graph, and the session-count shape
+    // OOMed at the 24M-edge sf2 point ("not enough memory to build
+    // hash map" ×136 in the r9 campaign log).
+    assert("REPARTITION_BY_NUM".r.findAllIn(above).size >= 2,
+      "wedge closing lost its explicit scaled co-partitioning — the " +
+        "hash build is back to the fixed session parallelism that " +
+        "OOMs once edges/partitions outgrows task memory")
   }
 
   test("broadcast-hint audit: no forced broadcast of an SF-proportional " +

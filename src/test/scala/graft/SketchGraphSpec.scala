@@ -50,8 +50,8 @@ class SketchGraphSpec extends AnyFunSuite {
   }
 
   test("triangleCounts: wedge fallback equals broadcast path (gate=0)") {
-    // Same fixture graph through both sides of the size gate: default
-    // conf takes the broadcast-adjacency closing, gate 0 forces every
+    // Same fixture graph through both sides of the size gate: the
+    // default takes the broadcast-adjacency closing, gate 0 forces every
     // graph onto the wedge self-join + SHUFFLE_HASH probe (the 100 TB
     // path). Full (node, degree, n_tri) frames must be identical.
     val li = Tables.lineitem(spark, sf)
@@ -62,12 +62,10 @@ class SketchGraphSpec extends AnyFunSuite {
       .filter(col("pa") < col("pb"))
       .select("pa", "pb").distinct().localCheckpoint()
     val viaBroadcast = Graph.triangleCounts(e).orderBy("node").collect()
-    spark.conf.set(Graph.TriangleBroadcastMaxEdgesKey, "0")
-    try {
-      val viaWedge = Graph.triangleCounts(e).orderBy("node").collect()
-      assert(viaBroadcast.toSeq === viaWedge.toSeq)
-      assert(viaBroadcast.nonEmpty)
-    } finally spark.conf.unset(Graph.TriangleBroadcastMaxEdgesKey)
+    val viaWedge = Graph.triangleCounts(e, maxBroadcastEdges = 0L)
+      .orderBy("node").collect()
+    assert(viaBroadcast.toSeq === viaWedge.toSeq)
+    assert(viaBroadcast.nonEmpty)
   }
 
   test("commonNeighborPairs: square — diagonals share both neighbors") {

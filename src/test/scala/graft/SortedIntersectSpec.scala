@@ -83,12 +83,10 @@ class SortedIntersectSpec extends AnyFunSuite {
     // subset from an unsorted input would diverge here.
     val e = ops.CoPurchase.edges(spark, SparkSuite.sf)
     val viaKernel = ops.Graph.triangleCounts(e).collect().toSet
-    val key = ops.Graph.TriangleBroadcastMaxEdgesKey
-    spark.conf.set(key, "0") // force the wedge path
-    try {
-      val viaWedge = ops.Graph.triangleCounts(e).collect().toSet
-      assert(viaKernel === viaWedge)
-      assert(viaKernel.nonEmpty)
-    } finally spark.conf.unset(key)
+    // gate 0 forces the wedge path
+    val viaWedge =
+      ops.Graph.triangleCounts(e, maxBroadcastEdges = 0L).collect().toSet
+    assert(viaKernel === viaWedge)
+    assert(viaKernel.nonEmpty)
   }
 }
