@@ -70,9 +70,10 @@ object Tables {
     spark.read.schema(schema).parquet(path)
 
   /** `path:len:mtime` of every file under `path` (recursive, sorted,
-    * `;`-joined) — the version of a file-backed input, shared with the gate
-    * memos' [[graft.ops.Centroids.fileInventory]]. Empty when nothing is
-    * there. */
+    * `;`-joined) — the version of a file-backed input. Empty when nothing
+    * is there. Assumes millisecond mtimes: on a filesystem with coarse
+    * (1 s) granularity a same-length rewrite inside the window is
+    * invisible here. */
   private[graft] def fileInventory(spark: SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -81,6 +82,25 @@ object Tables {
     val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
       .map(st => s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
     files.toSeq.sorted.mkString(";")
+  }
+
+  /** The bytes a frame reads: the [[fileInventory]] of every input file
+    * of its file-backed relations, sorted and `;`-joined — "" for a frame
+    * with no file-backed relation (an in-memory frame's full structural
+    * plan already carries its data). The gate memo
+    * ([[graft.ops.Centroids.gateDecision]]) keys on it beside the
+    * canonicalized plan, which names relations by path only, so a corpus
+    * rewritten in place re-probes instead of replaying a stale decision. */
+  private[graft] def fileInventory(df: DataFrame): String = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    val files = df.queryExecution.analyzed.collect {
+      case lr: LogicalRelation => lr.relation match {
+        case fs: HadoopFsRelation => fs.location.inputFiles.toSeq
+        case _ => Seq.empty[String]
+      }
+    }.flatten
+    files.sorted.map(fileInventory(df.sparkSession, _)).mkString(";")
   }
 
   /** The on-disk schema, BEFORE any loader conversion — what a

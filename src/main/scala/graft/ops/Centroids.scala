@@ -175,8 +175,8 @@ object Centroids {
     * 40k-clone blob −29%, 253M at sf16+80k −57%). Every oracle
     * fixture (≤ 2000×45 = 90k pairs) sits two orders of magnitude
     * under it, so oracle rows keep the historical plan — and are ALSO
-    * bit-identical to the pruned form by the exactness proof on its
-    * Scaladoc (spec-pinned on all three regimes). */
+    * bit-identical to the pruned form by the exactness proof on
+    * [[PrunedAssign]]'s Scaladoc (spec-pinned on all three regimes). */
   private[graft] val PrunedAssignPairGate = 5000000L
 
   /** Pair budget per task for the pruned flat assignment's probe
@@ -198,259 +198,26 @@ object Centroids {
       math.min(n * k / PrunedPairsPerTask + 1,
         Scale.MaxCountedTasks.toLong).toInt)
 
-  /** Conservative rounding guard for the pruned path's double-domain
-    * lower-bound test (see [[prunedPairFrames]]): D, R, m are exact
-    * BIGINTs < 2⁵¹ (exactly representable as doubles), the two products
-    * carry ≤ 2 ulps ≈ 4·2⁻⁵³ relative error, and the guard is 9 orders
-    * of magnitude wider — a pair is pruned only when m² > 4·D·R by a
-    * margin no rounding can fake. Borderline pairs are NOT pruned (they
-    * are computed exactly), so the guard only ever costs work, never
-    * correctness. */
-  private val PruneGuard = 1.0 + 1e-9
-
-  /** Row ceiling on the k·kc seed-to-every-coarse-center distance
-    * table when the OWN-CENTER bound of [[prunedPairFrames]] is
-    * enabled: the table must broadcast into the pair fold stage — a
-    * shuffle there would re-exchange the n·k pair rows the whole
-    * pipeline exists to keep in-stage — and k·kc = k^1.5 = n^0.75
-    * rows of three BIGINTs grows without bound, so the bound must
-    * switch off rather than force an unbounded broadcast (2M rows ≈
-    * 48 MB, binding past n ≈ 2·10⁸ vectors). */
-  private[graft] val OwnBoundMaxRows = 2000000L
-
-  /** Production default for the own-center bound: MEASURED OFF
-    * (VERDICT r14 #2, A/B'd and rejected — the
-    * [[HierAssignGate]]/checkpoint discipline of keeping the seam
-    * wired with the measurement as the reason). On the sf8+40k-clone
-    * chain corpus (89.6M pairs) the bound PROVES 17.39M pairs itself
-    * but 99.6% of them are already proven by the seed-cell triangle
-    * bound — 63k genuinely new skips of 85.6M out-of-cell pairs
-    * (+0.07%) — while its broadcast lookup + extra filter over every
-    * pair row cost +62% wall on the whole assignment (tri-only
-    * 9.33 s vs 15.15 s, same-session min-of-2; sf16+80k reads the
-    * same shape). The two bounds fire on the same blob-adjacent mass:
-    * where √D ≈ √R degenerates the first bound, √s ≈ √dxv degenerates
-    * the second the same way (both are projections of the same
-    * concentrated isotropic geometry), so the second bound buys
-    * nothing the first did not — the survivor tail is genuinely
-    * unprunable by exact triangle bounds on this mass. A corpus
-    * family whose geometry separates the two projections can enable
-    * it per call (`ownBoundRows = OwnBoundMaxRows`); the safety proof
-    * and attribution ledger stay spec-pinned either way. */
-  private[graft] val OwnBoundDefaultRows = 0L
-
-  /** Internal frames of the Elkan-pruned exact flat assignment — shared
-    * by [[assignMembersPruned]] (the operator) and
-    * [[prunedAssignAccounting]] (the skip ledger): `incell` the exact
-    * in-cell distances (vec_id, fcid, dist), `pairs` the lower-bounded
-    * candidate frame for every (vector, out-of-cell seed) with
-    * `prunable` the proven-safe skip predicate over it — the union of
-    * the two independent triangle bounds, each exposed for the skip
-    * ledger's attribution (`prunableTri` through the seed's own cell
-    * center, `prunableOwn` through the vector's own cell center). */
-  private[graft] final case class PrunedFrames(incell: DataFrame,
-      pairs: DataFrame, prunable: org.apache.spark.sql.Column, kc: Long,
-      prunableTri: org.apache.spark.sql.Column,
-      prunableOwn: org.apache.spark.sql.Column)
-
-  /** Build [[PrunedFrames]] over a RAW (vec_id, embedding) frame `ea`
-    * with seeds (default: `ea` itself) filtered to vec_id < k — the
-    * array-kernel twin of [[assignMembers]]' exploded inputs. All
-    * distances are [[graft.functions.QuantSqDist]]: exact BIGINT in the
-    * same quantized space, bit-identical to the exploded sum. */
-  private[graft] def prunedPairFrames(ea0: DataFrame, k: Long,
-      seedsEa: Option[DataFrame],
-      probeParallelism: Option[Int],
-      ownBoundRows: Long = OwnBoundDefaultRows): PrunedFrames = {
-    import graft.functions.VectorFunctions.quant_sqdist
-    val w = org.apache.spark.sql.expressions.Window
-    val ea = ea0.select(col("vec_id"), col("embedding"))
-    val sa = seedsEa.getOrElse(ea0)
-      .select(col("vec_id"), col("embedding"))
-      .filter(col("vec_id") < k)
-      .select(col("vec_id").as("fcid"), col("embedding").as("semb"))
-    val kc = math.max(2L, math.ceil(math.sqrt(k.toDouble)).toLong)
-    val ca = sa.filter(col("fcid") < kc)
-      .select(col("fcid").as("ccid"), col("semb").as("cemb"))
-    // each fine seed's own coarse cell + its exact distance R to that
-    // cell's center (k·kc array folds — O(k^1.5·d), negligible). The
-    // kc-way expansion is an explode of a literal id sequence + an
-    // equi-join (AQE sizes the kc-row seed side) — no cross join.
-    // `semb` rides along so the pair stage below can fold survivor
-    // distances IN-STAGE: a first cut that joined arrays back by
-    // (vec_id, fcid) AFTER the filter measured 2.1–2.3× SLOWER than
-    // the flat form at every scale point (sf1 organic 5.5 vs 1.7 s,
-    // sf8+blob 31.8 vs 13.6 s) — the join-back shuffled the n·k
-    // survivor rows and re-materialized both arrays per row.
-    val sAll = sa
-      .select(col("fcid"), col("semb"),
-        explode(sequence(lit(0L), lit(kc - 1L))).as("ccid"))
-      .join(ca, Seq("ccid"))
-      .select(col("fcid"), col("semb"), col("ccid"),
-        quant_sqdist(col("semb"), col("cemb")).as("sd"))
-    val scell = sAll
-      .withColumn("srk", row_number().over(
-        w.partitionBy(col("fcid")).orderBy(col("sd"), col("ccid"))))
-      .filter(col("srk") === 1)
-      .select(col("fcid"), col("semb"), col("ccid"), col("sd").as("r"))
-    // the full seed-to-every-coarse-center table (k·kc narrow rows —
-    // the pre-argmin sAll re-projected), keyed for the OWN-CENTER
-    // bound's lookup: (seed f, the VECTOR's cell g) → s = d²(f, g)
-    val sOwn = sAll
-      .select(col("fcid"), col("ccid").as("vccid"), col("sd").as("s"))
-    val probe = probeParallelism
-      .map(p => ea.repartition(p, col("vec_id"))).getOrElse(ea)
-    val wv = w.partitionBy(col("vec_id"))
-    // every vector's exact distance D to every coarse center plus its
-    // own-cell pick — NARROW (vec_id, ccid, cd, crk, vccid): the
-    // embedding is dropped before the window so no array-bearing frame
-    // is ever window-sorted (a first cut carried arrays here and the
-    // two window sorts + the ub SMJ sort of ~300-byte rows ate the
-    // entire pruning win). Deliberately NOT lineage-cut: its two
-    // consumers re-run the n·kc folds + one narrow window (a 1/√k
-    // fraction of total work), which measured cheaper than the eager
-    // checkpoint jobs (sf8+blob full pruned 14.8 s with cuts, 11.6
-    // without); AQE stage reuse still shares the probe exchange.
-    val coarseD = probe
-      .select(col("vec_id"), col("embedding"),
-        explode(sequence(lit(0L), lit(kc - 1L))).as("ccid"))
-      .join(ca, Seq("ccid"))
-      .select(col("vec_id"), col("ccid"),
-        quant_sqdist(col("embedding"), col("cemb")).as("cd"))
-      .withColumn("crk", row_number().over(
-        wv.orderBy(col("cd"), col("ccid"))))
-      .withColumn("vccid",
-        max(when(col("crk") === 1, col("ccid"))).over(wv))
-      // the vector's own-cell coarse distance, carried for the
-      // OWN-CENTER bound — same unordered window frame as vccid, so
-      // no extra sort
-      .withColumn("dxv",
-        max(when(col("crk") === 1, col("cd"))).over(wv))
-    // exact pass over the vector's OWN cell's seeds — n·(k/kc)
-    // expected array folds. The embedding re-attaches by ONE n-to-n
-    // join (n array rows, not n·kc), hinted shuffle_hash: left to
-    // itself the planner BROADCASTS the array side whenever the
-    // corpus is under the 10 MB threshold — measured +115% at the
-    // 20k point (3.54 vs 1.88 s hinted) and a dead end at 100 TB,
-    // where an n-row broadcast cannot exist. The cell→seed map is
-    // ≤ k rows and AQE-broadcasts, so the ×(k/kc) expansion and its
-    // folds stay in-stage. Consumed lazily by the ub aggregate and
-    // the final argmin (recomputed, not cut — same measured decision
-    // as coarseD).
-    val incell = coarseD.filter(col("crk") === 1)
-      .select(col("vec_id"), col("ccid"))
-      .join(probe.hint("shuffle_hash"), Seq("vec_id"))
-      .join(scell.select(col("ccid"), col("fcid"), col("semb")),
-        Seq("ccid"))
-      .select(col("vec_id"), col("fcid"),
-        quant_sqdist(col("embedding"), col("semb")).as("dist"))
-    val ub = incell.groupBy(col("vec_id")).agg(min(col("dist")).as("ub"))
-    // the lower-bound candidate frame: ub joins into the NARROW n·kc
-    // frame, the embedding attaches by one (n·kc)-to-n join, and only
-    // then does the ≤ k-row cell→seed broadcast expand to the n·k pair
-    // rows — which exist solely inside that one join + filter + fold
-    // stage: never shuffled, never sorted, never materialized. The
-    // left join + MaxValue coalesce keeps a vector whose selected cell
-    // held no seed (impossible by the q271 no-stranded-member
-    // argument, but a frame bug here must surface as extra exact work,
-    // not a wrong assignment): ub = ∞ makes every pair non-prunable.
-    val ownBound = k * kc <= ownBoundRows
-    val pairs0 = coarseD
-      .filter(col("ccid") =!= col("vccid"))
-      .join(ub, Seq("vec_id"), "left")
-      .withColumn("ubv", coalesce(col("ub"), lit(Long.MaxValue)))
-      .join(probe.hint("shuffle_hash"), Seq("vec_id"))
-      .join(scell.select(col("fcid"), col("semb"), col("ccid"),
-        col("r")), Seq("ccid"))
-    // the OWN-CENTER bound's lookup rides the same fold stage: sOwn
-    // is k·kc narrow rows, broadcast EXPLICITLY (a planner shuffle on
-    // (fcid, vccid) would re-exchange the n·k pair rows) — bounded by
-    // [[OwnBoundMaxRows]], past which the bound switches off
-    val pairs =
-      if (ownBound) pairs0.join(broadcast(sOwn), Seq("fcid", "vccid"))
-      else pairs0
-    // Elkan skip, proven-safe: d(x,f) ≥ |√D − √R| (triangle inequality
-    // through f's own cell center), so f is skippable when
-    // (√D − √R)² > ub ⟺ m := D + R − ub > 0 ∧ m² > 4·D·R. The square
-    // is tested in doubles with [[PruneGuard]] slack (exact-safe — see
-    // its doc); m itself is exact LONG (D + R < 2⁵¹, no overflow).
-    val m = col("cd") + col("r") - col("ubv")
-    val prunableTri = (m > 0L) &&
-      (m.cast("double") * m.cast("double") >
-        lit(4.0) * col("cd").cast("double") * col("r").cast("double") *
-          lit(PruneGuard))
-    // SECOND bound (VERDICT r14 #2 — the triangle bound through the
-    // seed's cell degenerates when √D ≈ √R, which is exactly the
-    // survivor mass): the same inequality through the VECTOR's own
-    // cell center g, d(x,f) ≥ |√s − √dxv| with s = d²(f, g) and
-    // dxv = d²(x, g) — both exact BIGINTs in the same quantized
-    // space, both directions of the triangle valid, same
-    // double-domain square test with the same guard. Independent of
-    // the first bound (different projection axis), so the union
-    // prunes pairs either alone cannot.
-    val prunableOwn =
-      if (!ownBound) lit(false)
-      else {
-        val m2 = col("s") + col("dxv") - col("ubv")
-        (m2 > 0L) &&
-          (m2.cast("double") * m2.cast("double") >
-            lit(4.0) * col("s").cast("double") *
-              col("dxv").cast("double") * lit(PruneGuard))
-      }
-    PrunedFrames(incell, pairs, prunableTri || prunableOwn, kc,
-      prunableTri, prunableOwn)
-  }
-
-  /** Elkan/Hamerly-pruned EXACT nearest-seed assignment (VERDICT r13
-    * #1) over a raw (vec_id, embedding) frame — bit-identical output to
+  /** Elkan-pruned EXACT nearest-seed assignment (VERDICT r13 #1) over a
+    * raw (vec_id, embedding) frame — bit-identical output to
     * [[assignMembers]] over the same corpus and seeds, with proven-safe
-    * candidate skips instead of the full n·k·d expansion:
-    *
-    *  1. coarse pass: exact distance D to each of kc = ⌈√k⌉ coarse
-    *     centers (the first kc seeds — exactly the two-level path's
-    *     cells), n·kc array folds;
-    *  2. in-cell pass: exact distances to the own cell's seeds,
-    *     n·(k/kc) expected folds; the minimum is the upper bound ub;
-    *  3. lower-bound filter: out-of-cell seed f is SKIPPED when
-    *     (√D(x,cell(f)) − √R(f))² > ub — by the triangle inequality its
-    *     true distance then strictly exceeds an already-computed one,
-    *     so it can neither win nor tie the argmin (ties break on exact
-    *     BIGINT equality, which a strict bound excludes);
-    *  4. exact pass over the survivors only; argmin over
-    *     in-cell ∪ survivors with the (dist, lowest cid) tie-break.
-    *
-    * Work: n·kc + n·k/kc + |survivors| array folds plus an n·k
-    * filter-only stage — against the flat form's n·k·d component rows
-    * through a hash aggregate. On clustered corpora (the regime that
-    * matters: a crawl blob, planted locality) survivors ≈ 0 for blob
-    * members (measured 94% of all pairs pruned for clone-blob vectors);
-    * on a fully isotropic corpus the bound degenerates (√D ≈ √R for
-    * every pair — pruning ≈ kc/k) and the win is the kernel shape
-    * alone: one fused codegen fold per PAIR (QuantSqDist) instead of d
-    * hash-aggregate rows. Distances and tie-breaks replicate
-    * [[assignMembers]] exactly — PrunedAssignSpec pins bit-identity on
-    * the isotropic fixture, planted locality, and a clone-blob corpus,
-    * and recomputes every skipped pair's exact distance to prove it
-    * exceeds ub. Returns (vec_id, cid, dist). */
+    * candidate skips instead of the full n·k·d expansion: the
+    * [[PrunedAssign]] core at its quantized-L2 metric (bound, plan shape
+    * and their measurements are on its Scaladoc). Returns (vec_id, cid,
+    * dist). */
   private[graft] def assignMembersPruned(ea: DataFrame, k: Long,
       seedsEa: Option[DataFrame] = None,
-      probeParallelism: Option[Int] = None,
-      ownBoundRows: Long = OwnBoundDefaultRows): DataFrame = {
-    val pf = prunedPairFrames(ea, k, seedsEa, probeParallelism,
-      ownBoundRows)
+      probeParallelism: Option[Int] = None): DataFrame = {
+    val pf = PrunedAssign.frames(ea, k, PrunedAssign.QuantL2, seedsEa,
+      probeParallelism)
     val wv = org.apache.spark.sql.expressions.Window
       .partitionBy(col("vec_id"))
-    // survivor distances fold IN the pair stage (both arrays are
-    // already on the row — see prunedPairFrames); output is narrow
     def argmin(df: DataFrame): DataFrame = df
       .withColumn("rk", row_number().over(
-        wv.orderBy(col("dist"), col("fcid"))))
+        wv.orderBy(col("score"), col("fcid"))))
       .filter(col("rk") === 1)
-      .select(col("vec_id"), col("fcid"), col("dist"))
-    val svWin = argmin(pf.pairs.filter(!pf.prunable)
-      .select(col("vec_id"), col("fcid"),
-        graft.functions.VectorFunctions
-          .quant_sqdist(col("embedding"), col("semb")).as("dist")))
+      .select(col("vec_id"), col("fcid"), col("score").as("dist"))
+    val svWin = argmin(pf.survivors)
       .select(col("vec_id"), col("fcid").as("sfcid"),
         col("dist").as("sdist"))
     // per-side argmins + a 1-row-per-vector combine instead of a
@@ -471,40 +238,6 @@ object Centroids {
         when(col("dist").isNull, col("sdist"))
           .when(col("sdist").isNull, col("dist"))
           .otherwise(least(col("dist"), col("sdist"))).as("dist"))
-  }
-
-  /** The pruned assignment's skip ledger (the q264/q274 accounting
-    * discipline — a bounded operator must COUNT what it skipped): one
-    * row with the pair totals of [[assignMembersPruned]] over this
-    * corpus. pairs_total = n·k; pairs_incell computed exactly in the
-    * upper-bound pass; of the out-of-cell rest, pairs_pruned are
-    * skipped by the proven-safe bound and pairs_survivor are computed
-    * exactly. incell + pruned + survivor = total by construction
-    * (asserted in PrunedAssignSpec, which also recomputes every pruned
-    * pair to prove dist > ub). */
-  private[graft] def prunedAssignAccounting(ea: DataFrame, n: Long,
-      k: Long, seedsEa: Option[DataFrame] = None,
-      probeParallelism: Option[Int] = None,
-      ownBoundRows: Long = OwnBoundDefaultRows): DataFrame = {
-    val pf = prunedPairFrames(ea, k, seedsEa, probeParallelism,
-      ownBoundRows)
-    val outcell = pf.pairs.agg(
-      coalesce(sum(when(pf.prunable, 1L).otherwise(0L)), lit(0L))
-        .as("pairs_pruned"),
-      coalesce(sum(when(pf.prunable, 0L).otherwise(1L)), lit(0L))
-        .as("pairs_survivor"),
-      // by-bound attribution (overlapping — a pair both bounds prove
-      // is counted in each; `pairs_pruned` is their union)
-      coalesce(sum(when(pf.prunableTri, 1L).otherwise(0L)), lit(0L))
-        .as("pairs_pruned_tri"),
-      coalesce(sum(when(pf.prunableOwn, 1L).otherwise(0L)), lit(0L))
-        .as("pairs_pruned_own"))
-    pf.incell.agg(count(lit(1)).as("pairs_incell"))
-      .crossJoin(outcell)
-      .select(lit(n).as("n"), lit(k).as("k"), lit(pf.kc).as("kc"),
-        lit(n * k).as("pairs_total"), col("pairs_incell"),
-        col("pairs_pruned"), col("pairs_survivor"),
-        col("pairs_pruned_tri"), col("pairs_pruned_own"))
   }
 
   /** Deterministic sample for the q271/q277 exact-agreement audits and
@@ -1106,58 +839,52 @@ object Centroids {
   private[graft] def gateGo(agree: Long, tot: Long): Boolean =
     probeConclusive(agree, tot) && agree * 10L >= tot * 9L
 
-  /** Session-lifetime memo for [[resolveAssignGate]]'s probe decision,
-    * keyed by the CANONICALIZED input (and seed) plans plus the gate
-    * geometry — full structural plan equality, not a hash, so distinct
-    * corpora can never collide into each other's decision — plus the
-    * frames' [[fileInventory]] (ADVICE r12): plans compare by relation
-    * paths, so a fixture rewritten in place mid-session with an
-    * unchanged row count would otherwise replay the stale decision.
-    * Rationale: the probe is deterministic (mod sample, exact-BIGINT
-    * distances, id tie-breaks), so re-running it per operator over the
-    * same corpus snapshot buys nothing, and its wall cost is dominated
-    * by FIXED stage-scheduling overhead (~1.5 s warm at any SF) that
-    * would otherwise be paid by every family member in a session. A
-    * production pipeline probes each corpus version once; this memo is
-    * that behavior within a session. Bounded by distinct corpora per
-    * session. */
-  private val hierGoMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan],
-      Long, Long, String), java.lang.Boolean]()
+  /** Session-lifetime memo of the data-driven gates' probe decisions
+    * ([[resolveAssignGate]]'s go/no-go, [[Similarity.resolveNprobe]]'s
+    * dial pick), keyed by the gate's name, the CANONICALIZED input
+    * plans plus the gate geometry — full structural plan equality, not a
+    * hash, so distinct corpora can never collide into each other's
+    * decision — plus the frames' [[graft.Tables.fileInventory]] (ADVICE
+    * r12): plans compare by relation paths, so a fixture rewritten in
+    * place mid-session with an unchanged row count would otherwise
+    * replay the stale decision. Rationale: the probes are deterministic
+    * (mod sample, exact-BIGINT distances, id tie-breaks), so re-running
+    * one per operator over the same corpus snapshot buys nothing, and
+    * its wall cost is dominated by FIXED stage-scheduling overhead
+    * (~1.5 s warm at any SF) that would otherwise be paid by every
+    * family member in a session. A production pipeline probes each
+    * corpus version once; this memo is that behavior within a session.
+    * Bounded by distinct corpora per session. */
+  private val gateMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan],
+      Long, Long, String), Any]()
 
   /** Test seam: drop memoized gate decisions (the memo is
     * object-lifetime = JVM-wide, so a spec that counts probe runs must
     * start from a known state). */
-  private[graft] def clearGateMemoForTest(): Unit = hierGoMemo.clear()
+  private[graft] def clearGateMemoForTest(): Unit = gateMemo.clear()
+
+  /** `gate`'s decision for the corpus snapshot `frames` at (n, k):
+    * memoized, or `probe` run once and recorded. Returns the decision
+    * and whether it was a memo hit. */
+  private[graft] def gateDecision[T](gate: String, frames: Seq[DataFrame],
+      n: Long, k: Long)(probe: => T): (T, Boolean) = {
+    val key = (gate, frames.map(_.queryExecution.analyzed.canonicalized),
+      n, k, frames.map(Tables.fileInventory(_)).mkString("|"))
+    Option(gateMemo.get(key)) match {
+      case Some(v) => (v.asInstanceOf[T], true)
+      case None =>
+        val v = probe
+        gateMemo.put(key, v)
+        (v, false)
+    }
+  }
 
   /** Probe executions this JVM — incremented by [[hierGoProbe]] so the
     * memo specs can assert "decision reused WITHOUT probing" directly
     * rather than by timing. */
   private[graft] val hierProbeRuns =
     new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** The bytes a frame reads: every input file's
-    * `path:length:mtime`, sorted and `;`-joined — "" for a frame with
-    * no file-backed relation (an in-memory frame's full structural plan
-    * already carries its data). The gate memos key on it beside the
-    * canonicalized plan, which names relations by path only, so a
-    * corpus rewritten in place re-probes instead of replaying a stale
-    * decision. Assumes millisecond mtimes: on a filesystem with coarse
-    * (1 s) granularity a same-length rewrite inside the window is
-    * invisible here. */
-  private[graft] def fileInventory(df: DataFrame): String = {
-    val files = df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.inputFiles.toSeq
-          case _ => Seq.empty[String]
-        }
-    }.flatten
-    files.sorted.map(graft.Tables.fileInventory(df.sparkSession, _))
-      .mkString(";")
-  }
 
   /** Resolve the SemDeDup-family assignment gate. A caller-forced
     * `assignGate` — any value other than the [[HierAssignGate]]
@@ -1166,7 +893,7 @@ object Centroids {
     * decision is DATA-DRIVEN: below `autoProbeGate` the flat path runs
     * without probing; above it [[hierGoProbe]] measures the corpus's
     * own clusterability (once per corpus snapshot per session —
-    * [[hierGoMemo]]), and the two-level path is enabled only when the
+    * [[gateDecision]]), and the two-level path is enabled only when the
     * sampled exact-agreement clears [[HierAutoAgreeMin]] — planted
     * locality flips it on, the isotropic fixtures keep it off, both
     * spec-pinned in SimilaritySpec. Returns the gate to pass to
@@ -1178,16 +905,7 @@ object Centroids {
     if (assignGate != HierAssignGate) assignGate
     else if (n <= autoProbeGate) HierAssignGate
     else {
-      val inv = fileInventory(qv) +
-        seeds.map("|" + fileInventory(_)).getOrElse("")
-      val key = (qv.queryExecution.analyzed.canonicalized,
-        seeds.map(_.queryExecution.analyzed.canonicalized), n, k, inv)
-      val cached = hierGoMemo.get(key)
-      val go: Boolean = if (cached != null) {
-        println(s"[semassign-auto] frame=$frameLabel n=$n k=$k: memoized" +
-          s" -> ${if (cached) "two-level" else "flat"} assignment")
-        cached
-      } else {
+      val (go, hit) = gateDecision("assign", qv +: seeds.toSeq, n, k) {
         val (agree, tot) = hierGoProbe(qv, n, k, seeds)
         // the full pure decision (exact integer threshold — ADVICE r12 —
         // plus the r13 conclusiveness guard): agree·10 ≥ tot·9 AND the
@@ -1198,9 +916,11 @@ object Centroids {
           s"$HierAutoAgreeMin (conclusive=" +
           s"${probeConclusive(agree, tot)}) -> " +
           (if (g) "two-level" else "flat") + " assignment")
-        hierGoMemo.put(key, g)
         g
       }
+      if (hit)
+        println(s"[semassign-auto] frame=$frameLabel n=$n k=$k: memoized" +
+          s" -> ${if (go) "two-level" else "flat"} assignment")
       if (go) 0L else HierAssignGate
     }
   }

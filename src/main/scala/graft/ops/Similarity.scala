@@ -445,140 +445,19 @@ object Similarity {
     * overhead. */
   private[graft] val IvfPrunedPairGate = 2000000L
 
-  /** Rounding + fp guard for the angular prune's skip test: a centroid
-    * is skipped only when its cosine CEILING sits below the in-cell
-    * best rounded cosine by more than half the 4-dp rounding step
-    * (5e-5 — past it the rounded cosine is strictly smaller, so the
-    * pair can neither win nor tie the committed argmax even with the
-    * smallest-id tie-break) plus 1e-6 of floating-point slack. The
-    * ceiling is three cosine folds and two sqrts in doubles whose
-    * accumulated error at d = 64 is < 1e-12 — six orders inside the
-    * slack; borderline pairs are computed exactly, never skipped, so
-    * the guard only ever costs work, not correctness. */
-  private val IvfPruneMargin = 5.0e-5 + 1.0e-6
-
-  /** Internal frames of the angular Elkan-pruned IVF assignment —
-    * shared by [[ivfAssignPruned]] (the operator) and
-    * [[ivfPrunedAccounting]] (the skip ledger): `incell` the exact
-    * rounded cosines to the own angular cell's centroids, `pairs` the
-    * bounded candidate frame for every (vector, out-of-cell centroid)
-    * with `prunable` the proven-safe skip predicate over it. */
-  private[graft] final case class IvfPrunedFrames(incell: DataFrame,
-      pairs: DataFrame, prunable: Column, kc: Long)
-
-  /** Build [[IvfPrunedFrames]] over a (vec_id, embedding) corpus with
-    * the first `k` vectors as centroids — the cosine-domain twin of
-    * [[graft.ops.Centroids.prunedPairFrames]] (VERDICT r14 #1: that
-    * bound machinery speaks quantized L2, the IVF metric is rounded
-    * cosine, so the triangle inequality moves to the unit sphere
-    * instead of forcing a metric swap under the committed oracle
-    * semantics):
-    *
-    *  - cosine is scale-invariant, so every vector sits on the unit
-    *    sphere where the chordal distance d(x̂, ŷ)² = 2 − 2·cos(x, y)
-    *    is a true metric — D and R below are computed from the SAME
-    *    codegen'd cosine kernel the flat path folds, no normalization
-    *    pass;
-    *  - coarse pass: D = d²(x̂, ĝ) to each of kc = ⌈√k⌉ coarse centers
-    *    (the first kc centroids), n·kc folds; the nearest center is
-    *    x's angular cell;
-    *  - each centroid's own cell + R = d²(ĉ, ĝ) to its center (k·kc
-    *    folds, negligible);
-    *  - in-cell pass: exact ROUNDED cosines (the committed 4-dp
-    *    values) to the own cell's centroids, n·(k/kc) expected folds;
-    *    the maximum is the upper bound ub;
-    *  - skip test: by the triangle inequality d(x̂, ĉ) ≥ |√D − √R|, so
-    *    cos(x, c) ≤ 1 − (√D − √R)²/2 — centroid c is SKIPPED when that
-    *    ceiling sits more than [[IvfPruneMargin]] below ub (its
-    *    rounded cosine is then strictly smaller than an
-    *    already-computed one, so it can neither win nor tie).
-    *
-    * The plan shape is the Centroids twin's, measured decisions
-    * inherited (narrow window frames — no array-bearing sort; the
-    * embedding re-attaches by ONE hinted shuffle_hash join per pass —
-    * the planner's sub-10MB broadcast of the corpus side is a 100 TB
-    * dead end; the ≤ k-row cell→centroid frame AQE-broadcasts so the
-    * n·k pair rows exist only inside one join + filter + fold stage,
-    * never shuffled or materialized). */
-  private[graft] def ivfPrunedFrames(e0: DataFrame, k: Long,
-      probeParallelism: Option[Int]): IvfPrunedFrames = {
-    val w = Window
-    val e = e0.select(col("vec_id"), col("embedding"))
-    val cents = e.filter(col("vec_id") < k)
-      .select(col("vec_id").as("fcid"), col("embedding").as("semb"))
-    val kc = math.max(2L, math.ceil(math.sqrt(k.toDouble)).toLong)
-    val ca = cents.filter(col("fcid") < kc)
-      .select(col("fcid").as("ccid"), col("semb").as("cemb"))
-    // chordal sq-distance on the unit sphere from the raw-array cosine
-    // (greatest(…, 0) guards the last-ulp cos > 1 of a self-pair —
-    // sqrt of a negative is NaN and would silently disable the skip)
-    def chord(a: Column, b: Column): Column =
-      greatest(lit(0.0), lit(2.0) - lit(2.0) * cosine(a, b))
-    val scell = cents
-      .select(col("fcid"), col("semb"),
-        explode(sequence(lit(0L), lit(kc - 1L))).as("ccid"))
-      .join(ca, Seq("ccid"))
-      .select(col("fcid"), col("semb"), col("ccid"),
-        chord(col("semb"), col("cemb")).as("sd"))
-      .withColumn("srk", row_number().over(
-        w.partitionBy(col("fcid")).orderBy(col("sd"), col("ccid"))))
-      .filter(col("srk") === 1)
-      .select(col("fcid"), col("semb"), col("ccid"), col("sd").as("r"))
-    val probe = probeParallelism
-      .map(p => e.repartition(p, col("vec_id"))).getOrElse(e)
-    val wv = w.partitionBy(col("vec_id"))
-    val coarseD = probe
-      .select(col("vec_id"), col("embedding"),
-        explode(sequence(lit(0L), lit(kc - 1L))).as("ccid"))
-      .join(ca, Seq("ccid"))
-      .select(col("vec_id"), col("ccid"),
-        chord(col("embedding"), col("cemb")).as("cd"))
-      .withColumn("crk", row_number().over(
-        wv.orderBy(col("cd"), col("ccid"))))
-      .withColumn("vccid",
-        max(when(col("crk") === 1, col("ccid"))).over(wv))
-    val incell = coarseD.filter(col("crk") === 1)
-      .select(col("vec_id"), col("ccid"))
-      .join(probe.hint("shuffle_hash"), Seq("vec_id"))
-      .join(scell.select(col("ccid"), col("fcid"), col("semb")),
-        Seq("ccid"))
-      .select(col("vec_id"), col("fcid"),
-        round(cosine(col("embedding"), col("semb")), 4).as("cs"))
-    val ub = incell.groupBy(col("vec_id")).agg(max(col("cs")).as("ub"))
-    // left join + (−2) coalesce: a vector whose cell held no centroid
-    // is impossible (cell center g < kc IS centroid g, so every cell
-    // holds at least its own center), but a frame bug here must
-    // surface as extra exact work, not a wrong assignment — ub = −2
-    // (below any cosine) makes every pair non-prunable
-    val pairs = coarseD
-      .filter(col("ccid") =!= col("vccid"))
-      .join(ub, Seq("vec_id"), "left")
-      .withColumn("ubv", coalesce(col("ub"), lit(-2.0)))
-      .join(probe.hint("shuffle_hash"), Seq("vec_id"))
-      .join(scell.select(col("fcid"), col("semb"), col("ccid"),
-        col("r")), Seq("ccid"))
-    val diff = sqrt(col("cd")) - sqrt(col("r"))
-    val prunable =
-      lit(1.0) - diff * diff / lit(2.0) <
-        col("ubv") - lit(IvfPruneMargin)
-    IvfPrunedFrames(incell, pairs, prunable, kc)
-  }
-
   /** Angular Elkan-pruned EXACT IVF coarse assignment (VERDICT r14
     * #1) — bit-identical output to the flat long-encoded argmax over
     * [[centSims]] (the committed rounded-cosine semantics, smallest
     * cent_id winning ties), with proven-safe candidate skips instead
-    * of the full n·k cosine expansion. See [[ivfPrunedFrames]] for
-    * the bound; survivors' cosines are computed by the SAME
-    * round(cosine, 4) expression the flat path folds, so computed
-    * values are identical doubles and skipped pairs are proven unable
-    * to reach the in-cell best (IvfPrunedSpec pins bit-identity on
-    * planted locality, isotropic, and clone-blob corpora, and
-    * recomputes every skipped pair's rounded cosine to prove it
-    * strictly below ub). Returns (vec_id, cent_id). */
+    * of the full n·k cosine expansion: the [[PrunedAssign]] core at its
+    * rounded-cosine metric (the unit-sphere bound, plan shape and their
+    * measurements are on its Scaladoc). Survivors' cosines are computed
+    * by the SAME round(cosine, 4) expression the flat path folds, so
+    * computed values are identical doubles. Returns (vec_id, cent_id). */
   private[graft] def ivfAssignPruned(e: DataFrame, k: Long,
       probeParallelism: Option[Int] = None): DataFrame = {
-    val pf = ivfPrunedFrames(e, k, probeParallelism)
+    val pf = PrunedAssign.frames(e, k, PrunedAssign.RoundedCosine,
+      probeParallelism = probeParallelism)
     val stride = centStride(k)
     // the flat path's long-encoded argmax priority, per side, then a
     // per-vector combine — the union'd global aggregate would
@@ -586,12 +465,9 @@ object Similarity {
     // aggregates ride the probe's existing vec_id partitioning
     def pr(df: DataFrame): DataFrame = df
       .groupBy(col("vec_id"))
-      .agg(max(round(col("cs") * 10000).cast("long") * stride +
+      .agg(max(round(col("score") * 10000).cast("long") * stride +
         (lit(stride - 1) - col("fcid"))).as("m"))
-    val sv = pr(pf.pairs.filter(!pf.prunable)
-        .select(col("vec_id"), col("fcid"),
-          round(cosine(col("embedding"), col("semb")), 4).as("cs")))
-      .select(col("vec_id"), col("m").as("sm"))
+    val sv = pr(pf.survivors).select(col("vec_id"), col("m").as("sm"))
     // full outer: a vector with every out-of-cell pair pruned has no
     // survivor row (the common case on clustered mass); defensively,
     // a vector with no in-cell row combines from the survivor side
@@ -599,26 +475,6 @@ object Similarity {
       .select(col("vec_id"),
         (lit(stride - 1) - pmod(greatest(col("m"), col("sm")),
           lit(stride))).as("cent_id"))
-  }
-
-  /** The pruned IVF assignment's skip ledger (the q274/pruned-assign
-    * accounting discipline — a bounded operator must COUNT what it
-    * skipped): one row with the pair totals over this corpus.
-    * incell + pruned + survivor = n·k by construction (asserted in
-    * IvfPrunedSpec, which also recomputes every pruned pair). */
-  private[graft] def ivfPrunedAccounting(e: DataFrame, n: Long,
-      k: Long, probeParallelism: Option[Int] = None): DataFrame = {
-    val pf = ivfPrunedFrames(e, k, probeParallelism)
-    val outcell = pf.pairs.agg(
-      coalesce(sum(when(pf.prunable, 1L).otherwise(0L)), lit(0L))
-        .as("pairs_pruned"),
-      coalesce(sum(when(pf.prunable, 0L).otherwise(1L)), lit(0L))
-        .as("pairs_survivor"))
-    pf.incell.agg(count(lit(1)).as("pairs_incell"))
-      .crossJoin(outcell)
-      .select(lit(n).as("n"), lit(k).as("k"), lit(pf.kc).as("kc"),
-        lit(n * k).as("pairs_total"), col("pairs_incell"),
-        col("pairs_pruned"), col("pairs_survivor"))
   }
 
   /** The IVF coarse assignment — (vec_id, cent_id) = argmax of the
@@ -783,17 +639,6 @@ object Similarity {
   private[graft] val IvfTargetRecallNum = 9L
   private[graft] val IvfTargetRecallDen = 10L
 
-  /** Session memo for [[resolveNprobe]] — the hierGoMemo pattern: full
-    * canonicalized-plan equality plus the file inventory (never a
-    * hash), so distinct corpora cannot collide and an in-place fixture
-    * rewrite re-probes. */
-  private val nprobeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long,
-      Long, String), java.lang.Long]()
-
-  /** Test seam (see Centroids.clearGateMemoForTest). */
-  private[graft] def clearNprobeMemoForTest(): Unit = nprobeMemo.clear()
-
   /** Dial-probe executions this JVM — the memo spec's counter. */
   private[graft] val nprobeRuns =
     new java.util.concurrent.atomic.AtomicLong(0L)
@@ -822,13 +667,7 @@ object Similarity {
       k: Long = 8L): Long = {
     if (n <= autoProbeGate) IvfDefaultNprobe
     else {
-      val key = (e.queryExecution.analyzed.canonicalized, n, k,
-        Centroids.fileInventory(e))
-      val cached = nprobeMemo.get(key)
-      if (cached != null) {
-        println(s"[ivf-auto] n=$n: memoized -> nprobe=$cached")
-        cached
-      } else {
+      val (pick, hit) = Centroids.gateDecision("nprobe", Seq(e), n, k) {
         nprobeRuns.incrementAndGet()
         // per dial point: total sampled hits vs total possible (5 per
         // probe query with a full dial guaranteed to reach recall 1.0).
@@ -864,9 +703,10 @@ object Similarity {
           dial.map { case (p, h, t) => s"$p->$h/$t" }.mkString(", ") +
           s" vs target $IvfTargetRecallNum/$IvfTargetRecallDen -> " +
           s"nprobe=$pick")
-        nprobeMemo.put(key, pick)
         pick
       }
+      if (hit) println(s"[ivf-auto] n=$n: memoized -> nprobe=$pick")
+      pick
     }
   }
 

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops
 
-/** The angular Elkan-pruned IVF coarse assignment (VERDICT r14 #1):
+/** The angular Elkan-pruned IVF coarse assignment (VERDICT r14 #1),
+  * through the shared [[PrunedAssignProps]] bodies at rounded cosine:
   * bit-identity against the flat long-encoded argmax on all three
   * regimes (isotropic fixture, planted locality, clone blob), the skip
   * ledger's conservation, and the proven-safe property of every
@@ -15,117 +16,37 @@ import graft.ops
   * #7): below the auto-probe gate it IS the registered q76.
   */
 class IvfPrunedSpec extends AnyFunSuite {
+  import PrunedAssignProps._
   private lazy val spark = SparkSuite.session
-
-  private def k(n: Long): Long =
-    math.max(2L, math.ceil(math.sqrt(n.toDouble)).toLong)
-
-  /** The flat argmax and the pruned form as comparable sets. */
-  private def assignSets(e: org.apache.spark.sql.DataFrame, n: Long,
-      kk: Long): (Set[(Long, Long)], Set[(Long, Long)]) = {
-    val acs = ops.Similarity.centSims(e, kk)
-    val flat = ops.Similarity.ivfAssign(e, acs, kk)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val pruned = ops.Similarity.ivfAssign(e, acs, kk, nHint = n,
-        prunedPairGate = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    (flat, pruned)
-  }
 
   test("pruned IVF assignment bit-identical to flat on the isotropic " +
     "fixture, at the scaled k and the historical k = 8") {
-    val e = Tables.embeddings(spark, SparkSuite.sf)
-      .select(col("vec_id"), col("embedding"))
+    val e = fixture()
     val n = e.count()
-    Seq(k(n), 8L).foreach { kk =>
-      val (flat, pruned) = assignSets(e, n, kk)
-      assert(flat === pruned, s"k=$kk")
-    }
+    Seq(k(n), 8L).foreach(kk => assertBitIdentical(Cosine, e, n, kk))
   }
 
   test("pruned IVF assignment bit-identical on planted locality, and " +
     "the regime actually prunes") {
-    val rng = new scala.util.Random(11)
-    val centers = Array.fill(20)(Array.fill(64)(rng.nextGaussian() * 10))
-    val sp = spark
-    import sp.implicits._
-    val e = (0 until 500).map { i =>
-      (i.toLong, centers(i % 20).map(c =>
-        (c + 0.01 * rng.nextGaussian()).toFloat))
-    }.toDF("vec_id", "embedding")
-    val (flat, pruned) = assignSets(e, 500L, k(500))
-    assert(flat === pruned)
-    val acct = ops.Similarity.ivfPrunedAccounting(e, 500L, k(500)).head()
-    assert(acct.getLong(5) > 0L, "planted locality must prune pairs")
+    val e = plantedLocality()
+    assertBitIdentical(Cosine, e, 500L, k(500))
+    assert(ledger(Cosine, e, 500L).getLong(5) > 0L,
+      "planted locality must prune pairs")
   }
 
   test("pruned IVF assignment bit-identical on a clone blob; ledger " +
     "conserves; every skip proven safe on recomputation") {
-    val e0 = Tables.embeddings(spark, SparkSuite.sf)
-      .select(col("vec_id"), col("embedding"))
-    val maxId = e0.agg(max(col("vec_id"))).head().getLong(0)
-    val proto = e0.filter(col("vec_id") === 0L)
-      .head().getSeq[Float](1).toArray
-    val rng = new scala.util.Random(31)
-    val sp = spark
-    import sp.implicits._
-    val clones = (0 until 100).map { i =>
-      (maxId + 1 + i,
-        proto.map(x => x + 0.001f * rng.nextGaussian().toFloat))
-    }
-    val e = e0.unionByName(clones.toDF("vec_id", "embedding"))
+    val e = cloneBlob()
     val n = e.count()
-    val (flat, pruned) = assignSets(e, n, k(n))
-    assert(flat === pruned)
-
-    // ---- the skip ledger: conservation + proven-safe skips ----------
-    val acct = ops.Similarity.ivfPrunedAccounting(e, n, k(n)).head()
-    val (total, incell, prunedN, surv) =
-      (acct.getLong(3), acct.getLong(4), acct.getLong(5), acct.getLong(6))
-    assert(total === n * k(n))
-    assert(incell + prunedN + surv === total,
-      "incell + pruned + survivor must partition the pair space")
-    assert(prunedN > 0L, "the blob must prune pairs")
-
-    // safety: recompute the ROUNDED cosine of every pruned pair and
-    // compare against the in-cell upper bound it was pruned with — it
-    // must sit STRICTLY below (equality would let a smaller cent_id
-    // steal the committed tie-break)
-    val pf = ops.Similarity.ivfPrunedFrames(e, k(n), None)
-    val cents = e.filter(col("vec_id") < k(n))
-      .select(col("vec_id").as("fcid"), col("embedding").as("cemb2"))
-    val unsafe = pf.pairs.filter(pf.prunable)
-      .select(col("vec_id"), col("fcid"), col("ubv"))
-      .join(e.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .join(broadcast(cents), Seq("fcid"))
-      .filter(round(ops.Similarity.cosine(col("embedding"),
-        col("cemb2")), 4) >= col("ubv"))
-    assert(unsafe.count() === 0,
-      "a pruned pair's rounded cosine must sit strictly below its bound")
+    assertBitIdentical(Cosine, e, n, k(n))
+    assertLedgerConserves(Cosine, e, n)
+    assertSkipsSafe(Cosine, e, n)
   }
 
   test("pruned IVF plan shape: the hinted shuffle_hash array attaches " +
     "survive planning, and no pair-stage join degrades to sort-merge") {
-    // The 14.7x win at 181M pairs rests on the pair rows existing only
-    // inside hash-join fold stages: the two probe-side array attaches
-    // are hinted shuffle_hash (the planner's sub-10MB broadcast is a
-    // 100 TB dead end, and an SMJ there sorts n·k array-carrying
-    // rows). Pin the executed counts at fixture scale: exactly 3
-    // ShuffledHashJoins (the hints + one planner pick) and no MORE
-    // than the 5 known narrow-frame SortMergeJoins (id-keyed,
-    // array-free — ub attach, argmax combine, and window-adjacent
-    // joins). A dropped hint reads SHJ < 3; a pair-stage degradation
-    // reads SMJ > 5.
-    val e = Tables.embeddings(spark, SparkSuite.sf)
-      .select(col("vec_id"), col("embedding"))
-    val n = e.count()
-    val df = ops.Similarity.ivfAssignPruned(e, k(n))
-    df.write.format("noop").mode("overwrite").save()
-    val p = df.queryExecution.executedPlan.toString()
-    assert("ShuffledHashJoin".r.findAllIn(p).length === 3, p)
-    assert("SortMergeJoin".r.findAllIn(p).length <= 5, p)
-    assert(!p.contains("CartesianProduct") &&
-      !p.contains("BroadcastNestedLoopJoin"), p)
+    // the 14.7x win at 181M pairs rests on this shape
+    assertPlanShape(Cosine)
   }
 
   test("ivfRetrieve (VERDICT r14 #7): below the auto-probe gate the " +

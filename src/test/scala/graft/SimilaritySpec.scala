@@ -709,16 +709,15 @@ class SimilaritySpec extends AnyFunSuite
         23L, None, ops.Centroids.HierAssignGate, 0L),
         ops.Similarity.resolveNprobe(e, 500L, autoProbeGate = 0L))
     }
-    val inv = ops.Centroids.fileInventory(corpus())
+    val inv = Tables.fileInventory(corpus())
     assert(inv.contains("embeddings.parquet:"),
       s"a file-backed frame carries its inventory (got $inv)")
     val sp = spark
     import sp.implicits._
-    assert(ops.Centroids.fileInventory(
+    assert(Tables.fileInventory(
       Seq((1L, Array(0.1f))).toDF("vec_id", "embedding")) === "",
       "an in-memory frame has no file inventory")
     ops.Centroids.clearGateMemoForTest()
-    ops.Similarity.clearNprobeMemoForTest()
     val hier0 = ops.Centroids.hierProbeRuns.get()
     val np0 = ops.Similarity.nprobeRuns.get()
     val first = resolveBoth()
@@ -730,7 +729,7 @@ class SimilaritySpec extends AnyFunSuite
     // granularity of coarse filesystems (ADVICE r13)
     Thread.sleep(1100)
     Files.copy(src, path, StandardCopyOption.REPLACE_EXISTING)
-    assert(ops.Centroids.fileInventory(corpus()) !== inv,
+    assert(Tables.fileInventory(corpus()) !== inv,
       "an in-place rewrite must change the inventory via its mtime")
     assert(resolveBoth() === first,
       "identical bytes re-probe to the same decision")
@@ -803,7 +802,7 @@ class SimilaritySpec extends AnyFunSuite
         (c + 0.01 * rng.nextGaussian()).toFloat))
     }.toDF("vec_id", "embedding")
     val runs0 = ops.Similarity.nprobeRuns.get()
-    ops.Similarity.clearNprobeMemoForTest()
+    ops.Centroids.clearGateMemoForTest()
     assert(ops.Similarity.resolveNprobe(loc, 400L, 0L) === 1L,
       "planted locality must pick the cheapest dial point")
     assert(ops.Similarity.nprobeRuns.get() === runs0 + 1)
@@ -850,7 +849,7 @@ class SimilaritySpec extends AnyFunSuite
     }
     val expected = rows.find(_.getLong(3) === 1L).map(_.getLong(0))
       .getOrElse(8L)
-    ops.Similarity.clearNprobeMemoForTest()
+    ops.Centroids.clearGateMemoForTest()
     val pick = ops.Similarity.resolveNprobe(e, e.count(),
       autoProbeGate = 0L)
     assert(pick === expected,
@@ -866,7 +865,7 @@ class SimilaritySpec extends AnyFunSuite
     val e = (0 until 60).map(i =>
       (1000L + i, Array.fill(64)(rng.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding")
-    ops.Similarity.clearNprobeMemoForTest()
+    ops.Centroids.clearGateMemoForTest()
     assert(ops.Similarity.resolveNprobe(e, 60L, autoProbeGate = 0L) === 8L,
       "an empty dial must fall back to the conservative endpoint")
   }
