@@ -74,14 +74,23 @@ object Tables {
     * is there. Assumes millisecond mtimes: on a filesystem with coarse
     * (1 s) granularity a same-length rewrite inside the window is
     * invisible here. */
-  private[graft] def fileInventory(spark: SparkSession, path: String): String = {
+  private[graft] def fileInventory(spark: SparkSession, path: String): String =
+    listing(spark, path)
+      .map(st => s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
+      .sorted.mkString(";")
+
+  /** Total length of every file under `path`, from the same one listing
+    * as [[fileInventory]] (no Spark job); 0 when nothing is there. */
+  private[graft] def fileBytes(spark: SparkSession, path: String): Long =
+    listing(spark, path).map(_.getLen).sum
+
+  private def listing(spark: SparkSession,
+      path: String): Seq[org.apache.hadoop.fs.LocatedFileStatus] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return ""
+    if (!fs.exists(p)) return Seq.empty
     val it = fs.listFiles(p, true)
-    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-      .map(st => s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
-    files.toSeq.sorted.mkString(";")
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toSeq
   }
 
   /** The bytes a frame reads: the [[fileInventory]] of every input file

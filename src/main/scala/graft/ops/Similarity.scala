@@ -982,7 +982,7 @@ object Similarity {
     * ([[ivfTopk]] — the k = 8 plan and rows are bit-identical to
     * before the generalization). */
   def q281IvfScaled(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables.embeddings(spark, sfDir)
+    val e = ivfCorpus(spark, sfDir)
     val n = e.count()
     val k = math.max(2L, math.ceil(math.sqrt(n.toDouble)).toLong)
     ivfTopk(e, resolveNprobe(e, n, k = k), k = k, nHint = n)
@@ -1022,8 +1022,14 @@ object Similarity {
     * a hash mismatch instead of silently changing production
     * retrievals. */
   def q282IvfRetrieve(spark: SparkSession, sfDir: String): DataFrame =
-    ivfRetrieve(Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding")))
+    ivfRetrieve(ivfCorpus(spark, sfDir))
+
+  /** The (vec_id, embedding) corpus q281 and q282 retrieve over. Both
+    * entries build it here, so their nprobe dials hand
+    * [[Centroids.gateDecision]] the same plan and a session probes the
+    * corpus once: a frame that kept `label` would key a second dial. */
+  private[graft] def ivfCorpus(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
 
   /** The production entry's fixture-scale oracle is exactly the
     * registered q76 pipeline (see [[q282IvfRetrieve]]). */

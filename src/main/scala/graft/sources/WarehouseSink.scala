@@ -66,12 +66,15 @@ object WarehouseSink {
   /** Deduplicated append — closes the reference's double-load hole (its
     * idempotency branch guards the download, but the JDBC append is blind,
     * `etl.py:53-55`): left-anti join against the existing sink keys before
-    * appending. The result keeps `df`'s column order: a USING join puts
-    * the keys first, and appending that would leave the sink with files
-    * in two column orders. */
+    * appending. The existing keys are not made distinct first: a left-anti
+    * result does not depend on duplicates on the right, so a `distinct`
+    * would only add two hash aggregates and, under AQE, one more shuffle
+    * stage per guarded append. The result keeps `df`'s column order: a
+    * USING join puts the keys first, and appending that would leave the
+    * sink with files in two column orders. */
   def dedupAppend(df: DataFrame, existing: DataFrame,
       keys: Seq[String]): DataFrame =
-    df.join(existing.select(keys.map(col): _*).distinct(), keys, "left_anti")
+    df.join(existing.select(keys.map(col): _*), keys, "left_anti")
       .select(df.columns.toSeq.map(col): _*)
 
   /** One partition's compaction verdict from [[compactionPlan]]. */
@@ -90,7 +93,7 @@ object WarehouseSink {
     * FileSystem API (driver-side metadata only — file COUNTS and sizes,
     * never data) and flags partitions where files-per-partition exceeds
     * what `targetBytes` sizing requires. [[compactPartition]] rewrites one
-    * flagged partition with `repartition(targetFiles)` into a temp dir and
+    * flagged partition with `coalesce(targetFiles)` into a temp dir and
     * atomically swaps it in — rewrite cost is one partition's data, not the
     * table, and partitions compact independently (schedule them as
     * separate parallel jobs at scale). */
@@ -110,11 +113,13 @@ object WarehouseSink {
     }.toSeq.sortBy(_.partition)
   }
 
-  /** Rewrite one partition directory into `targetFiles` files. The swap is
-    * rename-based: write to `<dir>.compact.tmp`, move the old dir aside,
-    * move the new one in, delete the old — the window where readers see a
-    * missing dir is two renames (a table format's metadata commit removes
-    * even that; this is the plain-parquet approximation). */
+  /** Rewrite one partition directory into at most `targetFiles` files.
+    * `coalesce` packs the scan's read partitions into the target count
+    * without a shuffle, so the rewrite is one scan-and-write stage. The
+    * swap is rename-based: write to `<dir>.compact.tmp`, move the old dir
+    * aside, move the new one in, delete the old — the window where readers
+    * see a missing dir is two renames (a table format's metadata commit
+    * removes even that; this is the plain-parquet approximation). */
   def compactPartition(spark: org.apache.spark.sql.SparkSession, root: String,
       partition: String, targetFiles: Int): Unit = {
     val dir = new org.apache.hadoop.fs.Path(root, partition)
@@ -122,7 +127,7 @@ object WarehouseSink {
     val tmp = new org.apache.hadoop.fs.Path(root, partition + ".compact.tmp")
     val old = new org.apache.hadoop.fs.Path(root, partition + ".compact.old")
     Tables.parquet(spark, dir.toString)
-      .repartition(targetFiles)
+      .coalesce(targetFiles)
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     require(fs.rename(dir, old), s"could not move $dir aside")
     require(fs.rename(tmp, dir), s"could not move compacted files into $dir")

@@ -2,8 +2,12 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
+import org.apache.spark.sql.catalyst.plans.logical.{Deduplicate,
+  DeduplicateWithinWatermark, EventTimeWatermark, Filter, LeafNode,
+  LogicalPlan, Project, TransformWithState}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
@@ -60,39 +64,81 @@ object Streams {
     * `graft-<name>…`) and read the output back with the stream's schema.
     * `append` writes the parquet file sink; `update` appends each
     * micro-batch's rows through foreachBatch, because the file sink takes
-    * append only.
-    *
-    * State confs, set here only: a stateful operator keeps one state store
-    * per shuffle partition, and each store commits a checkpoint file every
-    * micro-batch. So the stream runs at 8 shuffle partitions, sized to its
-    * state rather than to the session's CPU-matched batch default, which
-    * bounds that fixed per-batch cost at any core count. Each drain starts
-    * a fresh checkpoint, so the count is free to differ from other runs,
-    * and results are partitioning-blind (watermarks are global, state is
-    * keyed; a stateless stream has no shuffle to size). A plan holding a
-    * `TransformWithState` node also gets the RocksDB state store that
-    * operator requires, with changelog checkpointing: each micro-batch
-    * commits per-partition deltas instead of uploading a full snapshot. */
+    * append only. The stream runs under [[stateConfs]]. */
   private[graft] def drain(stream: Dataset[_], name: String,
       outputMode: String = "append"): DataFrame = {
     val root = graft.Scratch.perQuery(s"graft-$name")
     val out = s"$root/out"
-    val rocksDb =
-      if (stream.queryExecution.analyzed.exists(_.isInstanceOf[TransformWithState]))
-        Map("spark.sql.streaming.stateStore.providerClass" ->
-            ("org.apache.spark.sql.execution.streaming.state." +
-              "RocksDBStateStoreProvider"),
-          ("spark.sql.streaming.stateStore.rocksdb." +
-            "changelogCheckpointing.enabled") -> "true")
-      else Map.empty[String, String]
     runAvailableNow(stream.toDF(), s"$root/cp", outputMode,
-        Map("spark.sql.shuffle.partitions" -> "8") ++ rocksDb) { w =>
+        stateConfs(stream)) { w =>
       if (outputMode == "append") w.format("parquet").option("path", out)
       else w.foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.mode("append").parquet(out)
       }
     }
     graft.Tables.parquet(stream.sparkSession, out, stream.schema)
+  }
+
+  /** The confs [[drain]] scopes to `stream`, read off its analyzed plan
+    * before it starts.
+    *
+    * Shuffle partitions: a stateful operator keeps one state store per
+    * shuffle partition, and each store commits a checkpoint file every
+    * micro-batch, however few rows reach it, so a batch's cost grows with
+    * its store count. In perfbench's traced `curation_ingest` round
+    * (sf0.01, 4-core host), q125's two drains spent 1.95 s in `addBatch`
+    * at 8 stores over 4 micro-batches, and 0.70 s at 1 store over 2 (one
+    * data batch each, no eviction-only batch; see below). So the stream
+    * runs at ⌈input bytes ÷
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`⌉ partitions,
+    * clamped to [1, 8], where the input bytes are the files under its
+    * file-source paths ([[graft.Tables.fileBytes]], a listing, no job).
+    * Each drain starts a fresh checkpoint, so the count is free to differ
+    * from other runs, and results are partitioning-blind (watermarks are
+    * global, state is keyed; a stateless stream has no shuffle to size).
+    *
+    * No-data batch: after the last data batch a stream runs one more
+    * micro-batch that only advances the watermark, so stateful operators
+    * can emit and evict. When the plan's only stateful operators are
+    * deduplications, and everything else is a projection, filter,
+    * watermark or source, that batch emits nothing: it only evicts dedup
+    * state from a checkpoint [[graft.Sessions.release]] deletes. So it is
+    * skipped. Windowed aggregates, sessions, joins and transformWithState
+    * keep it: their flush sentinels and timeouts emit rows in it.
+    *
+    * A plan holding a `TransformWithState` node also gets the RocksDB
+    * state store that operator requires, with changelog checkpointing:
+    * each micro-batch commits per-partition deltas instead of uploading a
+    * full snapshot. */
+  private[graft] def stateConfs(stream: Dataset[_]): Map[String, String] = {
+    val spark = stream.sparkSession
+    val plan = stream.queryExecution.analyzed
+    val bytes = plan.collect { case r: StreamingRelation =>
+      r.dataSource.paths ++ r.dataSource.options.get("path")
+    }.flatten.distinct.map(graft.Tables.fileBytes(spark, _)).sum
+    val advisory =
+      spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val parts = math.min(8L, math.max(1L, (bytes + advisory - 1) / advisory))
+    def dedup(p: LogicalPlan) =
+      p.isInstanceOf[Deduplicate] || p.isInstanceOf[DeduplicateWithinWatermark]
+    val dedupOnly = plan.exists(dedup) && !plan.exists {
+      case _: Project | _: Filter | _: EventTimeWatermark | _: LeafNode => false
+      case p => !dedup(p)
+    }
+    val noDataBatch =
+      if (dedupOnly)
+        Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+      else Map.empty[String, String]
+    val rocksDb =
+      if (plan.exists(_.isInstanceOf[TransformWithState]))
+        Map("spark.sql.streaming.stateStore.providerClass" ->
+            ("org.apache.spark.sql.execution.streaming.state." +
+              "RocksDBStateStoreProvider"),
+          ("spark.sql.streaming.stateStore.rocksdb." +
+            "changelogCheckpointing.enabled") -> "true")
+      else Map.empty[String, String]
+    Map("spark.sql.shuffle.partitions" -> parts.toString) ++ noDataBatch ++
+      rocksDb
   }
 
   /** Stage `batches` under `dir` as one parquet file each, `b<i>.parquet`,

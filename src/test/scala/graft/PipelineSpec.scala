@@ -180,6 +180,26 @@ class PipelineSpec extends AnyFunSuite {
     assert(out.collect().toSeq === Seq(org.apache.spark.sql.Row(2.0, 2L, "b")))
   }
 
+  test("dedupAppend guards against duplicated existing keys with no aggregate") {
+    val sp = spark
+    import sp.implicits._
+    val df = Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")).toDF("k", "w")
+    val existing = Seq((1L, "x"), (1L, "y"), (3L, "z"), (3L, "z"), (5L, "q"))
+      .toDF("k", "w")
+    val out = WarehouseSink.dedupAppend(df, existing, Seq("k"))
+    // the same guard with the existing keys made distinct first
+    val distinctFirst = df.join(existing.select(col("k")).distinct(),
+      Seq("k"), "left_anti").select(df.columns.toSeq.map(col): _*)
+    assert(out.orderBy("k").collect().toSeq ===
+      distinctFirst.orderBy("k").collect().toSeq)
+    assert(out.collect().map(_.getLong(0)).sorted.toSeq === Seq(2L, 4L))
+    // a left-anti result ignores duplicates on the right, so a distinct
+    // there would only add hash aggregates (and a shuffle stage)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("HashAggregate"),
+      s"the guard must not aggregate its existing keys:\n$plan")
+  }
+
   test("CSV and JSON round-trip lineitem losslessly through the readers") {
     val li = Tables.lineitem(spark, SparkSuite.sf)
     val csvDir = Scratch.lasting("graft_csv").toString + "/data"

@@ -738,6 +738,26 @@ class SimilaritySpec extends AnyFunSuite
       "a rewritten snapshot must be re-probed, not replayed stale")
   }
 
+  test("q281 and q282 key one nprobe dial per corpus snapshot") {
+    // each entry builds its own corpus frame; the two must canonicalize
+    // to one memo key, or every session runs the full dial twice
+    val probes = new java.util.concurrent.atomic.AtomicInteger
+    def dial(e: org.apache.spark.sql.DataFrame): Int =
+      ops.Centroids.gateDecision("nprobe", Seq(e), 500L, 23L) {
+        probes.incrementAndGet()
+      }._1
+    ops.Centroids.clearGateMemoForTest()
+    val q281 = dial(Similarity.ivfCorpus(spark, SparkSuite.sf))
+    val q282 = dial(Similarity.ivfCorpus(spark, SparkSuite.sf))
+    assert(q281 === q282 && probes.get() === 1,
+      "the two entries' corpus frames must share one dial")
+    // the memo itself tells corpora apart: a frame that keeps `label`
+    // is another plan and probes again
+    dial(Tables.embeddings(spark, SparkSuite.sf))
+    assert(probes.get() === 2)
+    ops.Centroids.clearGateMemoForTest()
+  }
+
   test("capped probe sample (r13): the modulus adapts so the audit/probe " +
     "sample is min(n/37, ~cap) and decisions are unchanged at the cap") {
     // VERDICT r12 #1: the proportional 1-in-37 sample made the go-probe

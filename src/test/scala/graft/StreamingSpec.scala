@@ -4,6 +4,10 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryListener,
+  StreamingQueryProgress}
+import org.apache.spark.sql.streaming.StreamingQueryListener.{
+  QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Structured Streaming smoke tests — SURVEY.md §2.8: watermarked event-time
@@ -354,18 +358,30 @@ class StreamingSpec extends AnyFunSuite {
     import sp.implicits._
     val parts = "spark.sql.shuffle.partitions"
     val provider = "spark.sql.streaming.stateStore.providerClass"
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
     val before = sp.conf.get(parts)
-    assert(before != "8", "the drain's setting must differ to be seen")
     assert(!sp.conf.getAll.contains(provider))
+    assert(!sp.conf.getAll.contains(noData))
     val dir = Scratch.lasting("graft-drain-fail").toString + "/in"
     Seq((1L, 1.0), (2L, 2.0)).toDF("k", "v").write.parquet(dir)
     val boom = udf { (k: Long) =>
       if (k > 0) throw new IllegalStateException("boom") else k }
     val src = sp.readStream.schema("k BIGINT, v DOUBLE").parquet(dir)
       .select(boom(col("k")).as("_1"), col("v").as("_2"))
+    assert(streaming.Streams.stateConfs(src)(parts) != before,
+      "the drain's partition count must differ from the session's to be seen")
     intercept[org.apache.spark.sql.streaming.StreamingQueryException](
       streaming.Streams.drain(src, "fail-stateless"))
     assert(sp.conf.get(parts) === before)
+    val dedup = streaming.Streams.dedupStream(
+      src.select(col("_1").as("k"), timestamp_seconds(col("_1")).as("ts")),
+      Seq("k"), "ts")
+    assert(streaming.Streams.stateConfs(dedup).get(noData) === Some("false"))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      streaming.Streams.drain(dedup, "fail-dedup"))
+    assert(sp.conf.get(parts) === before)
+    assert(!sp.conf.getAll.contains(noData),
+      "a failed dedup drain left the no-data batch switched off")
     intercept[org.apache.spark.sql.streaming.StreamingQueryException](
       streaming.Streams.drain(
         streaming.Streams.quotaEnforce(src.as[(Long, Double)], 1L),
@@ -373,6 +389,69 @@ class StreamingSpec extends AnyFunSuite {
     assert(sp.conf.get(parts) === before)
     assert(!sp.conf.getAll.contains(provider),
       "a failed transformWithState drain left the RocksDB provider set")
+  }
+
+  /** `body`'s result and the progress of the drains of `name` it ran, in
+    * order. Each drain's sink path holds `graft-<name>`; the listener bus
+    * delivers a query's progress before its termination, so once every
+    * such query has terminated, all of its batches have been seen. */
+  private def drainProgress[T](name: String)(body: => T)
+      : (T, Seq[StreamingQueryProgress]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      StreamingQueryProgress]()
+    val ended = java.util.concurrent.ConcurrentHashMap
+      .newKeySet[java.util.UUID]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.sink.description.contains(s"graft-$name"))
+          seen.add(e.progress): Unit
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        ended.add(e.id): Unit
+    }
+    spark.streams.addListener(listener)
+    try {
+      val out = body
+      def progress = seen.toArray(Array.empty[StreamingQueryProgress]).toSeq
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while ((progress.isEmpty || !progress.forall(p => ended.contains(p.id)))
+          && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(progress.nonEmpty && progress.forall(p => ended.contains(p.id)),
+        s"no terminated drain of $name was seen")
+      (out, progress.sortBy(_.batchId))
+    } finally spark.streams.removeListener(listener)
+  }
+
+  test("drains size state to their input and skip a dedup-only last batch") {
+    val sf = SparkSuite.sf
+    // q125 is dedup-only: one data batch, no eviction-only batch after it,
+    // and its few KB of input fit one state partition
+    val (q125, dedup) = drainProgress("q125") {
+      graft.streaming.Streams.q125StreamDedup(spark, sf).count()
+    }
+    assert(dedup.length === 1, dedup.map(_.json).mkString("\n"))
+    assert(dedup.head.stateOperators(0).numShufflePartitions === 1L)
+    assert(q125 === Tables.events(spark, sf)
+      .select(col("user_id"), col("event_type"),
+        date_trunc("day", col("ts")).as("day")).distinct().count())
+    // q136's windows finalize only once its flush sentinel moves the
+    // watermark, which happens in the no-data batch: it must still run
+    // and emit, and the output must still equal the batch twin
+    val (q136, window) = drainProgress("q136") {
+      graft.streaming.Streams.q136StreamWindow(spark, sf).collect()
+        .map(r => (r.getTimestamp(0), r.getString(1),
+          r.getAs[Long]("n_events"), r.getAs[Double]("sum_value"))).toSet
+    }
+    assert(window.length === 2, window.map(_.json).mkString("\n"))
+    // an append-mode window is emitted as it leaves state (the file sink
+    // reports no row count)
+    assert(window.last.numInputRows === 0L &&
+      window.last.stateOperators(0).numRowsRemoved > 0L,
+      "q136's last batch must flush its windows")
+    val batch = ops.Events.q60WindowTumbling(spark, sf).collect()
+      .map(r => (r.getTimestamp(0), r.getString(1),
+        r.getAs[Long]("n_events"), r.getAs[Double]("sum_value"))).toSet
+    assert(q136.nonEmpty && q136 === batch)
   }
 
   test("q259 drops real late rows, emits no duplicate windows (sf0.001)") {
