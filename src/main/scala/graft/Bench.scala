@@ -1,9 +1,35 @@
 package graft
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local(Sessions.cpus, "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
+    run(spark, sfDir, args.toSet,
+      sys.env.getOrElse("SPARK_GRAFT_DETAIL_OUT", "BENCH_DETAIL.json"))
+    spark.stop()
+  }
+
+  /** Classes compiled by janino and its compile time, JVM-wide so far. */
+  private final case class Compiles(classes: Long, compileNanos: Long) {
+    def since(o: Compiles): Compiles =
+      Compiles(classes - o.classes, compileNanos - o.compileNanos)
+    def json: String =
+      s"""{"classes":$classes,"compile_s":${compileNanos / 1e9}}"""
+  }
+  private def compiles(): Compiles = Compiles(
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    CodeGenerator.compileTime)
+
+  /** Times `only` (every registered query when empty) over `sfDir`: prints
+    * the detail line, writes it to `detailOut`, and prints the contract
+    * line last. */
+  def run(spark: SparkSession, sfDir: String, only: Set[String],
+      detailOut: String): Unit = {
     // Untimed warmup: JVM/codegen/parquet-reader init would otherwise be
     // billed to whichever query happens to run first.
     try {
@@ -25,8 +51,12 @@ object Bench {
     // Each query runs twice and reports the min — first executions carry
     // JIT/codegen noise that would otherwise dominate round-to-round
     // variance. A failed query is reported as -1 rather than silently timed.
+    // Beside the time: the classes janino compiled over both runs (their
+    // construction included) and the seconds it spent, so a compile can be
+    // told from the work it delays.
     def timeQuery(mk: () => org.apache.spark.sql.DataFrame,
-        name: String): Double = {
+        name: String): (Double, Compiles) = {
+      val before = compiles()
       val times = (1 to 2).flatMap { _ =>
         val t0 = System.nanoTime()
         try {
@@ -37,17 +67,16 @@ object Bench {
           None
         } finally Sessions.release(spark) // outside the timed section
       }
-      if (times.nonEmpty) times.min else -1.0
+      (if (times.nonEmpty) times.min else -1.0, compiles().since(before))
     }
     // optional trailing args: bench only these queries (local iteration
     // aid, mirroring Verify; the driver passes no args → full run)
-    val only = args.toSet
     val unknown = only.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty,
       s"unknown query name(s): ${unknown.mkString(", ")}")
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
-    val results = sorted.map { case (name, fn) =>
+    val timed = sorted.map { case (name, fn) =>
       name -> timeQuery(() => fn(spark, sfDir), name)
     }
     // Second pass with the determinism-only top orderBy stripped: the final
@@ -55,7 +84,7 @@ object Bench {
     // small) exists for the oracle's hash compare, not the operator under
     // test, and can mask operator regressions on the row-level queries
     // (q40/q41/q42). Production plans look like this.
-    val resultsNoSort = sorted.map { case (name, fn) =>
+    val timedNoSort = sorted.map { case (name, fn) =>
       name -> timeQuery(() => {
         // construct ONCE: queries with eager construction work (q04's
         // pipeline run, localCheckpoint jobs) must not execute twice when
@@ -65,6 +94,12 @@ object Bench {
           .getOrElse(df)
       }, s"$name(nosort)")
     }
+    val results = timed.map { case (k, (t, _)) => k -> t }
+    val resultsNoSort = timedNoSort.map { case (k, (t, _)) => k -> t }
+    val codegen = timed.zip(timedNoSort).map {
+      case ((k, (_, s)), (_, (_, n))) =>
+        s"\"$k\":{\"sorted\":${s.json},\"nosort\":${n.json}}"
+    }.mkString("{", ",", "}")
     def toJson(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => s"\"" + k + "\":" + v }
         .mkString("{", ",", "}")
@@ -78,16 +113,14 @@ object Bench {
     // the final line shortens keys to their unique qNN prefix and rounds
     // to milliseconds so ~100 queries still fit the window whole.
     val detailJson =
-      s"""{"detail_queries":${toJson(results)},"detail_nosort":${toJson(resultsNoSort)}}"""
+      s"""{"detail_queries":${toJson(results)},"detail_nosort":${toJson(resultsNoSort)},"detail_codegen":$codegen}"""
     println(detailJson)
     // Persist the full-precision per-query detail as a file too: the
     // harness keeps only a bounded stdout tail, and the contract line
     // drops the fastest queries when the ledger outgrows the window —
     // the committed detail file is what keeps cheap-query regressions
     // diffable round over round.
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_DETAIL_OUT", "BENCH_DETAIL.json")),
+    java.nio.file.Files.write(java.nio.file.Paths.get(detailOut),
       detailJson.getBytes("UTF-8")): scala.Unit
     def ms(v: Double): Double = math.rint(v * 1000) / 1000
     def shortJson(rs: Seq[(String, Double)], dp: Int): String = {
@@ -115,6 +148,5 @@ object Bench {
       .find(_.length <= 1900)
       .getOrElse(contractLine(Nil, 1, results.size))
     println(line)
-    spark.stop()
   }
 }

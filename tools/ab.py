@@ -3,9 +3,11 @@
 
 Each run is one `sbt runMain graft.Bench <queries>` (Bench forks a fresh
 JVM, stages the co-purchase frames and warms up untimed, then times each
-query min-of-2 with and without its top sort). Runs alternate
-parent, change, parent, change, ... so host drift lands on both sides
-alike. Every run gets its own SPARK_GRAFT_DETAIL_OUT file and the same
+query min-of-2 with and without its top sort). Runs alternate strictly
+between the sides, and the side that runs first alternates too: the
+parent first in even pairs, the change first in odd ones, so drift inside
+a pair lands on both sides alike. The report records each pair's order.
+Every run gets its own SPARK_GRAFT_DETAIL_OUT file and the same
 SPARK_GRAFT_CPUS and SPARK_GRAFT_SF_DIR.
 
 Reported per query, for the sorted and the nosort pass: both medians,
@@ -96,15 +98,21 @@ def main():
                            env=env, stdout=lf, stderr=subprocess.STDOUT,
                            check=True)
     runs = {"parent": [], "change": []}
+    orders = []
     for i in range(a.pairs):
-        for side in ("parent", "change"):
+        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+        orders.append(list(order))
+        for side in order:
             stem = os.path.join(a.work, f"{side}-{i}")
             runs[side].append(run_bench(sides[side], a.queries, env,
                                         stem + ".json", stem + ".log"))
             print(f"[ab] pair {i} {side} done", file=sys.stderr, flush=True)
     report = {
         "protocol": {
-            "order": "parent, change alternating; one fresh JVM per run",
+            "order": "sides alternate, the first side alternating by "
+                     "pair (parent first in even pairs); one fresh JVM "
+                     "per run",
+            "pair_orders": orders,
             "pairs": a.pairs, "cpus": a.cpus,
             "sf": os.path.basename(os.path.normpath(a.sf or "default")),
             "timing": "graft.Bench min-of-2 per query, sorted and nosort",

@@ -63,6 +63,8 @@ def cmp_cell(a, b):
 
 
 def main():
+    # one line per query, visible as it is printed even when redirected
+    sys.stdout.reconfigure(line_buffering=True)
     out_dir, sf_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
     with open(f"{out_dir}/oracle_sql.json") as f:
