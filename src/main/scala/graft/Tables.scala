@@ -97,7 +97,7 @@ object Tables {
     * of its file-backed relations, sorted and `;`-joined — "" for a frame
     * with no file-backed relation (an in-memory frame's full structural
     * plan already carries its data). The gate memo
-    * ([[graft.ops.Centroids.gateDecision]]) keys on it beside the
+    * ([[graft.ops.Similarity.gateDecision]]) keys on it beside the
     * canonicalized plan, which names relations by path only, so a corpus
     * rewritten in place re-probes instead of replaying a stale decision. */
   private[graft] def fileInventory(df: DataFrame): String = {

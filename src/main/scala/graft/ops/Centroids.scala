@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -240,15 +240,15 @@ object Centroids {
           .otherwise(least(col("dist"), col("sdist"))).as("dist"))
   }
 
-  /** Deterministic sample for the q271/q277 exact-agreement audits and
-    * the go-probe: vec_id ≡ [[HierSampleRem]] (mod [[hierSampleMod]](n)).
+  /** Deterministic sample for the q271/q277–q279 exact-agreement
+    * audits: vec_id ≡ [[HierSampleRem]] (mod [[hierSampleMod]](n)).
     * A modulus keeps the oracle replayable (DuckDB filters the same
     * ids), and since r13 the modulus ADAPTS so the sample size is
     * min(⌈n/37⌉, ~[[HierSampleCap]]) instead of proportional forever
     * (VERDICT r12 #1): the agreement estimate needs a few thousand
-    * rows, not n/37, and a proportional sample made the go-probe
+    * rows, not n/37, and a proportional sample made the audit
     * O(n·k/37) = O(n^1.5/37) — the same exponent as the flat assignment
-    * it gates. With the cap the probe is O(cap·k·d) = O(√n) per corpus:
+    * it audits. With the cap the audit is O(cap·k·d) = O(√n) per corpus:
     * sub-linear, and flat in sample size once n > 37·cap. Every oracle
     * fixture (≤ 2000 vectors) and the sf1 scale fixture (20480) sit
     * under 37·cap, so their modulus — and every committed audit reading
@@ -260,11 +260,11 @@ object Centroids {
   private val HierSampleMod = 37L
   private val HierSampleRem = 3L
 
-  /** Target maximum audit/probe sample size; the effective modulus is
+  /** Target maximum audit sample size; the effective modulus is
     * max(37, ⌈n/cap⌉), so the realized sample is within one row of
     * min(n/37, cap). 1000 separates the measured agreement regimes
     * (17–43% vs 100%) by > 50 standard errors (σ ≤ 1.6% at this size)
-    * — the decision needs nothing finer. */
+    * — the audit needs nothing finer. */
   private[graft] val HierSampleCap = 1000L
 
   /** The adaptive sample modulus: 37 until n/37 would exceed
@@ -289,64 +289,31 @@ object Centroids {
     * persists win (5.2× at the 20× point, SCALE_POINT_r10 §B). */
   private[graft] val SemScaleGate = 10000L
 
-  /** Corpus-count gate for the TWO-LEVEL assignment inside
-    * [[semAssign]] — MEASURED OFF in production (`Long.MaxValue`), and
-    * the r11 measurement is the reason (SCALE_POINT_r11): wired at gate
-    * 10k, the coarse→fine path collapsed the assignment-only control's
-    * cost exactly as designed (q274 sf2 nosort 2.98→2.17 s, α 1.03→≈0),
-    * but on the ISOTROPIC fixture the coarse gate trades cluster
-    * BALANCE for assignment speed — 13 clusters pushed past the
-    * production cap (flat: zero), total candidate pairs 9.4M vs the
-    * flat assignment's 4.0M at sf2, 479k pairs SKIPPED (recall
-    * exposure the flat form does not have) — and every pair-join
-    * consumer paid more downstream than the assignment saved (q268 sf2
-    * nosort 3.60→6.77 s). On a corpus with real cluster structure the
-    * trade inverts (coarse cells align with the data's own blobs; the
-    * planted-locality specs show 100% exact agreement), so the seam
-    * stays wired. Since r12 the flip is DATA-DRIVEN rather than a
-    * constant a deployment edits (VERDICT r11 #5): [[resolveAssignGate]]
-    * runs the sampled exact-agreement probe ([[hierGoProbe]]) on the
-    * corpus itself and enables the two-level path only when agreement
-    * clears [[HierAutoAgreeMin]] — the audit IS the go/no-go signal,
-    * now consulted automatically. This constant remains the flat-path
-    * sentinel the resolver defaults to and the forced-override seam
-    * for specs (passing any other value bypasses the probe). */
-  private[graft] val HierAssignGate = Long.MaxValue
+  /** The number of seeds (or coarse cells) for a frame of `x` rows (or
+    * `x` seeds): ⌈√x⌉, at least 2 — the SemDeDup family's k and the
+    * two-level and pruned paths' kc. */
+  private[graft] def seedCount(x: Long): Long =
+    math.max(2L, math.ceil(math.sqrt(x.toDouble)).toLong)
 
-  /** Nearest-seed assignment for the SemDeDup family with the scale
-    * path gated in code: flat [[assignMembers]] (exact, O(n·k·d) =
-    * O(n^1.5·d) at k = ⌈√n⌉ — the oracle-replayable form) for corpora
-    * up to `gate`, and the q271 TWO-LEVEL coarse→fine assignment
-    * (O(n^1.25·d)) above it. The two-level path assigns every vector to
-    * one of kc = ⌈√k⌉ coarse cells (expansion n·kc), then to the
-    * nearest fine seed WITHIN its cell (expected expansion n·k/kc) —
-    * both passes O(n·√k·d). It is approximate (a vector's true nearest
-    * seed can live in a neighboring cell), so the gated path runs
-    * q271's capped deterministic sampled exact-agreement audit as part
-    * of the assignment and prints the accounting line a pipeline run
-    * logs — the number an operator checks before trusting the
-    * two-level index (on corpora with real cluster structure the
-    * planted-blob spec shows 100%; on an isotropic random corpus it is
-    * LOW by construction, q271 Scaladoc). The hier result is
-    * lineage-cut once so the audit's materialization is reused by the
-    * caller instead of re-running the assignment.
-    *
-    * Plan shape above the gate: ONE counted repartition of the probe by
-    * vec_id (shared by the coarse pass and the fine join via
-    * ReuseExchange — same canonical exchange), the kc·d coarse-seed and
-    * k·d fine-seed frames AQE-sized (broadcast while they fit, shuffle
-    * beyond — the r9 de-hint rule), the fine argmin a per-vector window
-    * over its cell's candidates. Members/caps/checksums downstream are
-    * id-agnostic, so callers are unchanged.
+  /** Nearest-seed assignment for the SemDeDup family, exact at every
+    * size: the single-pass exploded [[assignMembers]] (O(n·k·d) =
+    * O(n^1.5·d) at k = ⌈√n⌉ — the oracle-replayable form) up to
+    * [[PrunedAssignPairGate]] probe×seed pairs, and the Elkan-pruned
+    * [[assignMembersPruned]] above it (bit-identical assignments,
+    * proven-safe candidate skips instead of the full expansion). The
+    * approximate two-level form is not a branch: wired in r11 it lost on
+    * every pair-join consumer (SCALE_POINT_r11 §B), its sampled go-probe
+    * cost seconds per corpus snapshot (SCALE_POINT_r12 §A), and the
+    * pruned exact form took over its regime (r14). It stays registered
+    * as q271's [[hierAssign]], an audited index, not a production path.
     *
     * `seeds` overrides where seed vectors come from (q272's batch
-    * assigns against the STANDING corpus's seeds); the fine-seed cells
-    * are computed from the same seed frame, so corpus and batch agree
-    * on the two-level geometry. Returns (vec_id, cid). */
+    * assigns against the STANDING corpus's seeds); `frameN` is the
+    * assigned frame's own row count when it differs from `n`. Returns
+    * (vec_id, cid). */
   private[graft] def semAssign(qv: DataFrame, n: Long, k: Long,
       seeds: Option[DataFrame] = None,
-      gate: Long = HierAssignGate,
-      frameN: Long = -1L, frameLabel: String = "corpus",
+      frameN: Long = -1L,
       arrays: Option[DataFrame] = None,
       seedArrays: Option[DataFrame] = None,
       prunedPairGate: Long = PrunedAssignPairGate): DataFrame = {
@@ -362,12 +329,12 @@ object Centroids {
         "arrays is set (the pruned branch reads seedArrays, the flat " +
         "branch reads seeds — an asymmetric pair silently diverges)")
     // nf = the ASSIGNED frame's own row count. `n` stays the caller's
-    // gate/geometry sizing count — incrSemDedup assigns a BATCH against
-    // the standing corpus's gate and k, but the probe spread and the
-    // audit accounting must follow the frame actually scanned (frameN;
-    // an arithmetic bound is fine — it sizes tasks, not semantics).
+    // sizing count — incrSemDedup assigns a BATCH against the standing
+    // corpus's k, but the pair gate and the probe spread must follow the
+    // frame actually scanned (frameN; an arithmetic bound is fine — it
+    // sizes tasks, not semantics).
     val nf = if (frameN >= 0L) frameN else n
-    if (n <= gate && nf * k > prunedPairGate && arrays.isDefined) {
+    if (nf * k > prunedPairGate && arrays.isDefined) {
       // the Elkan-pruned exact form of the flat path (VERDICT r13 #1):
       // bit-identical assignments (PrunedAssignSpec pins both regimes),
       // proven-safe candidate skips, and the per-pair array-fold kernel
@@ -380,7 +347,7 @@ object Centroids {
       assignMembersPruned(arrays.get, k, seedsEa = seedArrays,
         probeParallelism = Some(prunedParallelism(spark, nf, k)))
         .select(col("vec_id"), col("cid"))
-    } else if (n <= gate) {
+    } else {
       // The flat path keeps the spread UNCONDITIONAL — the one-task-
       // budget gate q262/q271 apply was A/B'd here (ADVICE r11) and
       // REJECTED on measurement: at sf0.1 (n·k ≈ 90k groups, just under
@@ -396,160 +363,26 @@ object Centroids {
       assignMembers(qv, k, hintCentroids = false, seeds = seeds,
         probeParallelism = Some(assignParallelism(spark, nf, k)))
         .select(col("vec_id"), col("cid"))
-    } else {
-      val kc = math.max(2L, math.ceil(math.sqrt(k.toDouble)).toLong)
-      val (hier, agree, tot) =
-        hierPathWithAudit(qv, nf, k, seeds.getOrElse(qv))
-      // the accounting line labels the AUDITED frame and its own row
-      // count (ADVICE r11: for incrSemDedup's batch call `n` is the
-      // standing-corpus gate count, not the frame audited here)
-      println(s"[semassign] two-level path (frame=$frameLabel rows=$nf, " +
-        s"gate n=$n > gate=$gate, k=$k, kc=$kc): " +
-        s"sampled exact-agreement $agree/$tot")
-      hier
     }
   }
 
-  /** The two-level (coarse→fine) assignment of `qv` against `sv`'s
-    * seeds PLUS the capped deterministic sampled exact-agreement
-    * audit — [[semAssign]]'s gated path. `nf` sizes the probe spread
-    * from the frame actually scanned. The assignment is lineage-cut
-    * once so the audit's materialization is reused by the caller
-    * instead of re-running the argmin window + join tail (the r12
-    * diamond cut). Returns (assignment, agree, total). The cheap
-    * pre-commitment form of the same accounting is [[hierGoProbe]]. */
-  private[graft] def hierPathWithAudit(qv: DataFrame, nf: Long,
-      k: Long, sv: DataFrame): (DataFrame, Long, Long) = {
-    val spark = qv.sparkSession
-    import graft.ops.Checkpoints.CutOps
-    val kc = math.max(2L, math.ceil(math.sqrt(k.toDouble)).toLong)
-    // one probe spread sized for the LARGER of the two passes; the
-    // identical repartition subtree in both lets ReuseExchange run
-    // the shuffle once
-    val p = assignParallelism(spark, nf, math.max(kc, math.max(1L, k / kc)))
-    val coarse = assignMembers(qv, kc, hintCentroids = false,
-        seeds = Some(sv), probeParallelism = Some(p))
-      .select(col("vec_id"), col("cid").as("ccid"))
-    // each fine seed's own coarse cell (k probes × kc seeds = k^1.5
-    // expansion — O(n^0.75) at k = √n, negligible). A probe-selected
-    // cell always contains its own seed: seed c coarse-assigns to
-    // cell c (distance 0) unless an identical lower-id twin wins the
-    // exact-BIGINT tie — in which case every probe's tie breaks to
-    // the same lower cid and cell c is never selected (q271's
-    // no-stranded-member argument).
-    val seedCell = assignMembers(sv.filter(col("vec_id") < k), kc,
-        hintCentroids = false, seeds = Some(sv),
-        probeParallelism = Some(assignParallelism(spark, k, kc)))
-      .select(col("vec_id").as("fcid"), col("cid").as("ccid"))
-    val fineCent = sv.filter(col("vec_id") < k)
-      .select(col("vec_id").as("fcid"), col("pos"), col("q").as("cq"))
-      .join(seedCell, Seq("fcid"))
-    val hier = qv.repartition(p, col("vec_id"))
-      .join(coarse, Seq("vec_id"))
-      .join(fineCent, Seq("ccid", "pos"))
-      .groupBy(col("vec_id"), col("fcid"))
-      .agg(sum((col("q") - col("cq")) * (col("q") - col("cq")))
-        .as("dist"))
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id")).orderBy(col("dist"), col("fcid"))))
-      .filter(col("rk") === 1)
-      .select(col("vec_id"), col("fcid").as("cid"))
-      .cutLineage()
-    // the capped-sample exact-agreement audit runs as part of the
-    // gated path (its cost is the operator's cost — timed, not
-    // hidden): min(nf/37, ~cap) probes against all k seeds, counted
-    // spread. The modulus follows the AUDITED frame's own count (for
-    // incrSemDedup's batch call that is the batch, not the corpus —
-    // each audit samples the frame it certifies).
-    val sMod = hierSampleMod(nf)
-    val sampleQv = qv.filter(
-      pmod(col("vec_id"), lit(sMod)) === lit(HierSampleRem))
-    val exact = assignMembers(sampleQv, k, hintCentroids = false,
-        seeds = Some(sv),
-        probeParallelism =
-          Some(assignParallelism(spark, nf / sMod + 1, k)))
-      .select(col("vec_id"), col("cid").as("ecid"))
-    val a = hier.join(exact, Seq("vec_id"))
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum(when(col("cid") === col("ecid"), 1L)
-          .otherwise(0L)), lit(0L)).as("agree"))
-      .head()
-    (hier, a.getLong(1), a.getLong(0))
-  }
-
-  /** Minimum sampled exact-agreement for the probe to enable the
-    * two-level assignment. The two measured regimes sit far apart —
-    * isotropic fixtures 28–40% (nearest-seed near-arbitrary when all
-    * pairs are near-orthogonal, the r11 rejection), planted locality
-    * 100% (SimilaritySpec) — so the threshold is not razor-edge: 0.90
-    * keeps any corpus where more than 1 in 10 sampled vectors would be
-    * mis-assigned (shifting candidate-pair sets and exposing recall
-    * downstream) on the exact flat path. */
-  private[graft] val HierAutoAgreeMin = 0.90
-
-  /** Corpus-count floor below which [[resolveAssignGate]] skips the
-    * probe and keeps the flat path unconditionally: below it the flat
-    * assignment's n·k expansion is a handful of task budgets (the
-    * two-level path cannot win back even the probe's own cost), and
-    * the 1-in-37 sample (< 271 rows) is too small to separate the
-    * measured agreement regimes tightly. Every oracle fixture sits
-    * under it (sf0.01 = 500 vectors, sf0.1 = 2000), so oracle rows are
-    * unchanged by construction; the 10×/20× scale fixtures (20k/40k)
-    * sit above and pay the probe — measured in SCALE_POINT_r12. */
-  private[graft] val HierAutoProbeGate = 10000L
-
-  /** The go/no-go probe for the two-level assignment (VERDICT r11 #5 —
-    * make the HierAssignGate decision data-driven): compare the
-    * two-level and exact assignments of the deterministic capped
-    * sample ([[hierSampleMod]]) against all k seeds, returning (agree, total) — the same
-    * accounting the gated path's in-flight audit reports, measured
-    * BEFORE committing the full corpus to the approximate index.
-    *
-    * Cost design — the probe must be far cheaper than the flat
-    * assignment it gates, and a first cut that ran the full
-    * [[hierPathWithAudit]] machinery on the sample MEASURED as
-    * expensive as that assignment itself (sf1: probe 1.9–5.3 s vs the
-    * whole flat assign 2.0 s — localCheckpoint, two extra expansion
-    * passes, and the two-assignment join are pure overhead at sample
-    * size). The shipped form computes EVERYTHING from ONE sample×k
-    * expansion pass (O(n·k·d/37), the exact audit's own frame):
-    * coarse distances are the fcid < kc subset of the fine distances
-    * BECAUSE the coarse seeds are by construction the first kc fine
-    * seeds, the fine-seed→cell map is one k×kc aggregate (AQE
-    * broadcasts its k-row result back), and both argmins plus the
-    * agreement count are rank windows over the one frame with a single
-    * collecting action. Tie-breaks replicate [[assignMembers]] exactly
-    * — (dist, lowest id) at every level — so the numbers are
-    * bit-identical to the two-pass audit (sf1 reproduces the r11
-    * 151/541 reading; the locality/isotropic specs pin both regimes).
-    * Since r13 the sample is CAPPED via [[hierSampleMod]] (VERDICT r12
-    * #1): the probe is O(min(n/37, cap)·k·d) — sub-linear once the cap
-    * binds, instead of sharing the O(n^1.5) exponent of the flat
-    * assignment it gates. */
-  private[graft] def hierGoProbe(qv: DataFrame, n: Long, k: Long,
-      seeds: Option[DataFrame] = None): (Long, Long) = {
-    hierProbeRuns.incrementAndGet()
-    val a = probePicks(qv, n, k, seeds).agg(
-      coalesce(sum(when(col("erk") === 1, 1L).otherwise(0L)), lit(0L))
-        .as("tot"),
-      coalesce(sum(when(col("erk") === 1 && col("hrk") === 1, 1L)
-        .otherwise(0L)), lit(0L)).as("agree")).head()
-    (a.getLong(1), a.getLong(0))
-  }
-
-  /** The single-pass probe's ranked candidate frame — one row per
+  /** The single-pass audit's ranked candidate frame — one row per
     * (sampled vector, fine seed) carrying the exact rank `erk`, the
     * two-level rank `hrk` (in-cell candidates first), and the vector's
-    * coarse cell `vccid`; [[hierGoProbe]] folds it to the go scalar,
-    * [[q277ProbeAgreement]] reports it per coarse cell. */
-  private[graft] def probePicks(qv: DataFrame, n: Long, k: Long,
-      seeds: Option[DataFrame] = None): DataFrame = {
+    * coarse cell `vccid`: q271's two-level pick and the exact pick for
+    * the capped sample, from ONE sample×k expansion pass. Coarse
+    * distances are the fcid < kc subset of the fine distances because
+    * the coarse seeds are by construction the first kc fine seeds; tie-
+    * breaks replicate [[assignMembers]] — (dist, lowest id) at every
+    * level. [[q277ProbeAgreement]] reports it per coarse cell, q278 and
+    * q279 fold it to one row. */
+  private[graft] def probePicks(qv: DataFrame, n: Long,
+      k: Long): DataFrame = {
     val spark = qv.sparkSession
-    val kc = math.max(2L, math.ceil(math.sqrt(k.toDouble)).toLong)
+    val kc = seedCount(k)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("vec_id"))
-    val cent = seeds.getOrElse(qv).filter(col("vec_id") < k)
+    val cent = qv.filter(col("vec_id") < k)
       .select(col("vec_id").as("fcid"), col("pos"), col("q").as("cq"))
     val sMod = hierSampleMod(n)
     val sample = qv.filter(
@@ -561,8 +394,8 @@ object Centroids {
       .groupBy(col("vec_id"), col("fcid"))
       .agg(sum((col("q") - col("cq")) * (col("q") - col("cq")))
         .as("dist"))
-    // each fine seed's coarse cell — the [[hierPathWithAudit]] seedCell
-    // semantics as one seed×coarse-seed aggregate
+    // each fine seed's coarse cell — q271's seedCell semantics as one
+    // seed×coarse-seed aggregate
     val seedCell = cent
       .join(cent.filter(col("fcid") < kc)
         .select(col("fcid").as("ccid"), col("pos"),
@@ -593,23 +426,22 @@ object Centroids {
         col("dist"), col("fcid"))))
   }
 
-  /** q277_probe_agreement — the go-probe's accounting as an
+  /** q277_probe_agreement — an audit of q271's two-level index as an
     * oracle-checked query: per coarse cell of the capped sample, how
     * many sampled vectors land there and how many of their single-pass
     * two-level picks agree with the exact assignment. This is the SAME
-    * quantity q271's in-flight audit reports (per-vector argmins are
+    * quantity q271's own audit reports (per-vector argmins are
     * independent, so the two-level assignment of the sample equals the
     * full two-level assignment restricted to the sample) computed by
     * the OTHER code path — the one-frame rank-window derivation
-    * [[probePicks]] that [[resolveAssignGate]]'s go decision rides on
-    * — so the oracle hash pins the production decision input
-    * bit-for-bit, and the spec cross-equates it against q271's columns
-    * cell by cell. Scale: sample×k expansion (O(n·k·d/37)), cluster-
-    * partitioned windows only, one k-row broadcastable cell map. */
+    * [[probePicks]] — so the spec cross-equates it against q271's
+    * columns cell by cell. Scale: sample×k expansion (O(n·k·d/37)),
+    * cluster-partitioned windows only, one k-row broadcastable cell
+    * map. */
   def q277ProbeAgreement(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.embeddings(spark, sfDir)
     val n = e.count()
-    val k = math.max(2L, math.ceil(math.sqrt(n.toDouble)).toLong)
+    val k = seedCount(n)
     probePicks(quantized(e), n, k)
       .groupBy(col("vccid").as("ccid"))
       .agg(sum(when(col("erk") === 1, 1L).otherwise(0L)).as("n_sample"),
@@ -618,10 +450,10 @@ object Centroids {
       .orderBy(col("ccid"))
   }
 
-  /** The go-probe's shared CTE pipeline — the DuckDB replay of
+  /** The audit's shared CTE pipeline — the DuckDB replay of
     * [[probePicks]]' one sample×k frame up through the three ranked
     * picks (exact / coarse / two-level). q277 aggregates it per coarse
-    * cell; q278 folds it to the single gate-decision row. */
+    * cell; q278 and q279 fold it to one row. */
   private val probeSqlCtes: String =
     s"""WITH n AS (SELECT count(*) AS n FROM embeddings),
        |k AS (SELECT GREATEST(2, CAST(ceil(sqrt(n)) AS BIGINT)) AS k FROM n),
@@ -681,28 +513,22 @@ object Centroids {
        |FROM vcc v JOIN exact e USING (vec_id) JOIN hier h USING (vec_id)
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** q278_gate_decision — the two-level assignment gate's DECISION
-    * under the DuckDB hash gate: the exact
-    * (n, k, sample_mod, n_sample, n_agree, go) tuple behind the verdict
-    * [[resolveAssignGate]] reaches when it probes this corpus, derived
-    * from the same one-pass [[probePicks]] frame that q277 pins per
-    * coarse cell. `go` is the FULL [[gateGo]] rule — the exact integer
-    * threshold (agree·10 ≥ tot·9 ∧ tot > 0, the ADVICE r12 form) AND
-    * the r13 two-standard-error conclusiveness guard
-    * ([[probeConclusive]]) — so the row is engine-independent end to
-    * end: the oracle replays the DECISION, not just its inputs. The
-    * fixture sits below [[HierAutoProbeGate]], so production would not
-    * probe it at all — like q277, this query runs the accounting
-    * unconditionally; what the gate would DECIDE on this corpus is
-    * exactly what it reports. Scale: one sample×k expansion
-    * (O(min(n/37, cap)·k·d)), folded to one row. The session memo that
-    * serves repeat resolves is spec-pinned by the probe counter
-    * (SimilaritySpec) — a memo has no oracle row, but its decision
-    * arithmetic does. */
+  /** q278_gate_decision — an audit of q271's two-level index folded to
+    * one verdict row under the DuckDB hash gate: the exact
+    * (n, k, sample_mod, n_sample, n_agree, go) tuple from the same
+    * one-pass [[probePicks]] frame that q277 pins per coarse cell. `go`
+    * reads whether the sampled agreement clears the exact integer
+    * threshold (agree·10 ≥ tot·9, the ADVICE r12 form) AND sits more
+    * than two standard errors from it ([[twoSeConclusive]]) — all
+    * integer arithmetic, so the row is engine-independent end to end.
+    * No production path consults it: every SemDeDup-family assignment
+    * is exact ([[semAssign]]), and the row reports whether the two-level
+    * index would be trustworthy on this corpus. Scale: one sample×k
+    * expansion (O(min(n/37, cap)·k·d)), folded to one row. */
   def q278GateDecision(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.embeddings(spark, sfDir)
     val n = e.count()
-    val k = math.max(2L, math.ceil(math.sqrt(n.toDouble)).toLong)
+    val k = seedCount(n)
     probePicks(quantized(e), n, k)
       .agg(
         coalesce(sum(when(col("erk") === 1, 1L).otherwise(0L)), lit(0L))
@@ -712,15 +538,9 @@ object Centroids {
       .select(lit(n).as("n"), lit(k).as("k"),
         lit(hierSampleMod(n)).as("sample_mod"),
         col("n_sample"), col("n_agree"),
-        // the FULL resolver rule (gateGo): exact 9/10 threshold AND
-        // the 2-SE conclusiveness guard — all integer arithmetic
-        when(col("n_sample") > 0L &&
-          col("n_agree") * 10L >= col("n_sample") * 9L &&
-          (col("n_agree") * 10L - col("n_sample") * 9L)
-            * (col("n_agree") * 10L - col("n_sample") * 9L)
-            * col("n_sample")
-            > lit(400L) * col("n_agree")
-              * (col("n_sample") - col("n_agree")), 1L)
+        // exact 9/10 threshold AND the 2-SE conclusiveness guard
+        when(col("n_agree") * 10L >= col("n_sample") * 9L &&
+          twoSeConclusive(col("n_agree"), col("n_sample")), 1L)
           .otherwise(0L).as("go"))
   }
 
@@ -749,36 +569,34 @@ object Centroids {
        |FROM vcc v JOIN exact e USING (vec_id)
        |JOIN hier h USING (vec_id)""".stripMargin
 
-  /** Whether the sampled agreement is CONCLUSIVELY on one side of the
-    * 0.90 gate: |agree/tot − 9/10| > 2·SE where SE =
-    * √(p̂(1−p̂)/tot). Cross-multiplying and squaring (both sides
+  /** Whether the sampled agreement `agree` of `tot` rows is
+    * CONCLUSIVELY on one side of 0.90: |agree/tot − 9/10| > 2·SE where
+    * SE = √(p̂(1−p̂)/tot). Cross-multiplying and squaring (both sides
     * non-negative) gives the EXACT integer form
     * (10·agree − 9·tot)²·tot > 400·agree·(tot−agree) — no IEEE
     * anywhere, and overflow-safe far past the sample cap
     * ((10t)²·t ≈ 10¹¹ at t = 1000 « 2⁶³). A false reading means the
-    * corpus sits within ~2 standard errors of the gate and the binary
-    * go/no-go is sample-noise-sensitive — the operational signal to
-    * probe a larger slice before trusting either path. tot = 0 reads
-    * inconclusive. */
-  private[graft] def probeConclusive(agree: Long, tot: Long): Boolean = {
-    val d = 10L * agree - 9L * tot
-    tot > 0L && d * d * tot > 400L * agree * (tot - agree)
-  }
+    * corpus sits within ~2 standard errors of 0.90 and a binary verdict
+    * is sample-noise-sensitive. tot = 0 reads inconclusive. The one
+    * form of the rule, for q278's `go` and q279's `conclusive`. */
+  private[graft] def twoSeConclusive(agree: Column, tot: Column): Column =
+    tot > 0L && (agree * 10L - tot * 9L) * (agree * 10L - tot * 9L) * tot >
+      lit(400L) * agree * (tot - agree)
 
   /** q279_probe_confidence — the capped sample's STATISTICAL honesty as
     * an oracle row (the r13 cap's companion: shrinking the sample to
     * ~[[HierSampleCap]] rows is only sound if the decision margin is
     * reported with it): the probe accounting of q278 plus `conclusive`
-    * — the exact-integer two-standard-error test of [[probeConclusive]]
+    * — the exact-integer two-standard-error test of [[twoSeConclusive]]
     * — and the agreement point estimate (the one IEEE division, the
     * q152/q276 precedent). On every committed corpus the regimes sit
-    * 30+ SEs from the gate, so the dial reads conclusive; a corpus
-    * straddling 0.90 is exactly the one where an operator must not
-    * trust a binary go/no-go from a 1000-row sample. */
+    * 30+ SEs from 0.90, so the dial reads conclusive; a corpus
+    * straddling 0.90 is exactly the one where a binary verdict from a
+    * 1000-row sample must not be trusted. */
   def q279ProbeConfidence(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.embeddings(spark, sfDir)
     val n = e.count()
-    val k = math.max(2L, math.ceil(math.sqrt(n.toDouble)).toLong)
+    val k = seedCount(n)
     probePicks(quantized(e), n, k)
       .agg(
         coalesce(sum(when(col("erk") === 1, 1L).otherwise(0L)), lit(0L))
@@ -791,12 +609,7 @@ object Centroids {
         when(col("n_sample") === 0L, lit(0.0))
           .otherwise(round(col("n_agree").cast("double")
             / col("n_sample"), 4)).as("agree_rate"),
-        when(col("n_sample") > 0L &&
-          (col("n_agree") * 10L - col("n_sample") * 9L)
-            * (col("n_agree") * 10L - col("n_sample") * 9L)
-            * col("n_sample")
-            > lit(400L) * col("n_agree")
-              * (col("n_sample") - col("n_agree")), 1L)
+        when(twoSeConclusive(col("n_agree"), col("n_sample")), 1L)
           .otherwise(0L).as("conclusive"))
   }
 
@@ -825,105 +638,6 @@ object Centroids {
        |            THEN 1 ELSE 0 END AS BIGINT) AS conclusive
        |FROM vcc v JOIN exact e USING (vec_id)
        |JOIN hier h USING (vec_id)""".stripMargin
-
-  /** The full gate decision as a pure function: go iff the sampled
-    * agreement clears the exact 9/10 threshold AND the reading is
-    * [[probeConclusive]] — a corpus within two standard errors of the
-    * gate is never committed to the APPROXIMATE index on what is
-    * statistically a coin flip; the flat (exact) path is the safe
-    * default there (r13, enforcing what q279 reports). At the
-    * production sample cap (~1000 rows) the inconclusive band is
-    * p̂ ∈ (0.881, 0.919), so any corpus with real planted locality
-    * (the measured regime reads 1.0) still goes; both measured
-    * regimes sit 30+ SEs outside the band. */
-  private[graft] def gateGo(agree: Long, tot: Long): Boolean =
-    probeConclusive(agree, tot) && agree * 10L >= tot * 9L
-
-  /** Session-lifetime memo of the data-driven gates' probe decisions
-    * ([[resolveAssignGate]]'s go/no-go, [[Similarity.resolveNprobe]]'s
-    * dial pick), keyed by the gate's name, the CANONICALIZED input
-    * plans plus the gate geometry — full structural plan equality, not a
-    * hash, so distinct corpora can never collide into each other's
-    * decision — plus the frames' [[graft.Tables.fileInventory]] (ADVICE
-    * r12): plans compare by relation paths, so a fixture rewritten in
-    * place mid-session with an unchanged row count would otherwise
-    * replay the stale decision. Rationale: the probes are deterministic
-    * (mod sample, exact-BIGINT distances, id tie-breaks), so re-running
-    * one per operator over the same corpus snapshot buys nothing, and
-    * its wall cost is dominated by FIXED stage-scheduling overhead
-    * (~1.5 s warm at any SF) that would otherwise be paid by every
-    * family member in a session. A production pipeline probes each
-    * corpus version once; this memo is that behavior within a session.
-    * Bounded by distinct corpora per session. */
-  private val gateMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan],
-      Long, Long, String), Any]()
-
-  /** Test seam: drop memoized gate decisions (the memo is
-    * object-lifetime = JVM-wide, so a spec that counts probe runs must
-    * start from a known state). */
-  private[graft] def clearGateMemoForTest(): Unit = gateMemo.clear()
-
-  /** `gate`'s decision for the corpus snapshot `frames` at (n, k):
-    * memoized, or `probe` run once and recorded. Returns the decision
-    * and whether it was a memo hit. */
-  private[graft] def gateDecision[T](gate: String, frames: Seq[DataFrame],
-      n: Long, k: Long)(probe: => T): (T, Boolean) = {
-    val key = (gate, frames.map(_.queryExecution.analyzed.canonicalized),
-      n, k, frames.map(Tables.fileInventory(_)).mkString("|"))
-    Option(gateMemo.get(key)) match {
-      case Some(v) => (v.asInstanceOf[T], true)
-      case None =>
-        val v = probe
-        gateMemo.put(key, v)
-        (v, false)
-    }
-  }
-
-  /** Probe executions this JVM — incremented by [[hierGoProbe]] so the
-    * memo specs can assert "decision reused WITHOUT probing" directly
-    * rather than by timing. */
-  private[graft] val hierProbeRuns =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Resolve the SemDeDup-family assignment gate. A caller-forced
-    * `assignGate` — any value other than the [[HierAssignGate]]
-    * default — wins (the spec seam; the planted-locality equality
-    * specs force the two-level path at fixture size). Otherwise the
-    * decision is DATA-DRIVEN: below `autoProbeGate` the flat path runs
-    * without probing; above it [[hierGoProbe]] measures the corpus's
-    * own clusterability (once per corpus snapshot per session —
-    * [[gateDecision]]), and the two-level path is enabled only when the
-    * sampled exact-agreement clears [[HierAutoAgreeMin]] — planted
-    * locality flips it on, the isotropic fixtures keep it off, both
-    * spec-pinned in SimilaritySpec. Returns the gate to pass to
-    * [[semAssign]]: 0L routes two-level, [[HierAssignGate]] routes
-    * flat. */
-  private[graft] def resolveAssignGate(qv: DataFrame, n: Long, k: Long,
-      seeds: Option[DataFrame], assignGate: Long, autoProbeGate: Long,
-      frameLabel: String = "corpus"): Long = {
-    if (assignGate != HierAssignGate) assignGate
-    else if (n <= autoProbeGate) HierAssignGate
-    else {
-      val (go, hit) = gateDecision("assign", qv +: seeds.toSeq, n, k) {
-        val (agree, tot) = hierGoProbe(qv, n, k, seeds)
-        // the full pure decision (exact integer threshold — ADVICE r12 —
-        // plus the r13 conclusiveness guard): agree·10 ≥ tot·9 AND the
-        // reading sits more than 2 SEs from the gate
-        val g = gateGo(agree, tot)
-        println(s"[semassign-auto] frame=$frameLabel n=$n k=$k: " +
-          s"probe agreement $agree/$tot vs threshold " +
-          s"$HierAutoAgreeMin (conclusive=" +
-          s"${probeConclusive(agree, tot)}) -> " +
-          (if (g) "two-level" else "flat") + " assignment")
-        g
-      }
-      if (hit)
-        println(s"[semassign-auto] frame=$frameLabel n=$n k=$k: memoized" +
-          s" -> ${if (go) "two-level" else "flat"} assignment")
-      if (go) 0L else HierAssignGate
-    }
-  }
 
   /** The Lloyd-step core over any (vec_id, embedding) frame — see
     * [[q66KmeansStep]] for semantics and scale rationale. */
@@ -1405,22 +1119,13 @@ object Centroids {
     * [[q268SemDedup]] for semantics and scale rationale; `tau` is a
     * parameter so specs can plant near-duplicate clones at a production
     * threshold, `cap` overrides the [[semClusterCap]] default so the
-    * degenerate-mega-cluster spec can force the cap to bind, and
-    * `assignGate` overrides [[HierAssignGate]] so the planted-locality
-    * spec can force the two-level assignment path at fixture size
-    * ([[SemScaleGate]] is the unrelated q272 persist gate), and
-    * `autoProbeGate` overrides [[HierAutoProbeGate]] so the auto-probe
-    * specs can exercise the data-driven path selection
-    * ([[resolveAssignGate]]) at fixture size. */
+    * degenerate-mega-cluster spec can force the cap to bind. */
   private[graft] def semDedup(e: DataFrame,
-      tau: Double = SemDedupTau, cap: Option[Long] = None,
-      assignGate: Long = HierAssignGate,
-      autoProbeGate: Long = HierAutoProbeGate): DataFrame = {
+      tau: Double = SemDedupTau, cap: Option[Long] = None): DataFrame = {
     val n = e.count() // one 1-row action sizes k — the q267 gate pattern
-    val k = math.max(2L, math.ceil(math.sqrt(n.toDouble)).toLong)
+    val k = seedCount(n)
     val capVal = cap.getOrElse(semClusterCap(n))
     val qv = quantized(e)
-    val gate = resolveAssignGate(qv, n, k, None, assignGate, autoProbeGate)
     // persist the shared frames: `members` (the O(n·k) assignment) feeds
     // the pair join twice plus the kept/members aggregates, and `m` is
     // both sides of the self-join — unpersisted, Spark recomputes the
@@ -1431,7 +1136,7 @@ object Centroids {
     // members as the pair join's LEFT side (cluster-sized window
     // partitions — never the banned global-window class). Computed
     // before the persist so both pair sides and the aggregates share it.
-    val members = semAssign(qv, n, k, gate = gate, arrays = Some(e))
+    val members = semAssign(qv, n, k, arrays = Some(e))
       .withColumn("crk", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("cid")).orderBy(col("vec_id"))))
@@ -1586,12 +1291,8 @@ object Centroids {
   def q274SemdedupCapped(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.embeddings(spark, sfDir)
     val n = e.count()
-    val k = math.max(2L, math.ceil(math.sqrt(n.toDouble)).toLong)
-    val qv = quantized(e)
-    // the production default: the data-driven path resolver, same as
-    // semDedup/incrSemDedup (isotropic fixtures keep the flat path)
-    val sizes = semAssign(qv, n, k, gate = resolveAssignGate(qv, n, k,
-        None, HierAssignGate, HierAutoProbeGate), arrays = Some(e))
+    val k = seedCount(n)
+    val sizes = semAssign(quantized(e), n, k, arrays = Some(e))
       .groupBy(col("cid")).agg(count(lit(1)).as("m"))
     clusterPairAccounting(sizes, Seq(Q274ForcedCap, semClusterCap(n)))
   }
@@ -1692,11 +1393,8 @@ object Centroids {
       tau: Double = SemDedupTau,
       caps: Option[Seq[Long]] = None): DataFrame = {
     val n = e.count() // one 1-row action sizes k — the q267 gate pattern
-    val k = math.max(2L, math.ceil(math.sqrt(n.toDouble)).toLong)
-    val qv = quantized(e)
-    // the production default path resolver, same as q268/q272/q274
-    val members = semAssign(qv, n, k, gate = resolveAssignGate(qv, n, k,
-        None, HierAssignGate, HierAutoProbeGate), arrays = Some(e))
+    val k = seedCount(n)
+    val members = semAssign(quantized(e), n, k, arrays = Some(e))
       .withColumn("crk", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("cid")).orderBy(col("vec_id"))))
@@ -1807,9 +1505,10 @@ object Centroids {
        |ORDER BY cap""".stripMargin
 
   /** q271_hier_assign — two-level (coarse → fine) nearest-seed
-    * assignment: the scale path for q268's bottleneck. q268's flat
-    * assignment is O(n·k·d) = O(n^1.5·d) at the k=⌈√n⌉ balance point —
-    * honest but hot at the 100 TB design point. The hierarchical form
+    * assignment, the program's one implementation of the approximate
+    * index (the SemDeDup family assigns exactly — [[semAssign]]). The
+    * flat assignment is O(n·k·d) = O(n^1.5·d) at the k=⌈√n⌉ balance
+    * point; the hierarchical form
     * assigns every vector to one of kc=⌈√k⌉ coarse cells first
     * (O(n·√k·d)), then to the nearest FINE seed within its coarse cell
     * (O(n·(k/kc)·d) = O(n·√k·d) under balanced cells) — O(n^1.25·d)
@@ -1833,7 +1532,9 @@ object Centroids {
     * corpus — AQE sizes them; the r9 de-hint rule); a skewed coarse cell
     * concentrates fine-pass work and shows up directly in n_members —
     * the q263-style balance audit. Exact-BIGINT distances make every
-    * level engine- and partitioning-deterministic.
+    * level engine- and partitioning-deterministic. The n-row result is
+    * cut through [[Checkpoints.cut]], so it honors the session's
+    * checkpoint directory like the iterative operators.
     *
     * Expected agreement depends on the corpus's cluster structure: on
     * the isotropic random fixture it is LOW (~40% — nearest-seed is
@@ -1847,9 +1548,10 @@ object Centroids {
   /** The two-level assignment core over any (vec_id, embedding) frame —
     * see [[q271HierAssign]]. */
   private[graft] def hierAssign(e: DataFrame): DataFrame = {
+    import graft.ops.Checkpoints.CutOps
     val n = e.count() // one 1-row action sizes both levels
-    val k = math.max(2L, math.ceil(math.sqrt(n.toDouble)).toLong)
-    val kc = math.max(2L, math.ceil(math.sqrt(k.toDouble)).toLong)
+    val k = seedCount(n)
+    val kc = seedCount(k)
     // qv deliberately NOT cached: the honest post-fix A/B
     // (SCALE_POINT_r9 §E, re-measured with the leak-free bench) found
     // persisting the quantized corpus a WASH at 10× and a 2× REGRESSION
@@ -1863,8 +1565,7 @@ object Centroids {
     // probe's FILE-SPLIT parallelism — measured sf2 nosort 5.46 → 1.85 s
     // once spread). One p sized for the larger pass; the identical
     // repartition subtree under the coarse pass and the fine join lets
-    // ReuseExchange run the shuffle once — the semAssign hier-path
-    // shape. Gated at one task budget like q262: below it the whole
+    // ReuseExchange run the shuffle once. Gated at one task budget like q262: below it the whole
     // expansion is less than a single task's work and the extra shuffle
     // is pure overhead.
     val expansion = math.max(kc, math.max(1L, k / kc))
@@ -1895,7 +1596,7 @@ object Centroids {
       // the r9 persist A/B rightly rejected — measured a keep at every
       // point (r12 A/B, timed min-of-2: sf0.1 1.55→1.28 s, sf1
       // 3.21→2.52, sf2 2.51→2.17).
-      .localCheckpoint()
+      .cutLineage()
     val sMod = hierSampleMod(n)
     val sampleQv = qv.filter(
       pmod(col("vec_id"), lit(sMod)) === lit(HierSampleRem))
@@ -2011,9 +1712,9 @@ object Centroids {
     *    q268 rule over the standing slice) and then treated as the
     *    stored index — in production this frame IS a stored table, the
     *    same framing as q261's band index; only the batch-sized frames
-    *    are new work per admission round. At scale the assignment pass
-    *    uses q271's two-level path; the flat form keeps this oracle
-    *    replayable.
+    *    are new work per admission round. Both assignment passes are
+    *    exact ([[semAssign]]: flat, or Elkan-pruned at scale), so this
+    *    oracle replays at every size.
     *  - per-batch-vector compares stay inside one cluster — the q268
     *    device that keeps pairwise work off the full corpus — and all
     *    three compare joins (standing pairwise, batch pairwise, batch ×
@@ -2025,16 +1726,9 @@ object Centroids {
 
   /** The admission core over any (vec_id, embedding) frame — see
     * [[q272IncrSemDedup]]. `cap` overrides the [[semClusterCap]]
-    * default so the degenerate-blob spec can force the cap to bind;
-    * `assignGate` overrides [[HierAssignGate]] for the assignment path
-    * only (the planted-locality spec forces the two-level form;
-    * [[SemScaleGate]] is the unrelated persist gate below), and
-    * `autoProbeGate` overrides [[HierAutoProbeGate]] so the auto-probe
-    * spec can exercise [[resolveAssignGate]] at fixture size. */
+    * default so the degenerate-blob spec can force the cap to bind. */
   private[graft] def incrSemDedup(e: DataFrame,
-      cap: Option[Long] = None,
-      assignGate: Long = HierAssignGate,
-      autoProbeGate: Long = HierAutoProbeGate): DataFrame = {
+      cap: Option[Long] = None): DataFrame = {
     val isBatch = pmod(col("vec_id"), lit(IncrSemMod)) === 0L
     val standing = e.filter(!isBatch)
     val nSt = standing.count()
@@ -2055,24 +1749,16 @@ object Centroids {
     // 3.6 s with the assignment materialized)
     val qv = quantized(e)
     val stQv = qv.filter(!isBatch)
-    // the path decision is resolved ONCE, on the standing corpus, and
-    // applied to BOTH assignment passes: corpus and batch must use the
-    // same assignment method or near-identical vectors could land in
-    // different clusters and the admission verdicts would depend on
-    // which side a vector arrived on
-    val gate = resolveAssignGate(stQv, nSt, kcut, None, assignGate,
-      autoProbeGate, frameLabel = "standing")
-    val membersSt = semAssign(stQv, nSt, kcut, gate = gate,
+    val membersSt = semAssign(stQv, nSt, kcut,
       arrays = Some(standing)).persist()
-    // batch sized by the standing corpus — it is a fixed fraction of
-    // it, so the gate/geometry/spread decisions must match the corpus's
+    // batch assigned against the standing corpus's seeds and k
     val membersB = semAssign(qv.filter(isBatch), nSt, kcut,
-      seeds = Some(stQv), gate = gate,
+      seeds = Some(stQv),
       // the batch is 1/10 of the corpus = nSt/9 of the standing slice —
       // an exact arithmetic bound (IncrSemMod geometry), so the batch
-      // pass's spread and audit label follow the frame it scans instead
-      // of the standing corpus's gate-sizing count (ADVICE r11)
-      frameN = nSt / (IncrSemMod - 1L) + 1L, frameLabel = "batch",
+      // pass's spread and pair gate follow the frame it scans instead
+      // of the standing corpus's count (ADVICE r11)
+      frameN = nSt / (IncrSemMod - 1L) + 1L,
       arrays = Some(e.filter(isBatch)), seedArrays = Some(standing))
       .persist()
     val emb = e.select(col("vec_id"), col("embedding"))
@@ -2361,7 +2047,7 @@ object Centroids {
   def q273ClusterPrune(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.embeddings(spark, sfDir)
     val n = e.count()
-    val k = math.max(2L, math.ceil(math.sqrt(n.toDouble)).toLong)
+    val k = seedCount(n)
     // deliberately NOT persisting the quantized components: the O(n·k·d)
     // assignment join runs ~9× slower reading the columnar cache than as
     // one whole-stage-codegen pipeline over the parquet lineage (measured

@@ -167,7 +167,7 @@ private[graft] object PrunedAssign {
       .select(col("vec_id"), col("embedding"))
       .filter(col("vec_id") < k)
       .select(col("vec_id").as("fcid"), col("embedding").as("semb"))
-    val kc = math.max(2L, math.ceil(math.sqrt(k.toDouble)).toLong)
+    val kc = Centroids.seedCount(k)
     val ca = sa.filter(col("fcid") < kc)
       .select(col("fcid").as("ccid"), col("semb").as("cemb"))
     // the kc-way expansions are an explode of a literal id sequence + an

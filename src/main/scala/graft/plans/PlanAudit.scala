@@ -21,9 +21,10 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *    broadcast per-partition offsets).
   *
   * The audits run against `optimizedPlan` (hints are resolved onto Join
-  * nodes there) with construction wrapped in
-  * [[graft.ops.Checkpoints.withNoCut]], so subtrees normally executed
-  * eagerly behind a localCheckpoint stay visible.
+  * nodes there). [[AuditSweep.walk]] builds every query with its cuts
+  * active, so a subtree executed eagerly behind a checkpoint shows only
+  * as a checkpoint scan there; a spec that must see such a subtree
+  * builds its query inside [[graft.ops.Checkpoints.withNoCut]].
   */
 object PlanAudit {
 

@@ -540,154 +540,66 @@ class SimilaritySpec extends AnyFunSuite
     }
   }
 
-  test("semAssign two-level gate: identical assignment to flat on a " +
-    "corpus with real locality, end-to-end through q268/q272") {
-    // The r11 gated seam (HierAssignGate): on a planted-locality corpus
-    // — 9 tight blobs (blob = id % 9), so EVERY blob has a standing
-    // seed among ids 1..9 (a 20-blob layout left blobs 0/10 batch-only:
-    // their nearest standing seed is genuinely arbitrary and the
-    // two-level gate legitimately disagrees with flat — exactly what
-    // the agreement audit exists to surface) — every member's exact
-    // argmin lies inside its own blob and the blob's seeds share a
-    // coarse cell, so the TWO-LEVEL assignment must agree with flat
-    // exactly, and the full SemDeDup and incremental-admission outputs
-    // must be row-identical with the gate forced on. This is the
-    // measured go-condition documented at HierAssignGate: real cluster
-    // structure → 100% agreement → the two-level path is safe to
-    // enable.
-    val rng = new scala.util.Random(11)
-    val centers = Array.fill(9)(Array.fill(64)(rng.nextGaussian() * 10))
-    val vecs = (0 until 500).map { i =>
-      (i.toLong, centers(i % 9).map(c =>
-        (c + 0.01 * rng.nextGaussian()).toFloat))
-    }.toDF("vec_id", "embedding")
-    val flatOut = ops.Centroids.semDedup(vecs, tau = 0.95).collect()
-    spark.catalog.clearCache()
-    val hierOut = ops.Centroids.semDedup(vecs, tau = 0.95, assignGate = 0L)
-      .collect()
-    assert(hierOut.toSeq === flatOut.toSeq,
-      "two-level semDedup must equal flat on a locality corpus")
-    spark.catalog.clearCache()
-    val flatIncr = ops.Centroids.incrSemDedup(vecs).collect()
-    spark.catalog.clearCache()
-    val hierIncr = ops.Centroids.incrSemDedup(vecs, assignGate = 0L)
-      .collect()
-    assert(hierIncr.toSeq === flatIncr.toSeq,
-      "two-level incremental admission must equal flat on a locality " +
-        "corpus")
-  }
-
-  test("auto go-condition (r12): the clusterability probe enables the " +
-    "two-level path on planted locality and keeps flat on isotropic") {
-    // VERDICT r11 #5 — the HierAssignGate flip is data-driven: the
-    // 1-in-37 sampled exact-agreement probe (hierGoProbe) runs before
-    // the full assignment and resolveAssignGate enables the two-level
-    // path only when agreement clears HierAutoAgreeMin. Same fixtures
-    // as the forced-gate equality test above: 9 tight blobs (100%
-    // agreement by construction) vs isotropic random (near-orthogonal
-    // vectors make nearest-seed arbitrary — the r11 rejection).
-    val sp = spark
-    import sp.implicits._
-    val rng = new scala.util.Random(11)
-    val centers = Array.fill(9)(Array.fill(64)(rng.nextGaussian() * 10))
-    val loc = (0 until 500).map { i =>
-      (i.toLong, centers(i % 9).map(c =>
-        (c + 0.01 * rng.nextGaussian()).toFloat))
-    }.toDF("vec_id", "embedding")
-    val iso = (0 until 500).map(i =>
-      (i.toLong, Array.fill(64)(rng.nextGaussian().toFloat)))
-      .toDF("vec_id", "embedding")
-    val k = 23L // = ceil(sqrt(500)), the semDedup sizing at fixture n
-    val locQv = ops.Centroids.quantized(loc)
-    val isoQv = ops.Centroids.quantized(iso)
-    val (la, lt) = ops.Centroids.hierGoProbe(locQv, 500L, k)
-    assert(lt > 0L && la === lt,
-      s"locality probe must agree fully ($la/$lt)")
-    val (ia, it) = ops.Centroids.hierGoProbe(isoQv, 500L, k)
-    assert(it > 0L &&
-      ia.toDouble < ops.Centroids.HierAutoAgreeMin * it,
-      s"isotropic probe must miss the go threshold ($ia/$it)")
-    // the resolver: probe-driven selection, forced-override bypass,
-    // and the no-probe floor
-    assert(ops.Centroids.resolveAssignGate(locQv, 500L, k, None,
-      ops.Centroids.HierAssignGate, 0L) === 0L,
-      "locality corpus must auto-select the two-level path")
-    assert(ops.Centroids.resolveAssignGate(isoQv, 500L, k, None,
-      ops.Centroids.HierAssignGate, 0L) === ops.Centroids.HierAssignGate,
-      "isotropic corpus must auto-select the flat path")
-    assert(ops.Centroids.resolveAssignGate(isoQv, 500L, k, None,
-      0L, 0L) === 0L, "a forced assignGate must bypass the probe")
-    assert(ops.Centroids.resolveAssignGate(locQv, 500L, k, None,
-      ops.Centroids.HierAssignGate, ops.Centroids.HierAutoProbeGate)
-      === ops.Centroids.HierAssignGate,
-      "below the probe floor the flat path runs without probing")
-    // end-to-end through the production entrypoints: the auto-selected
-    // two-level semDedup/incrSemDedup on the locality corpus must be
-    // row-identical to the flat form — the forced-gate equality above,
-    // now reached through the probe instead of a constant
-    val flatOut = ops.Centroids.semDedup(loc, tau = 0.95).collect()
-    spark.catalog.clearCache()
-    val autoOut = ops.Centroids.semDedup(loc, tau = 0.95,
-      autoProbeGate = 0L).collect()
-    assert(autoOut.toSeq === flatOut.toSeq,
-      "auto-selected two-level semDedup must equal flat on locality")
-    spark.catalog.clearCache()
-    val flatIncr = ops.Centroids.incrSemDedup(loc).collect()
-    spark.catalog.clearCache()
-    val autoIncr = ops.Centroids.incrSemDedup(loc, autoProbeGate = 0L)
-      .collect()
-    assert(autoIncr.toSeq === flatIncr.toSeq,
-      "auto-selected two-level admission must equal flat on locality")
-  }
-
-  test("probeConclusive and gateGo: the exact-integer 2-SE test matches " +
-    "IEEE") {
+  test("twoSeConclusive: the exact-integer 2-SE test matches IEEE") {
     // (10a - 9t)^2 * t > 400 * a * (t - a)  <=>  |a/t - 0.9| > 2*SE
     def ieee(a: Long, t: Long): Boolean = {
       val p = a.toDouble / t
       math.abs(p - 0.9) > 2.0 * math.sqrt(p * (1 - p) / t)
     }
+    val sp = spark
+    import sp.implicits._
     // exhaustive cross-check at small tot (every boundary case the
-    // squaring could distort lives here) ...
-    for (t <- 1L to 60L; a <- 0L to t)
-      assert(ops.Centroids.probeConclusive(a, t) === ieee(a, t),
+    // squaring could distort lives here), spot values at the sample cap
+    // scale, and the named cases below — one frame, one evaluation of
+    // the helper and of q278's go rule (threshold AND conclusive)
+    val exhaustive = for (t <- 1L to 60L; a <- 0L to t) yield (a, t)
+    val spots = Seq((151L, 541L), (232L, 1000L), (900L, 1000L),
+      (905L, 1000L), (950L, 1000L), (1000L, 1000L), (0L, 0L), (9L, 10L),
+      (500L, 500L), (18L, 20L), (19L, 20L), (20L, 20L))
+    val a = col("a")
+    val t = col("t")
+    val rows = (exhaustive ++ spots).toDF("a", "t")
+      .select(a, t, ops.Centroids.twoSeConclusive(a, t).as("c"),
+        (a * 10L >= t * 9L && ops.Centroids.twoSeConclusive(a, t))
+          .as("go"))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> (r.getBoolean(2),
+        r.getBoolean(3)))
+      .toMap
+    def conclusive(a: Long, t: Long): Boolean = rows((a, t))._1
+    def go(a: Long, t: Long): Boolean = rows((a, t))._2
+    exhaustive.foreach { case (a, t) =>
+      assert(conclusive(a, t) === ieee(a, t),
         s"a=$a t=$t: integer form must match the IEEE definition")
-    // ...and spot values at the sample cap scale
+    }
     Seq((151L, 541L), (232L, 1000L), (900L, 1000L), (905L, 1000L),
       (950L, 1000L), (1000L, 1000L)).foreach { case (a, t) =>
-      assert(ops.Centroids.probeConclusive(a, t) === ieee(a, t),
-        s"a=$a t=$t")
+      assert(conclusive(a, t) === ieee(a, t), s"a=$a t=$t")
     }
-    assert(!ops.Centroids.probeConclusive(0L, 0L),
-      "an empty sample is never conclusive")
-    // a corpus sitting exactly ON the gate is inconclusive at any tot
-    assert(!ops.Centroids.probeConclusive(9L, 10L) &&
-      !ops.Centroids.probeConclusive(900L, 1000L),
+    assert(!conclusive(0L, 0L), "an empty sample is never conclusive")
+    // a corpus sitting exactly ON the threshold is inconclusive at any tot
+    assert(!conclusive(9L, 10L) && !conclusive(900L, 1000L),
       "p-hat = 0.90 exactly must read inconclusive")
     // both measured regimes sit far outside 2 SEs: the r11/r12/r13
     // committed readings (isotropic 151/541, blob-mixed 232/1000) and
     // planted locality (tot/tot)
-    assert(ops.Centroids.probeConclusive(151L, 541L) &&
-      ops.Centroids.probeConclusive(232L, 1000L) &&
-      ops.Centroids.probeConclusive(500L, 500L),
+    assert(conclusive(151L, 541L) && conclusive(232L, 1000L) &&
+      conclusive(500L, 500L),
       "the committed regimes must read conclusive")
-    // the FULL resolver rule (gateGo = threshold AND conclusive): a
-    // corpus within 2 SEs of the gate never commits to the approximate
-    // index, even when its point estimate clears 9/10
-    assert(!ops.Centroids.gateGo(18L, 20L),
+    // q278's go (threshold AND conclusive): a sample within 2 SEs of
+    // the threshold reads no-go even when its point estimate clears 9/10
+    assert(!go(18L, 20L),
       "18/20 = 0.90 exactly clears the threshold but is inconclusive " +
-        "at tot=20 — the conservative flat path must win")
-    assert(!ops.Centroids.gateGo(19L, 20L),
-      "19/20 = 0.95 sits inside 2 SEs (0.0975) of the gate at tot=20")
-    assert(ops.Centroids.gateGo(20L, 20L),
-      "a unanimous sample has zero SE and goes")
-    assert(ops.Centroids.gateGo(950L, 1000L),
-      "0.95 at the production cap is 5+ SEs above the gate and goes")
-    assert(!ops.Centroids.gateGo(905L, 1000L),
-      "0.905 at the cap is inside the ~(0.881, 0.919) band and stays flat")
-    assert(!ops.Centroids.gateGo(151L, 541L) &&
-      !ops.Centroids.gateGo(0L, 0L),
-      "below-threshold and empty samples stay flat")
+        "at tot=20")
+    assert(!go(19L, 20L),
+      "19/20 = 0.95 sits inside 2 SEs (0.0975) of the threshold at tot=20")
+    assert(go(20L, 20L), "a unanimous sample has zero SE and goes")
+    assert(go(950L, 1000L),
+      "0.95 at the production cap is 5+ SEs above the threshold and goes")
+    assert(!go(905L, 1000L),
+      "0.905 at the cap is inside the ~(0.881, 0.919) band")
+    assert(!go(151L, 541L) && !go(0L, 0L),
+      "below-threshold and empty samples read no-go")
   }
 
   test("gate memos: one probe per corpus snapshot; an in-place rewrite " +
@@ -703,12 +615,8 @@ class SimilaritySpec extends AnyFunSuite
     Files.copy(src, path)
     def corpus() = spark.read.parquet(path.toString)
       .select(col("vec_id"), col("embedding"))
-    def resolveBoth(): (Long, Long) = {
-      val e = corpus()
-      (ops.Centroids.resolveAssignGate(ops.Centroids.quantized(e), 500L,
-        23L, None, ops.Centroids.HierAssignGate, 0L),
-        ops.Similarity.resolveNprobe(e, 500L, autoProbeGate = 0L))
-    }
+    def resolve(): Long =
+      ops.Similarity.resolveNprobe(corpus(), 500L, autoProbeGate = 0L)
     val inv = Tables.fileInventory(corpus())
     assert(inv.contains("embeddings.parquet:"),
       s"a file-backed frame carries its inventory (got $inv)")
@@ -717,13 +625,11 @@ class SimilaritySpec extends AnyFunSuite
     assert(Tables.fileInventory(
       Seq((1L, Array(0.1f))).toDF("vec_id", "embedding")) === "",
       "an in-memory frame has no file inventory")
-    ops.Centroids.clearGateMemoForTest()
-    val hier0 = ops.Centroids.hierProbeRuns.get()
+    ops.Similarity.clearGateMemoForTest()
     val np0 = ops.Similarity.nprobeRuns.get()
-    val first = resolveBoth()
-    assert(resolveBoth() === first, "a memo hit returns the same decision")
-    assert(ops.Centroids.hierProbeRuns.get() === hier0 + 1 &&
-      ops.Similarity.nprobeRuns.get() === np0 + 1,
+    val first = resolve()
+    assert(resolve() === first, "a memo hit returns the same decision")
+    assert(ops.Similarity.nprobeRuns.get() === np0 + 1,
       "two resolves of one snapshot must probe once")
     // same bytes, new mtime; the sleep sits above the 1 s mtime
     // granularity of coarse filesystems (ADVICE r13)
@@ -731,10 +637,9 @@ class SimilaritySpec extends AnyFunSuite
     Files.copy(src, path, StandardCopyOption.REPLACE_EXISTING)
     assert(Tables.fileInventory(corpus()) !== inv,
       "an in-place rewrite must change the inventory via its mtime")
-    assert(resolveBoth() === first,
+    assert(resolve() === first,
       "identical bytes re-probe to the same decision")
-    assert(ops.Centroids.hierProbeRuns.get() === hier0 + 2 &&
-      ops.Similarity.nprobeRuns.get() === np0 + 2,
+    assert(ops.Similarity.nprobeRuns.get() === np0 + 2,
       "a rewritten snapshot must be re-probed, not replayed stale")
   }
 
@@ -743,10 +648,10 @@ class SimilaritySpec extends AnyFunSuite
     // to one memo key, or every session runs the full dial twice
     val probes = new java.util.concurrent.atomic.AtomicInteger
     def dial(e: org.apache.spark.sql.DataFrame): Int =
-      ops.Centroids.gateDecision("nprobe", Seq(e), 500L, 23L) {
+      ops.Similarity.gateDecision(e, 500L, 23L) {
         probes.incrementAndGet()
       }._1
-    ops.Centroids.clearGateMemoForTest()
+    ops.Similarity.clearGateMemoForTest()
     val q281 = dial(Similarity.ivfCorpus(spark, SparkSuite.sf))
     val q282 = dial(Similarity.ivfCorpus(spark, SparkSuite.sf))
     assert(q281 === q282 && probes.get() === 1,
@@ -755,7 +660,7 @@ class SimilaritySpec extends AnyFunSuite
     // is another plan and probes again
     dial(Tables.embeddings(spark, SparkSuite.sf))
     assert(probes.get() === 2)
-    ops.Centroids.clearGateMemoForTest()
+    ops.Similarity.clearGateMemoForTest()
   }
 
   test("capped probe sample (r13): the modulus adapts so the audit/probe " +
@@ -783,10 +688,10 @@ class SimilaritySpec extends AnyFunSuite
       assert(m >= 37L,
         s"n=$n: modulus must stay >= 37 so the residue class 3 exists")
     }
-    // threading: hierGoProbe's sample follows hierSampleMod(n) — drive
+    // threading: probePicks' sample follows hierSampleMod(n) — drive
     // the 500-row locality corpus with a synthetic n large enough to
     // bind (m = ceil(100000/cap) = 100 -> ids 3,103,203,303,403), and
-    // the regime decision survives the coarser sample
+    // the agreement survives the coarser sample
     val sp = spark
     import sp.implicits._
     val rng = new scala.util.Random(11)
@@ -796,7 +701,11 @@ class SimilaritySpec extends AnyFunSuite
         (c + 0.01 * rng.nextGaussian()).toFloat))
     }.toDF("vec_id", "embedding")
     val locQv = ops.Centroids.quantized(loc)
-    val (la, lt) = ops.Centroids.hierGoProbe(locQv, 100000L, 23L)
+    val picks = ops.Centroids.probePicks(locQv, 100000L, 23L)
+      .filter(col("erk") === 1)
+      .select(col("vec_id"), col("hrk")).collect()
+    val lt = picks.length.toLong
+    val la = picks.count(_.getInt(1) == 1).toLong
     assert(lt === 5L, // ids 3,103,203,303,403 under mod 100
       s"probe sample must shrink under the synthetic-n modulus (got $lt)")
     assert(la === lt, "locality still agrees fully on the capped sample")
@@ -822,7 +731,7 @@ class SimilaritySpec extends AnyFunSuite
         (c + 0.01 * rng.nextGaussian()).toFloat))
     }.toDF("vec_id", "embedding")
     val runs0 = ops.Similarity.nprobeRuns.get()
-    ops.Centroids.clearGateMemoForTest()
+    ops.Similarity.clearGateMemoForTest()
     assert(ops.Similarity.resolveNprobe(loc, 400L, 0L) === 1L,
       "planted locality must pick the cheapest dial point")
     assert(ops.Similarity.nprobeRuns.get() === runs0 + 1)
@@ -869,7 +778,7 @@ class SimilaritySpec extends AnyFunSuite
     }
     val expected = rows.find(_.getLong(3) === 1L).map(_.getLong(0))
       .getOrElse(8L)
-    ops.Centroids.clearGateMemoForTest()
+    ops.Similarity.clearGateMemoForTest()
     val pick = ops.Similarity.resolveNprobe(e, e.count(),
       autoProbeGate = 0L)
     assert(pick === expected,
@@ -885,7 +794,7 @@ class SimilaritySpec extends AnyFunSuite
     val e = (0 until 60).map(i =>
       (1000L + i, Array.fill(64)(rng.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding")
-    ops.Centroids.clearGateMemoForTest()
+    ops.Similarity.clearGateMemoForTest()
     assert(ops.Similarity.resolveNprobe(e, 60L, autoProbeGate = 0L) === 8L,
       "an empty dial must fall back to the conservative endpoint")
   }

@@ -15,6 +15,11 @@ the parent's quartiles and IQR, the change's win count over the pairs,
 and whether the change's median is worse than the parent's by more than
 the parent's IQR.
 
+A run that fails (sbt exits non-zero or leaves no detail file) is
+recorded with every query at -1 and its log path, and counts in the
+summary's failed_pairs; the remaining pairs still run. The report is
+rewritten after every pair, so an interrupted A/B keeps what it measured.
+
 Usage:
   python3 tools/ab.py --parent DIR --change DIR [--pairs 5] [--cpus N]
       [--sf SF_DIR] [--work DIR] --out FILE.json QUERY...
@@ -33,14 +38,23 @@ import sys
 
 def run_bench(checkout, queries, env, detail, log):
     env = dict(env, SPARK_GRAFT_DETAIL_OUT=detail)
+    if os.path.exists(detail):
+        os.remove(detail)
     with open(log, "w") as lf:
-        subprocess.run(["sbt", "--batch",
-                        "runMain graft.Bench " + " ".join(queries)],
-                       cwd=checkout, env=env, stdout=lf,
-                       stderr=subprocess.STDOUT, check=True)
-    with open(detail) as f:
-        got = json.load(f)
-    return {"sorted": got["detail_queries"], "nosort": got["detail_nosort"]}
+        rc = subprocess.run(["sbt", "--batch",
+                             "runMain graft.Bench " + " ".join(queries)],
+                            cwd=checkout, env=env, stdout=lf,
+                            stderr=subprocess.STDOUT).returncode
+    if rc == 0:
+        try:
+            with open(detail) as f:
+                got = json.load(f)
+            return {"sorted": got["detail_queries"],
+                    "nosort": got["detail_nosort"]}
+        except (OSError, ValueError, KeyError):
+            pass
+    failed = {q: -1.0 for q in queries}
+    return {"sorted": failed, "nosort": dict(failed), "failed_log": log}
 
 
 def quartiles(vals):
@@ -75,6 +89,27 @@ def summarize(runs, queries, pass_name):
     return out
 
 
+def write_report(a, runs, orders):
+    report = {
+        "protocol": {
+            "order": "sides alternate, the first side alternating by "
+                     "pair (parent first in even pairs); one fresh JVM "
+                     "per run",
+            "pair_orders": orders,
+            "pairs": len(orders), "cpus": a.cpus,
+            "sf": os.path.basename(os.path.normpath(a.sf or "default")),
+            "timing": "graft.Bench min-of-2 per query, sorted and nosort",
+        },
+        "queries": a.queries,
+        "runs": runs,
+        "summary": {p: summarize(runs, a.queries, p)
+                    for p in ("sorted", "nosort")},
+    }
+    with open(a.out, "w") as f:
+        json.dump(report, f, indent=1, sort_keys=True)
+    return report
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--parent", required=True)
@@ -107,23 +142,8 @@ def main():
             runs[side].append(run_bench(sides[side], a.queries, env,
                                         stem + ".json", stem + ".log"))
             print(f"[ab] pair {i} {side} done", file=sys.stderr, flush=True)
-    report = {
-        "protocol": {
-            "order": "sides alternate, the first side alternating by "
-                     "pair (parent first in even pairs); one fresh JVM "
-                     "per run",
-            "pair_orders": orders,
-            "pairs": a.pairs, "cpus": a.cpus,
-            "sf": os.path.basename(os.path.normpath(a.sf or "default")),
-            "timing": "graft.Bench min-of-2 per query, sorted and nosort",
-        },
-        "queries": a.queries,
-        "runs": runs,
-        "summary": {p: summarize(runs, a.queries, p)
-                    for p in ("sorted", "nosort")},
-    }
-    with open(a.out, "w") as f:
-        json.dump(report, f, indent=1, sort_keys=True)
+        write_report(a, runs, orders)
+    report = write_report(a, runs, orders)
     for p in ("sorted", "nosort"):
         for q, s in report["summary"][p].items():
             if s["pairs"]:
