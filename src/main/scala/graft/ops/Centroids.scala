@@ -307,13 +307,12 @@ object Centroids {
     * pruned exact form took over its regime (r14). It stays registered
     * as q271's [[hierAssign]], an audited index, not a production path.
     *
-    * `seeds` overrides where seed vectors come from (q272's batch
-    * assigns against the STANDING corpus's seeds); `frameN` is the
-    * assigned frame's own row count when it differs from `n`. Returns
-    * (vec_id, cid). */
+    * `n` is the assigned frame's row count (it sizes the pair gate and
+    * the probe spread only); `seeds` overrides where seed vectors come
+    * from (q272's batch assigns against the STANDING corpus's seeds).
+    * Returns (vec_id, cid). */
   private[graft] def semAssign(qv: DataFrame, n: Long, k: Long,
       seeds: Option[DataFrame] = None,
-      frameN: Long = -1L,
       arrays: Option[DataFrame] = None,
       seedArrays: Option[DataFrame] = None,
       prunedPairGate: Long = PrunedAssignPairGate): DataFrame = {
@@ -328,13 +327,7 @@ object Centroids {
       "semAssign: seeds and seedArrays must be passed together when " +
         "arrays is set (the pruned branch reads seedArrays, the flat " +
         "branch reads seeds — an asymmetric pair silently diverges)")
-    // nf = the ASSIGNED frame's own row count. `n` stays the caller's
-    // sizing count — incrSemDedup assigns a BATCH against the standing
-    // corpus's k, but the pair gate and the probe spread must follow the
-    // frame actually scanned (frameN; an arithmetic bound is fine — it
-    // sizes tasks, not semantics).
-    val nf = if (frameN >= 0L) frameN else n
-    if (nf * k > prunedPairGate && arrays.isDefined) {
+    if (n * k > prunedPairGate && arrays.isDefined) {
       // the Elkan-pruned exact form of the flat path (VERDICT r13 #1):
       // bit-identical assignments (PrunedAssignSpec pins both regimes),
       // proven-safe candidate skips, and the per-pair array-fold kernel
@@ -345,7 +338,7 @@ object Centroids {
       // frame pass it; callers that only have components keep the
       // exploded form below.
       assignMembersPruned(arrays.get, k, seedsEa = seedArrays,
-        probeParallelism = Some(prunedParallelism(spark, nf, k)))
+        probeParallelism = Some(prunedParallelism(spark, n, k)))
         .select(col("vec_id"), col("cid"))
     } else {
       // The flat path keeps the spread UNCONDITIONAL — the one-task-
@@ -361,7 +354,7 @@ object Centroids {
       // grinding ~6M component rows serially, and the 32-way spread's
       // shuffle of n·d probe rows is cheaper than that serialization.
       assignMembers(qv, k, hintCentroids = false, seeds = seeds,
-        probeParallelism = Some(assignParallelism(spark, nf, k)))
+        probeParallelism = Some(assignParallelism(spark, n, k)))
         .select(col("vec_id"), col("cid"))
     }
   }
@@ -1565,9 +1558,9 @@ object Centroids {
     // probe's FILE-SPLIT parallelism — measured sf2 nosort 5.46 → 1.85 s
     // once spread). One p sized for the larger pass; the identical
     // repartition subtree under the coarse pass and the fine join lets
-    // ReuseExchange run the shuffle once. Gated at one task budget like q262: below it the whole
-    // expansion is less than a single task's work and the extra shuffle
-    // is pure overhead.
+    // ReuseExchange run the shuffle once. Gated at one task budget like
+    // q262: below it the whole expansion is less than a single task's
+    // work and the extra shuffle is pure overhead.
     val expansion = math.max(kc, math.max(1L, k / kc))
     val p = if (n * expansion >= AssignGroupsPerTask)
       Some(assignParallelism(e.sparkSession, n, expansion)) else None
@@ -1752,13 +1745,11 @@ object Centroids {
     val membersSt = semAssign(stQv, nSt, kcut,
       arrays = Some(standing)).persist()
     // batch assigned against the standing corpus's seeds and k
-    val membersB = semAssign(qv.filter(isBatch), nSt, kcut,
-      seeds = Some(stQv),
-      // the batch is 1/10 of the corpus = nSt/9 of the standing slice —
-      // an exact arithmetic bound (IncrSemMod geometry), so the batch
-      // pass's spread and pair gate follow the frame it scans instead
-      // of the standing corpus's count (ADVICE r11)
-      frameN = nSt / (IncrSemMod - 1L) + 1L,
+    // the batch is 1/10 of the corpus = nSt/9 of the standing slice: an
+    // arithmetic bound (IncrSemMod geometry) is enough, since the count
+    // sizes tasks, not semantics, and it costs no count job
+    val membersB = semAssign(qv.filter(isBatch),
+      nSt / (IncrSemMod - 1L) + 1L, kcut, seeds = Some(stQv),
       arrays = Some(e.filter(isBatch)), seedArrays = Some(standing))
       .persist()
     val emb = e.select(col("vec_id"), col("embedding"))

@@ -121,6 +121,8 @@ def main():
     ap.add_argument("--out", required=True)
     ap.add_argument("queries", nargs="+")
     a = ap.parse_args()
+    if a.pairs < 1:
+        ap.error("--pairs must be at least 1")
     os.makedirs(a.work, exist_ok=True)
     env = dict(os.environ, SPARK_GRAFT_CPUS=a.cpus)
     if a.sf:
@@ -142,8 +144,7 @@ def main():
             runs[side].append(run_bench(sides[side], a.queries, env,
                                         stem + ".json", stem + ".log"))
             print(f"[ab] pair {i} {side} done", file=sys.stderr, flush=True)
-        write_report(a, runs, orders)
-    report = write_report(a, runs, orders)
+        report = write_report(a, runs, orders)
     for p in ("sorted", "nosort"):
         for q, s in report["summary"][p].items():
             if s["pairs"]:
